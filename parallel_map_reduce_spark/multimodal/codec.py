@@ -44,16 +44,6 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def decode_image(data: bytes):
-    """Header-level image decode — REAL, stdlib-only: (fmt, width,
-    height, channels) parsed from PNG/GIF/BMP/JPEG magic bytes
-    (imagehdr.py). Raises ValueError for unrecognized payloads."""
-    hdr = parse_image_header(data)
-    if hdr is None:
-        raise ValueError("unrecognized image payload (not PNG/GIF/BMP/JPEG)")
-    return hdr
-
-
 def decode_image_pixels(data: bytes):
     """Full pixel decode — REAL for PNG/GIF/BMP/baseline-JPEG
     (pixeldec.py + jpegdec.py, stdlib zlib/struct + numpy):
@@ -71,17 +61,6 @@ def _parse_audio_header(data: bytes):
     hdr = parse_wav_header(data)
     if hdr is None and bytes(data[:4]) == FLAC_MAGIC:
         hdr = parse_flac_streaminfo(data)
-    return hdr
-
-
-def decode_audio_header(data: bytes):
-    """Header-level audio decode — REAL, stdlib-only: (sample_rate,
-    channels, bits, n_frames) parsed from the RIFF/WAVE container
-    (audiohdr.py) or the FLAC STREAMINFO block (flacdec.py). Raises
-    ValueError for anything else."""
-    hdr = _parse_audio_header(data)
-    if hdr is None:
-        raise ValueError("unrecognized audio payload (not PCM WAV or FLAC)")
     return hdr
 
 

@@ -1,3 +1,11 @@
+from pyspark import cloudpickle
+
+from .. import kernels
+
+# Ship kernels.py inside each Arrow kernel closure that calls it, so a
+# Python worker needs no import path to this package.
+cloudpickle.register_pickle_by_value(kernels)
+
 from .tokenize import (
     tokenize,
     normalize_tokens,

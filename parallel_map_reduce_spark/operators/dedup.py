@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
+from ..kernels import ascii_words, distinct_shingles, md5_memo
 from ..registry import pin
 from .tokenize import clean_word_col, TOKEN_SPLIT_REGEX
 
@@ -144,20 +145,15 @@ def _sized_shingle_rows_fn(k: int):
     the document's DISTINCT-shingle count — in one Python hop
     (r18 opt, guide §4.2): the JVM form paid an interpreted O(k)
     slice + array_join per position plus array_distinct per document
-    (CodegenFallback HOFs). Tokenization is the exact strip-then-lower
-    replica ``_minhash_rows_fn`` documents; shingle strings are
-    byte-identical (' '-joined cleaned tokens), and row ORDER is
-    irrelevant downstream (posting lists sort, aggregates are
+    (CodegenFallback HOFs). Tokens come from ``ascii_words``; shingle
+    strings are byte-identical (' '-joined cleaned tokens), and row
+    ORDER is irrelevant downstream (posting lists sort, aggregates are
     order-free). Docs with < k tokens emit nothing, matching the
     empty-array explode."""
 
     def rows_fn(it):
-        import re
-
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -167,24 +163,10 @@ def _sized_shingle_rows_fn(k: int):
             out_s: list[str] = []
             out_n: list[int] = []
             for doc_id, text in zip(ids, texts):
-                if not text:
-                    continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                n_sh = len(words) - k + 1
-                if n_sh < 1:
-                    continue
-                distinct = set(
-                    " ".join(words[i : i + k]) for i in range(n_sh)
-                )
-                n = len(distinct)
-                for s in distinct:
-                    out_d.append(doc_id)
-                    out_s.append(s)
-                    out_n.append(n)
+                distinct = distinct_shingles(ascii_words(text), k)
+                out_d.extend([doc_id] * len(distinct))
+                out_s.extend(distinct)
+                out_n.extend([len(distinct)] * len(distinct))
             if not out_d:
                 continue
             yield pa.record_batch(
@@ -262,15 +244,8 @@ def _minhash_rows_fn():
     hand whole batches to native code instead of five JVM stages and a
     doc_id exchange). Exactness, piece by piece:
 
-    - tokenize: Spark splits on ``[ \\t\\n]+`` THEN strips
-      ``[^A-Za-z]`` per token and lowercases. Stripping
-      ``[^A-Za-z \\t\\n]`` from the whole text first is equivalent
-      (removal never touches a separator, so token boundaries are
-      unchanged), and lowercasing AFTER the strip only ever sees ASCII
-      — replicating Spark's strip-then-lower order exactly (lowering
-      first would let Unicode case-folding mint ASCII letters, e.g.
-      İ → i̇, that the engine's order deletes).
-    - shingle hash: ``int(md5(utf8)[:8], 16)`` == conv(substring(
+    - tokenize: ``ascii_words``, the engine's strip-then-lower order.
+    - shingle hash: ``md5_memo``'s 32-bit prefix == conv(substring(
       md5, 1, 8), 16, 10) — integer-exact; memoized per task (shingles
       repeat across documents; the JVM expression re-hashes every row).
     - mins: seeds < 10^6 and hv < 2^32, so a*hv+b < 2^52 — exact in
@@ -280,25 +255,19 @@ def _minhash_rows_fn():
       produce NO output row, matching the groupBy-over-zero-rows
       absence of the aggregate form.
 
-    numpy/pyarrow/re imports live in the closure so executors resolve
-    them at first call; the md5 memo is per task (guide §4.5)."""
+    numpy/pyarrow imports live in the closure (guide §4.5)."""
     k = SHINGLE_K
     seeds_a = [a for a, _ in MINHASH_SEEDS]
     seeds_b = [b for _, b in MINHASH_SEEDS]
     prime = MINHASH_PRIME
 
     def rows_fn(it):
-        import hashlib
-        import re
-
         import numpy as np
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
         a_col = np.array(seeds_a, dtype=np.int64)[:, None]
         b_col = np.array(seeds_b, dtype=np.int64)[:, None]
-        memo: dict[str, int] = {}
+        hashes = md5_memo()
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -307,28 +276,10 @@ def _minhash_rows_fn():
             out_ids: list[int] = []
             out_mins: list[np.ndarray] = []
             for doc_id, text in zip(doc_ids, texts):
-                if not text:
+                shingles = distinct_shingles(ascii_words(text), k)
+                if not shingles:
                     continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                if len(words) < k:
-                    continue
-                shingles = {
-                    " ".join(words[i : i + k])
-                    for i in range(len(words) - k + 1)
-                }
-                hv = np.empty(len(shingles), dtype=np.int64)
-                for i, s in enumerate(shingles):
-                    h = memo.get(s)
-                    if h is None:
-                        h = int(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16
-                        )
-                        memo[s] = h
-                    hv[i] = h
+                hv = np.array(hashes(shingles), dtype=np.int64)
                 out_ids.append(doc_id)
                 out_mins.append(((a_col * hv[None, :] + b_col) % prime).min(axis=1))
             if not out_ids:
@@ -1362,34 +1313,19 @@ SUBSTR_MIN_OCC = 2  # a window is "repeated" if it occurs >= this many
 
 def _gram_rows_fn(L: int):
     """Arrow-batch kernel factory for ``repeated_substring_spans``'s
-    positional L-token gram hashes: per document, tokenize (the exact
-    strip-then-lower replica ``_minhash_rows_fn`` documents) and emit
-    one (doc_id, pos, md5-hex) row per window start. Each DISTINCT
-    gram string is hashed once per task (boilerplate grams repeat
-    across documents — the JVM expression re-hashed every position);
+    positional L-token gram hashes: per document, tokenize
+    (``ascii_words``) and emit one (doc_id, pos, md5-hex) row per
+    window start. Each DISTINCT gram string is hashed once per task, up
+    to ``md5_memo``'s cap (boilerplate grams repeat across documents —
+    the JVM expression re-hashed every position);
     hv is the same full md5 hex the DuckDB oracle computes, so
     collision behavior is engine-identical. Rows with fewer than L
     tokens emit nothing, matching the n_gram >= 1 filter."""
 
     def rows_fn(it):
-        import hashlib
-        import re
-
         import pyarrow as pa
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
-        memo: dict[str, str] = {}
-        memo_cap = 4_000_000
-
-        def gram_hash(g: str) -> str:
-            h = memo.get(g)
-            if h is None:
-                h = hashlib.md5(g.encode("utf-8")).hexdigest()
-                if len(memo) < memo_cap:
-                    memo[g] = h
-            return h
-
+        hashes = md5_memo(full_hex=True)
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -1399,20 +1335,13 @@ def _gram_rows_fn(L: int):
             out_p: list[int] = []
             out_h: list[str] = []
             for doc_id, text in zip(ids, texts):
-                if not text:
-                    continue
-                words = [
-                    w
-                    for w in split_re.split(strip_re.sub("", text).lower())
-                    if w
-                ]
-                n_gram = len(words) - L + 1
-                if n_gram < 1:
-                    continue
-                for i in range(n_gram):
-                    out_d.append(doc_id)
-                    out_p.append(i + 1)
-                    out_h.append(gram_hash(" ".join(words[i : i + L])))
+                words = ascii_words(text)
+                n_gram = max(len(words) - L + 1, 0)
+                out_d.extend([doc_id] * n_gram)
+                out_p.extend(range(1, n_gram + 1))
+                out_h.extend(
+                    hashes(" ".join(words[i : i + L]) for i in range(n_gram))
+                )
             if not out_d:
                 continue
             yield pa.record_batch(
@@ -1468,10 +1397,9 @@ def repeated_substring_spans(
     # the winnowing-kernel pattern): the JVM transform paid an
     # interpreted O(L) slice + array_join + md5 per position
     # (CodegenFallback), re-hashing repeated boilerplate grams at
-    # every occurrence; the kernel tokenizes with two C-regex passes
-    # (the exact strip-then-lower replica) and hashes each DISTINCT
-    # gram once per task. Only (doc_id, text) crosses the boundary,
-    # and the exploded rows still carry only (pos, hash).
+    # every occurrence; the kernel tokenizes with ``ascii_words`` and
+    # hashes each DISTINCT gram once per task. Only (doc_id, text)
+    # crosses the boundary, and the exploded rows carry only (pos, hash).
     grams = docs.select("doc_id", "text").mapInArrow(
         _gram_rows_fn(L), "doc_id bigint, pos int, hv string"
     )

@@ -26,8 +26,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
-from ..sources.catalog import read_parquet
 from ..functions.vector import cosine_similarity, dot, l2_norm
+from ..kernels import centroid_scorer, embedding_matrix, fold_dot
+from ..sources.catalog import read_parquet
 
 N_PLANES = 12
 ANN_BANDS = 3
@@ -303,34 +304,21 @@ def _centroid_df(spark, cents: dict[int, list[float]]) -> DataFrame:
 
 def _assign_fn(cent_rows):
     """Arrow-batch kernel factory for ``_assign_to_centroids``: nearest
-    centroid by cosine, numpy accumulation one dimension at a time (the
-    ``dot`` fold's left-to-right order — bit-identical doubles), argmax
-    over cid-ascending columns (np.argmax takes the FIRST max, which is
-    exactly max_by's (c_cos, -centroid_id) tie-break; a NaN column from
-    a zero-norm row/centroid is 'greatest' under both orders and both
-    resolve to the lowest such cid). Embedding/nrm columns pass through
+    centroid by cosine (``kernels.centroid_scorer`` — bit-identical
+    doubles, max_by's tie-break). Embedding/nrm columns pass through
     the batch untouched."""
 
     def assign(it):
-        import numpy as np
         import pyarrow as pa
 
-        cids = np.array([c[0] for c in cent_rows], dtype=np.int32)
-        cmat = np.array([c[1] for c in cent_rows], dtype=np.float64)
-        cnrm = np.array([c[2] for c in cent_rows], dtype=np.float64)
+        cids, nearest = centroid_scorer(cent_rows)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            nrm = batch.column("nrm").to_numpy()
-            n, dim = embs.shape
-            acc = np.zeros((n, len(cids)))
-            for i in range(dim):  # sequential: matches the fold
-                acc = acc + embs[:, i : i + 1] * cmat[:, i]
-            cos = acc / (nrm[:, None] * cnrm[None, :])
-            best = np.argmax(cos, axis=1)
+            best = nearest(
+                embedding_matrix(batch.column("embedding")),
+                batch.column("nrm").to_numpy(),
+            )
             yield pa.record_batch(
                 [
                     batch.column("vec_id"),
@@ -345,10 +333,9 @@ def _assign_fn(cent_rows):
 
 
 def _train_partials_fn(cent_rows):
-    """Arrow-batch kernel factory for the Lloyd update: nearest-centroid
-    scoring identical to ``_assign_fn`` (same per-dimension sequential
-    accumulation, same first-max argmax/NaN tie behavior), then
-    per-cluster partial sums and counts accumulated with ``np.add.at``
+    """Arrow-batch kernel factory for the Lloyd update: the same
+    nearest-centroid scorer as ``_assign_fn``, then per-cluster
+    partial sums and counts accumulated with ``np.add.at``
     (unbuffered: applies additions sequentially in row order — the
     order an avg partial sum visits the partition). Emits one
     (centroid_id, pos, s, c) row per non-empty cluster x dimension per
@@ -358,25 +345,15 @@ def _train_partials_fn(cent_rows):
         import numpy as np
         import pyarrow as pa
 
-        cids = np.array([c[0] for c in cent_rows], dtype=np.int32)
-        cmat = np.array([c[1] for c in cent_rows], dtype=np.float64)
-        cnrm = np.array([c[2] for c in cent_rows], dtype=np.float64)
-        k, dim = cmat.shape
+        cids, nearest = centroid_scorer(cent_rows)
+        k, dim = len(cids), len(cent_rows[0][1])
         sums = np.zeros((k, dim))
         cnts = np.zeros(k, dtype=np.int64)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            nrm = batch.column("nrm").to_numpy()
-            n, _ = embs.shape
-            acc = np.zeros((n, k))
-            for i in range(dim):  # sequential: matches the fold
-                acc = acc + embs[:, i : i + 1] * cmat[:, i]
-            cos = acc / (nrm[:, None] * cnrm[None, :])
-            best = np.argmax(cos, axis=1)
+            embs = embedding_matrix(batch.column("embedding"))
+            best = nearest(embs, batch.column("nrm").to_numpy())
             np.add.at(sums, best, embs)
             np.add.at(cnts, best, 1)
         nz = np.nonzero(cnts)[0]
@@ -607,19 +584,16 @@ def label_lsh_neardup(emb: DataFrame, threshold: float = 0.9, dim: int = 64) -> 
     )
 
 
-def _label_pairs_cos_kernel(threshold: float):
-    """Arrow-batch kernel factory for label-blocked near-dup pairing:
-    buffer the task's (vec_id, label, embedding, nrm) rows (blocks are
-    co-located by the upstream label repartition), then per label
-    compute all pairwise cosines with numpy elementwise ops
-    accumulated one dimension at a time — the ``dot`` expression
-    fold's left-to-right order — so the EMITTED cos doubles are
-    bit-identical to the self-join form (this entry's cos is part of
-    the oracle-hashed output). 1024-row blocks bound the cos matrix;
-    a block past PAIR_BLOCK_ROW_CAP rows fails loudly instead of
-    OOM-ing the task (r18 guard); NULL labels are skipped, matching
-    the SQL null-equality semantics of the a.label == b.label join
-    this kernel replaced (ADVICE r17)."""
+def _blocked_pairs_kernel(threshold: float, key: str, remedy: str):
+    """Arrow-batch kernel factory for within-block pairs: labels for
+    ``label_blocked_neardup``, k-means clusters for ``semantic_dedup``
+    (the SemDeDup step). Buffers the task's rows per ``key`` (blocks are
+    co-located by the upstream repartition) and emits each (vec_a <
+    vec_b, cos >= threshold) pair; ``fold_dot`` cosines are
+    bit-identical to the dot/l2_norm self-join form. 1024-row slabs
+    bound the cos matrix; a block past PAIR_BLOCK_ROW_CAP rows fails
+    loudly with ``remedy`` instead of OOM-ing the task; NULL keys never
+    pair (SQL equality)."""
 
     cap = PAIR_BLOCK_ROW_CAP
 
@@ -627,43 +601,36 @@ def _label_pairs_cos_kernel(threshold: float):
         import numpy as np
         import pyarrow as pa
 
-        by_label: dict[str, list] = {}
+        keys: list = []
+        ids_l, x_l, nrm_l = [], [], []
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            labels = batch.column("label").to_pylist()
-            ids = batch.column("vec_id").to_numpy()
-            nrms = batch.column("nrm").to_numpy()
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            for lab in set(labels):
-                if lab is None:
-                    continue  # SQL equality never matches NULL labels
-                sel = np.array([x == lab for x in labels])
-                by_label.setdefault(lab, []).append(
-                    (ids[sel], embs[sel], nrms[sel])
-                )
-        for lab, chunks in by_label.items():
-            ids = np.concatenate([c[0] for c in chunks]).astype(np.int64)
-            x = np.vstack([c[1] for c in chunks])
-            nrm = np.concatenate([c[2] for c in chunks])
-            n, dim = x.shape
+            keys += batch.column(key).to_pylist()
+            ids_l.append(batch.column("vec_id").to_numpy())
+            x_l.append(embedding_matrix(batch.column("embedding")))
+            nrm_l.append(batch.column("nrm").to_numpy())
+        rows_of: dict[object, list[int]] = {}
+        for i, b in enumerate(keys):
+            if b is not None:
+                rows_of.setdefault(b, []).append(i)
+        if not rows_of:
+            return
+        all_ids = np.concatenate(ids_l).astype(np.int64)
+        all_x, all_nrm = np.vstack(x_l), np.concatenate(nrm_l)
+        for b, rows in rows_of.items():
+            n = len(rows)
             if n > cap:
                 raise ValueError(
-                    f"label_blocked_neardup: label {lab!r} has {n} rows "
-                    f"(> PAIR_BLOCK_ROW_CAP={cap}) — a "
-                    "block this hot must be split (finer blocking key) "
-                    "rather than buffered in one task"
+                    f"{key} {b!r} has {n} rows "
+                    f"(> PAIR_BLOCK_ROW_CAP={cap}) — {remedy}"
                 )
             if n < 2:
                 continue
+            ids, x, nrm = all_ids[rows], all_x[rows], all_nrm[rows]
             for lo in range(0, n, 1024):
                 hi = min(lo + 1024, n)
-                acc = np.zeros((hi - lo, n))
-                for i in range(dim):  # sequential: matches the fold
-                    acc = acc + x[lo:hi, i : i + 1] * x[:, i]
-                cos = acc / (nrm[lo:hi, None] * nrm[None, :])
+                cos = fold_dot(x[lo:hi], x) / (nrm[lo:hi, None] * nrm[None, :])
                 ai, bi = np.nonzero(
                     (cos >= threshold) & (ids[lo:hi, None] < ids[None, :])
                 )
@@ -696,7 +663,12 @@ def label_blocked_neardup(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
         "nrm", l2_norm("embedding")
     )
     return e.repartition("label").mapInArrow(
-        _label_pairs_cos_kernel(threshold),
+        _blocked_pairs_kernel(
+            threshold,
+            "label",
+            "label_blocked_neardup: a block this hot must be split (finer "
+            "blocking key) rather than buffered in one task",
+        ),
         "vec_a bigint, vec_b bigint, cos double",
     )
 
@@ -1144,74 +1116,6 @@ def two_stage_ivf_topk_indexed(
 SEMDEDUP_THRESHOLD = 0.95
 
 
-def _semdedup_pairs_kernel(threshold: float):
-    """Arrow-batch kernel factory for SemDeDup's within-cluster pair
-    generation: buffer the task's (vec_id, embedding, nrm,
-    centroid_id) rows (clusters are co-located by the upstream
-    centroid_id repartition and partition-sized by design), then per
-    cluster compute all pairwise cosines with numpy elementwise ops
-    accumulated one dimension at a time — the same left-to-right
-    order as the ``dot`` expression fold, so emitted pairs are
-    bit-identical to the self-join form. Rows are processed in
-    1024-row blocks so the cos matrix stays bounded at block ×
-    cluster size; a cluster past PAIR_BLOCK_ROW_CAP rows fails loudly
-    instead of OOM-ing the task (r18 guard — at scale, raise
-    n_centroids so clusters stay partition-sized, the paper's own
-    remedy)."""
-
-    cap = PAIR_BLOCK_ROW_CAP
-
-    def pairs_fn(it):
-        import numpy as np
-        import pyarrow as pa
-
-        by_cid: dict[int, list] = {}
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            cids = batch.column("centroid_id").to_numpy()
-            ids = batch.column("vec_id").to_numpy()
-            nrms = batch.column("nrm").to_numpy()
-            embs = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            for cid in np.unique(cids):
-                sel = cids == cid
-                by_cid.setdefault(int(cid), []).append(
-                    (ids[sel], embs[sel], nrms[sel])
-                )
-        for cid, chunks in by_cid.items():
-            ids = np.concatenate([c[0] for c in chunks]).astype(np.int64)
-            x = np.vstack([c[1] for c in chunks])
-            nrm = np.concatenate([c[2] for c in chunks])
-            n, dim = x.shape
-            if n > cap:
-                raise ValueError(
-                    f"semantic_dedup: cluster {cid} has {n} rows "
-                    f"(> PAIR_BLOCK_ROW_CAP={cap}) — "
-                    "raise n_centroids so clusters stay partition-sized"
-                )
-            if n < 2:
-                continue
-            for lo in range(0, n, 1024):
-                hi = min(lo + 1024, n)
-                acc = np.zeros((hi - lo, n))
-                for i in range(dim):  # sequential: matches the fold
-                    acc = acc + x[lo:hi, i : i + 1] * x[:, i]
-                cos = acc / (nrm[lo:hi, None] * nrm[None, :])
-                ai, bi = np.nonzero(
-                    (cos >= threshold) & (ids[lo:hi, None] < ids[None, :])
-                )
-                if ai.size == 0:
-                    continue
-                yield pa.record_batch(
-                    [pa.array(ids[lo + ai]), pa.array(ids[bi])],
-                    names=["doc_a", "doc_b"],
-                )
-
-    return pairs_fn
-
-
 def semantic_dedup(
     emb: DataFrame,
     threshold: float = SEMDEDUP_THRESHOLD,
@@ -1246,13 +1150,19 @@ def semantic_dedup(
     )
     # Within-cluster pairing as ONE Arrow hop (r17 opt, guide §4.2):
     # the self-join form materialized O(n_c²) pair rows and paid an
-    # interpreted 64-dim cosine fold per pair. Each cluster's rows are
-    # co-located by the centroid_id repartition, and the kernel
-    # accumulates the pair dots one dimension at a time (left to
-    # right) so every cosine is bit-identical to the dot/l2_norm
-    # expression fold — within-cluster recall contracts unchanged.
-    pairs = assigned.repartition("centroid_id").mapInArrow(
-        _semdedup_pairs_kernel(threshold), "doc_a bigint, doc_b bigint"
+    # interpreted 64-dim cosine fold per pair.
+    pairs = (
+        assigned.repartition("centroid_id")
+        .mapInArrow(
+            _blocked_pairs_kernel(
+                threshold,
+                "centroid_id",
+                "semantic_dedup: raise n_centroids so clusters stay "
+                "partition-sized",
+            ),
+            "vec_a bigint, vec_b bigint, cos double",
+        )
+        .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     )
     comps = connected_components(pairs)
     return (
@@ -1421,9 +1331,7 @@ def _pq_encode_kernel(books: list[list[list[float]]]):
             if n == 0:
                 continue
             vec_ids = batch.column("vec_id").to_numpy()
-            x = np.stack(
-                batch.column("embedding").to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
+            x = embedding_matrix(batch.column("embedding"))
             acc = np.zeros(n)
             for i in range(x.shape[1]):  # sequential: matches the fold
                 acc = acc + x[:, i] * x[:, i]

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
+from ..kernels import ascii_words, md5_memo
 from ..registry import pin
 from .tokenize import TOKEN_SPLIT_REGEX, clean_word_col
 
@@ -144,43 +145,25 @@ def _winnow_fn(k: int, w: int):
     sorted distinct selection — the whole per-position pipeline in one
     Python hop (guide §4.2). Exactness:
 
-    - gram hash: ``int.from_bytes(md5(utf8).digest()[:4], 'big')`` ==
-      conv(substring(md5, 1, 8), 16, 10) — integer-exact.
-    - Spark's length/substring are code-point based; Python str
-      slicing is too. The fast path additionally requires ASCII (one
-      byte per code point) before touching bytes; non-ASCII rows take
-      a per-position replica loop with identical values.
+    - gram hash: ``md5_memo``'s 32-bit prefix == conv(substring(md5,
+      1, 8), 16, 10) — integer-exact.
+    - the normalized text is ``ascii_words`` re-joined with ' ', the
+      JVM array projection it replaces; it is pure ASCII, so Spark's
+      code-point length/substring equal byte offsets.
     - distinct gram hashes are computed once per distinct gram
-      (np.unique over the uint64 gram view + a per-task memo) — the
-      JVM expression re-hashed every position.
+      (np.unique over the uint64 gram view when k == 8, plus the
+      per-task memo) — the JVM expression re-hashed every position.
     - rows with no gram (len < k) or no window (grams < w) emit
       (0, ''), matching the when()-guarded empty arrays they replace.
 
-    numpy/pyarrow/hashlib imports live in the closure (guide §4.5);
-    the memo is capped so a pathological corpus cannot grow task
-    memory without bound."""
+    numpy/pyarrow imports live in the closure (guide §4.5)."""
 
     def fn(it):
-        import hashlib
-        import re
-
         import numpy as np
         import pyarrow as pa
         from numpy.lib.stride_tricks import sliding_window_view
 
-        strip_re = re.compile(r"[^A-Za-z \t\n]")
-        split_re = re.compile(r"[ \t\n]+")
-        memo: dict[bytes, int] = {}
-        memo_cap = 4_000_000
-
-        def gram_hash(gb: bytes) -> int:
-            h = memo.get(gb)
-            if h is None:
-                h = int.from_bytes(hashlib.md5(gb).digest()[:4], "big")
-                if len(memo) < memo_cap:
-                    memo[gb] = h
-            return h
-
+        hashes = md5_memo()
         for batch in it:
             if batch.num_rows == 0:
                 continue
@@ -188,29 +171,13 @@ def _winnow_fn(k: int, w: int):
             out_n: list[int] = []
             out_t: list[str] = []
             for text in texts:
-                # Normalization replica of the JVM array projection it
-                # replaces: split on [ \t\n]+, strip [^A-Za-z] per
-                # token, lowercase, drop empties, re-join with ' ' —
-                # computed as a global strip-then-lower (exact: removal
-                # never touches a separator; lowering after the strip
-                # only sees ASCII — the _minhash_rows_fn argument).
-                s = (
-                    " ".join(
-                        w
-                        for w in split_re.split(
-                            strip_re.sub("", text).lower()
-                        )
-                        if w
-                    )
-                    if text
-                    else ""
-                )
+                s = " ".join(ascii_words(text))
                 if not s or len(s) < k:
                     out_n.append(0)
                     out_t.append("")
                     continue
                 n_grams = len(s) - k + 1
-                if s.isascii() and k == 8:  # gram fits one uint64 word
+                if k == 8:  # gram fits one uint64 word
                     b = np.frombuffer(s.encode("ascii"), dtype=np.uint8)
                     gu = (
                         sliding_window_view(b, k)
@@ -218,26 +185,17 @@ def _winnow_fn(k: int, w: int):
                         .view(np.uint64)
                         .ravel()
                     )
-                    uniq, first, inv = np.unique(
+                    _, first, inv = np.unique(
                         gu, return_index=True, return_inverse=True
                     )
-                    uh = np.fromiter(
-                        (
-                            gram_hash(s[i : i + k].encode("ascii"))
-                            for i in first
-                        ),
-                        dtype=np.int64,
-                        count=len(uniq),
+                    uh = np.array(
+                        hashes(s[i : i + k] for i in first), dtype=np.int64
                     )
                     hs = uh[inv]
                 else:
-                    hs = np.fromiter(
-                        (
-                            gram_hash(s[i : i + k].encode("utf-8"))
-                            for i in range(n_grams)
-                        ),
+                    hs = np.array(
+                        hashes(s[i : i + k] for i in range(n_grams)),
                         dtype=np.int64,
-                        count=n_grams,
                     )
                 if len(hs) < w:
                     out_n.append(0)
@@ -275,8 +233,8 @@ def winnowing_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
     two C-regex passes, hashes each DISTINCT gram once, and vectorizes
     the window mins). Zero shuffle, scan-speed, same md5-derived
     32-bit hash as the dedup family so the DuckDB oracle reproduces it
-    exactly; values bit-identical (integer-exact hashing, exact
-    tokenizer replica — _winnow_fn). Only (doc_id, text) crosses the
+    exactly; values bit-identical (integer-exact hashing, the shared
+    ``ascii_words`` tokenizer — _winnow_fn). Only (doc_id, text) crosses the
     Python boundary.
     """
     return docs.select("doc_id", "text").mapInArrow(

@@ -23,10 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Split contract: ONLY space / tab / newline (reference src/tema1.cpp:144).
-TOKEN_SPLIT_REGEX = "[ \t\n]+"
-# Normalize contract: strip non-ASCII-letters, lowercase (src/tema1.cpp:88-99).
-NON_ALPHA_REGEX = "[^A-Za-z]"
+# The split and normalize contracts live with the Arrow kernels'
+# tokenizer (``kernels.ascii_words``) so both sides read one pair.
+from ..kernels import NON_ALPHA_REGEX, TOKEN_SPLIT_REGEX
 
 
 def clean_word_col(tok: Column | str) -> Column:

@@ -1,14 +1,17 @@
-"""Differential test: the Spark tokenization pipeline vs an independent
-pure-Python implementation of the reference contract (split on space/tab/
-newline, keep ASCII letters lowercased, drop empties, distinct per doc —
-reference src/tema1.cpp:88-99,142-166), over a seeded random corpus that
-stresses edge shapes the parquet fixtures don't contain."""
+"""Differential tests of the tokenization contract (split on space/tab/
+newline, keep ASCII letters lowercased, drop empties — reference
+src/tema1.cpp:88-99,142-166) over a seeded random corpus that stresses
+edge shapes the parquet fixtures don't contain. Two subjects: the Spark
+pipeline vs an independent pure-Python reference, and the Arrow kernels'
+tokenizer (``kernels.ascii_words``) vs the JVM word arrays."""
 
 from __future__ import annotations
 
 import random
 import string
 
+from parallel_map_reduce_spark.kernels import ascii_words
+from parallel_map_reduce_spark.operators.dedup import clean_words_array
 from parallel_map_reduce_spark.operators.tokenize import doc_word_pairs
 
 
@@ -38,6 +41,11 @@ def _random_corpus(n_docs: int, seed: int = 1234) -> list[tuple[int, str]]:
         (n_docs + 4, "don't well-known Hello, WORLD"),
         (n_docs + 5, "a" * 5000),
         (n_docs + 6, "x y " * 500),
+        # Python lowers both of these to ASCII letters ("İ" -> "i" plus
+        # a combining dot, Kelvin sign -> "k"): only strip-then-lower
+        # drops them, as the engine does.
+        (n_docs + 7, "\u0130stanbul \u0130 caf\u0130e"),
+        (n_docs + 8, "273\u212a \u212aelvin a\u212ab"),
     ]
     return docs
 
@@ -51,3 +59,14 @@ def test_tokenizer_matches_python_reference(spark):
     for doc_id, text in docs:
         want = _python_reference(text)
         assert got.get(doc_id, set()) == want, f"doc {doc_id}: {text[:60]!r}"
+
+
+def test_kernel_tokenizer_matches_jvm_word_arrays(spark):
+    """The Arrow kernels' tokenizer must give the JVM
+    ``clean_words_array`` list, in order, for every document."""
+    docs = _random_corpus(200)
+    sdf = spark.createDataFrame(docs, schema="doc_id LONG, text STRING")
+    got = {r.doc_id: list(r.words) for r in clean_words_array(sdf).collect()}
+    assert len(got) == len(docs)
+    for doc_id, text in docs:
+        assert ascii_words(text) == got[doc_id], f"doc {doc_id}: {text[:60]!r}"

@@ -98,14 +98,8 @@ def scaled_trade_edges(spark, factor: int):
             "deg",
         )
         write_bucketed(scaled, table, "src", n_buckets=16, path=path)
-        open(os.path.join(path, "_SUCCESS"), "w").close()
         return spark.table(table)
     if not spark.catalog.tableExists(table):
-        files = ", ".join(
-            f"'{os.path.join(path, f)}'"
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        )
         # re-register over the cached files with bucketed DDL
         spark.sql(
             f"CREATE TABLE {table} (src STRING, dst STRING, deg BIGINT) "
