@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .vector import double_array_sql
+
 EMBEDDING_DIM = 64  # embeddings.parquet fixture dimension
 
 
@@ -133,7 +135,8 @@ def pca_whiten(embs: DataFrame, k: int = 8) -> DataFrame:
     Train is ``covariance_stats`` (one pass, driver holds dim² floats
     — same metadata class as IVF centroids); eigendecomposition is
     numpy on the driver. Serving broadcasts the k×dim whitened
-    projection matrix as LITERAL column expressions: per-component
+    projection matrix as LITERAL column expressions (exact DOUBLE
+    literals parsed from ``double_array_sql``): per-component
     zip_with/aggregate dot products, JVM codegen end-to-end, zero
     Python in the projection path, zero shuffles. Component sign is
     canonicalized (largest-|loading| entry positive) so output is
@@ -154,12 +157,10 @@ def pca_whiten(embs: DataFrame, k: int = 8) -> DataFrame:
             vecs[:, j] = -vecs[:, j]
     w = vecs / np.sqrt(np.maximum(vals, 1e-12))  # dim x k, whitened
     x = F.transform("embedding", lambda v: v.cast("double"))
-    centered = F.zip_with(
-        x, F.array(*[F.lit(float(m)) for m in mean]), lambda a, b: a - b
-    )
+    centered = F.zip_with(x, F.expr(double_array_sql(mean)), lambda a, b: a - b)
     comps = []
     for j in range(w.shape[1]):
-        wj = F.array(*[F.lit(float(c)) for c in w[:, j]])
+        wj = F.expr(double_array_sql(w[:, j]))
         comps.append(
             F.round(
                 F.aggregate(

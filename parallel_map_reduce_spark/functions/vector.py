@@ -8,6 +8,8 @@ compute with no shuffle.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -28,3 +30,21 @@ def l2_norm(a: Column | str) -> Column:
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def double_array_sql(values) -> str:
+    """SQL text of an ``array(...)`` of exact DOUBLE literals.
+
+    Each value is written ``repr(v) + "D"``: repr is the shortest
+    string that round-trips the float, and the ``D`` suffix makes the
+    parser read it as a DOUBLE, so the literal is bit-identical to
+    ``F.lit(float(v))``. One parsed ``F.expr`` replaces a py4j round
+    trip per element. Raises ValueError on NaN or infinity, which have
+    no numeric literal form."""
+    parts = []
+    for v in values:
+        v = float(v)
+        if not math.isfinite(v):
+            raise ValueError(f"double_array_sql: non-finite value {v!r}")
+        parts.append(repr(v) + "D")
+    return "array(" + ", ".join(parts) + ")"

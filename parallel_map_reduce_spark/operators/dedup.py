@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_i32
 from ..kernels import ascii_words, distinct_shingles, md5_memo
 from ..registry import pin
+from ..sources.catalog import local_frame
 from .tokenize import clean_word_col, TOKEN_SPLIT_REGEX
 
 # ---- shared deterministic constants (also interpolated into oracle SQL) ----
@@ -637,9 +638,9 @@ def ngram_jaccard_pairs(
 # discipline): the fixpoint loop's wall at small pair graphs is pure
 # scheduler latency — 2 setup jobs + 2 jobs per round over a
 # few-thousand-row label table (measured 2.3–2.5 s of ~10 tiny actions
-# at sf0.1). Once the symmetrized edge list is MATERIALIZED, a bounded
-# take tells us whether it is driver-metadata-sized; below the cap a
-# union-find computes the components in ONE job. cluster_id = the
+# at sf0.1). Once the symmetrized edge list is MATERIALIZED, its count
+# tells us whether it is driver-metadata-sized; below the cap a
+# union-find computes the components on the driver. cluster_id = the
 # component's min doc_id is a pure graph property, so ANY correct CC
 # algorithm returns identical rows — no sequence replication needed
 # (unlike BPE). Past the cap (100 TB pair graphs) the propagation loop
@@ -715,26 +716,26 @@ def connected_components(
         .select("e.src", "e.dst")
         .localCheckpoint(eager=True)
     )
-    # Scale-adaptive path pick (see CC_LOCAL_EDGE_CAP): one bounded
-    # take against the already-materialized edges decides; a full
-    # fetch (cap exceeded) falls through to the propagation loop.
-    # The symmetrized list is 2x the pair count, so fetch 2*cap+1.
+    # Scale-adaptive path pick (see CC_LOCAL_EDGE_CAP): a count of the
+    # already-materialized edges decides, and only a graph under the
+    # cap is collected — an oversized one never crosses to the driver
+    # before falling through to the propagation loop. The symmetrized
+    # list is 2x the pair count, so the bound is 2*cap edges.
     cap = CC_LOCAL_EDGE_CAP if local_cap is None else local_cap
-    if cap > 0:
-        head = edges.limit(2 * cap + 1).collect()
-        if len(head) <= 2 * cap:
-            from pyspark.sql.types import StructField, StructType
+    if cap > 0 and edges.count() <= 2 * cap:
+        from pyspark.sql.types import StructField, StructType
 
-            src_type = edges.schema["src"].dataType
-            return pairs.sparkSession.createDataFrame(
-                _cc_local((r.src, r.dst) for r in head),
-                StructType(
-                    [
-                        StructField("doc_id", src_type),
-                        StructField("cluster_id", src_type),
-                    ]
-                ),
-            )
+        src_type = edges.schema["src"].dataType
+        return local_frame(
+            pairs.sparkSession,
+            _cc_local((r.src, r.dst) for r in edges.collect()),
+            StructType(
+                [
+                    StructField("doc_id", src_type),
+                    StructField("cluster_id", src_type),
+                ]
+            ),
+        )
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()

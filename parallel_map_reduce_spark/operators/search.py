@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..registry import pin
+from ..sources.catalog import local_frame
 from .dedup import ordered_words
 
 BM25_K1 = 1.2
@@ -160,7 +161,7 @@ def bm25_rank_batch(
     # BM25 treats repeated query terms as weight-1 (standard qtf=1 form);
     # dedupe per query so the score is a set function of the query.
     q_rows = sorted({(qid, t) for qid, ts in queries.items() for t in ts})
-    qt = spark.createDataFrame(q_rows, "query STRING, word STRING")
+    qt = local_frame(spark, q_rows, "query STRING, word STRING")
     all_terms = sorted({t for _, t in q_rows})
     # On a word-bucketed index table this IN-filter reaches the scan and
     # bucket-prunes it (SelectedBucketsCount in the plan — pinned in

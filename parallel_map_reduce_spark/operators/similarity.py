@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
-from ..functions.vector import cosine_similarity, dot, l2_norm
+from ..functions.vector import cosine_similarity, dot, double_array_sql, l2_norm
 from ..kernels import centroid_scorer, embedding_matrix, fold_dot
-from ..sources.catalog import read_parquet
+from ..sources.catalog import local_frame, read_parquet
 
 N_PLANES = 12
 ANN_BANDS = 3
@@ -119,23 +119,27 @@ def brute_force_topk(
 
 def _band_buckets_expr(emb_col: str, dim: int) -> F.Column:
     """ARRAY of ANN_BANDS bucket ids: band b packs the sign bits of
-    planes [b*r, (b+1)*r) into an int. Sign bit = dot(embedding, plane) > 0."""
+    planes [b*r, (b+1)*r) into an int. Sign bit = dot(embedding, plane) > 0,
+    the dot being the sequential zip_with/aggregate fold of ``dot``.
+
+    Built as ONE parsed SQL expression: the N_PLANES*dim plane
+    components ride as exact DOUBLE literals (``double_array_sql``), so
+    the plan is the same projection the Column-API form built with one
+    ``F.lit`` py4j round trip per component (768 at dim=64, which
+    dominated each ANN request's plan build)."""
     planes = plane_components(dim)
+    emb = f"`{emb_col}`"
     buckets = []
     for band in range(ANN_BANDS):
-        bits = None
-        for i in range(ANN_PLANES_PER_BAND):
-            p = band * ANN_PLANES_PER_BAND + i
-            plane = F.array(*[F.lit(v) for v in planes[p]])
-            d = F.aggregate(
-                F.zip_with(F.col(emb_col), plane, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            bits = bit if bits is None else bits + bit
-        buckets.append(bits.cast("int"))
-    return F.array(*buckets)
+        bits = " + ".join(
+            f"CASE WHEN aggregate(zip_with({emb}, "
+            f"{double_array_sql(planes[band * ANN_PLANES_PER_BAND + i])}, "
+            "(x, y) -> cast(x as double) * y), 0.0D, (acc, x) -> acc + x) > 0 "
+            f"THEN {1 << i} ELSE 0 END"
+            for i in range(ANN_PLANES_PER_BAND)
+        )
+        buckets.append(f"CAST({bits} AS INT)")
+    return F.expr("array(" + ", ".join(buckets) + ")")
 
 
 def lsh_ann_topk(emb: DataFrame, query_filter: F.Column, k: int = 10, dim: int = 64) -> DataFrame:
@@ -293,8 +297,8 @@ def _centroid_df(spark, cents: dict[int, list[float]]) -> DataFrame:
     import math
 
     rows = [(cid, [float(x) for x in vec]) for cid, vec in sorted(cents.items())]
-    df = spark.createDataFrame(
-        rows, "centroid_id INT, c_emb ARRAY<DOUBLE>"
+    df = local_frame(
+        spark, rows, "centroid_id INT, c_emb ARRAY<DOUBLE>"
     ).withColumn("c_nrm", l2_norm("c_emb"))
     df._pmrs_local_cents = [
         (cid, vec, math.sqrt(_seq_dot(vec, vec))) for cid, vec in rows
@@ -823,8 +827,8 @@ def two_stage_topk(
     qz = emb.select("vec_id", codes.alias("codes"), scale.alias("scale"))
     qrows = _collect_query_batch(qz.filter(query_filter), "two_stage_topk")
     if not qrows:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id bigint, vec_id bigint, cos double, rank int"
+        return local_frame(
+            emb.sparkSession, [], "query_id bigint, vec_id bigint, cos double, rank int"
         )
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     q_mat = np.array([r["codes"] for r in qrows], dtype=np.int64)
@@ -1067,9 +1071,7 @@ def two_stage_ivf_topk_indexed(
             for cid, ce, cn in crows
         )[:nprobe]
         probe_pairs.extend((r["vec_id"], cid) for _, cid in scored)
-    probes = spark.createDataFrame(
-        probe_pairs, "query_id BIGINT, centroid_id INT"
-    )
+    probes = local_frame(spark, probe_pairs, "query_id BIGINT, centroid_id INT")
     probed_ids = sorted({cid for _, cid in probe_pairs})
     codes, scale = _int8_code_exprs()
     probe_q = probes.join(
@@ -1221,10 +1223,10 @@ def _normalized(emb: DataFrame) -> DataFrame:
 
 def _book_lit(book: list[list[float]]) -> F.Column:
     """k x subdim codebook as a nested array literal (metadata-sized:
-    codebooks ride into the plan, no join needed)."""
-    return F.array(
-        *[F.array(*[F.lit(float(v)) for v in cent]) for cent in book]
-    )
+    codebooks ride into the plan, no join needed), parsed from one SQL
+    string of exact DOUBLE literals instead of one py4j ``F.lit`` call
+    per value."""
+    return F.expr("array(" + ", ".join(double_array_sql(c) for c in book) + ")")
 
 
 def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
@@ -1550,7 +1552,8 @@ def ivfpq_probe_table(
         for _, cid in scored:
             probe_rows.append((r["vec_id"], int(cid), q_nemb, lut))
     probed_ids = sorted({cid for _, cid, _, _ in probe_rows})
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         probe_rows,
         "query_id BIGINT, centroid_id INT, q_nemb ARRAY<DOUBLE>, "
         "lut ARRAY<ARRAY<DOUBLE>>",
@@ -1709,7 +1712,8 @@ def pq_topk_indexed(
             for s in range(m)
         ]
         lut_rows.append((r["vec_id"], q_nemb, lut))
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         lut_rows,
         "query_id BIGINT, q_nemb ARRAY<DOUBLE>, lut ARRAY<ARRAY<DOUBLE>>",
     )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_i32
 from ..kernels import ascii_words, md5_memo
 from ..registry import pin
+from ..sources.catalog import local_frame
 from .tokenize import TOKEN_SPLIT_REGEX, clean_word_col
 
 # BPE-ish token regex: letter runs, digit runs, single non-space symbols.
@@ -805,7 +806,8 @@ def bpe_train(
     # fetch (cap exceeded) falls through to the distributed loop.
     head = wf0.select("freq", "syms").limit(cap + 1).collect() if cap > 0 else []
     if cap > 0 and len(head) <= cap:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             _bpe_train_local([(r.freq, r.syms) for r in head], n_merges),
             mschema,
         )
@@ -883,7 +885,7 @@ def bpe_train(
             if since_ckpt >= BPE_CKPT_EVERY:
                 wf = wf.localCheckpoint(eager=True)
                 since_ckpt = 0
-    return spark.createDataFrame(merges, mschema)
+    return local_frame(spark, merges, mschema)
 
 
 def bpe_segment(

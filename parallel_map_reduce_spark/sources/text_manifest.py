@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .catalog import local_frame
+
 # Serializes the parallelPartitionDiscovery.threshold set/restore in
 # read_manifest_documents (see there).
 _DISCOVERY_THRESHOLD_LOCK = threading.Lock()
@@ -130,7 +132,10 @@ def read_manifest_documents(spark: SparkSession, manifest_path: str) -> DataFram
     keeps reading distributed (each file is one task); ids come from the
     manifest position, not from ``monotonically_increasing_id`` (which is
     partition-dependent and would not be stable across parallelism, the
-    exact property the reference checker verifies).
+    exact property the reference checker verifies). An id table of at
+    most 1000 distinct path keys rides in the scan's projection as a map
+    literal; a larger one is built with ``local_frame`` and
+    broadcast-joined to the scan on the file path.
     """
     from .artifact_cache import source_key
 
@@ -234,9 +239,13 @@ def _build_manifest_documents(
     if len(id_map) <= 1000 and len({p for p, _ in id_map}) == len(id_map):
         # Small manifest (the parity corpora): the id table rides into
         # the plan as a map literal — a scan-side projection with no
-        # broadcast exchange or join stage at all (measured ~0.3 s off
-        # the 355-file flagship; same doc ids by construction). Built
-        # as ONE parsed SQL expression: create_map over 2n F.lit()
+        # broadcast exchange or join stage at all (same doc ids by
+        # construction). Against the Arrow-built join below, warm CLI
+        # runs on the 355-file flagship corpus cost the same, but the
+        # first run in a process pays the JVM's one-time Arrow set-up
+        # (~0.7 s cold, 4 interleaved pairs on a 4-vCPU VM), which a
+        # one-shot CLI run never amortizes. Built as ONE parsed SQL
+        # expression: create_map over 2n F.lit()
         # columns pays 2n py4j round-trips (~0.4 s for 355 files,
         # pure driver overhead re-paid on every plan build). Keys ride
         # as decode(unhex('<hex>'),'UTF-8') — hex has NO SQL-literal
@@ -269,7 +278,9 @@ def _build_manifest_documents(
     # Large (or pathological duplicate-path) manifests: a million-entry
     # expression literal would bloat the plan — keep the id table as a
     # small dim and broadcast-join it (no shuffle of text blobs either).
-    ids_df = spark.createDataFrame(id_map, schema="path STRING, doc_id BIGINT")
+    # It reaches the JVM as Arrow data, so the join runs no Python-worker
+    # job to unpickle it.
+    ids_df = local_frame(spark, id_map, "path STRING, doc_id BIGINT")
     return (
         raw.join(F.broadcast(ids_df), on="path", how="inner")
         .select("doc_id", "text")

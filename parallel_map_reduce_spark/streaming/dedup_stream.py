@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import lsh_band_signatures
+from ..sources.catalog import load_table, local_frame
 
 
 def _fresh_result_dir(kind: str, sf_dir: str) -> str:
@@ -126,7 +127,6 @@ def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the document stream through ingest-time LSH matching;
     return all (new_doc, corpus_doc) collisions found across batches."""
     from ..queries.dedup import INCR_SOURCE
-    from ..sources.catalog import load_table
     from .curation_stream import read_documents_stream
 
     docs = load_table(spark, sf_dir, "documents")
@@ -135,7 +135,7 @@ def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)  # the standing index artifact
 
     out_dir = _fresh_result_dir("pmrs_lsh_matches", sf_dir)
-    empty = spark.createDataFrame([], "new_doc BIGINT, corpus_doc BIGINT")
+    empty = local_frame(spark, [], "new_doc BIGINT, corpus_doc BIGINT")
     empty.write.mode("append").parquet(out_dir)  # schema for the 0-match case
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
@@ -230,7 +230,7 @@ def run_band_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .curation_stream import read_documents_stream
 
     store = _fresh_result_dir("pmrs_band_index", sf_dir)
-    empty = spark.createDataFrame([], "doc_id BIGINT, band INT, sig STRING")
+    empty = local_frame(spark, [], "doc_id BIGINT, band INT, sig STRING")
     empty.write.mode("append").parquet(store)  # schema for the 0-doc case
 
     ckpt = tempfile.mkdtemp(prefix="pmrs_bandidx_ckpt_")

@@ -8,10 +8,14 @@ uses, measures separately:
   - run1_s:    first noop-sink materialize (cold: codegen, broadcast
                build, artifact cache misses)
   - warm_s:    best of N warm materializes (the steady-state engine
-               cost bench's best-of-3 converges to)
-  - jobs/stages/tasks executed during the warm run (status tracker
-               deltas) — stage-count × scheduling-latency is the local
-               floor for multi-exchange plans.
+               cost bench's best-of-3 converges to); warm_build_s is
+               the spec.build() part of each
+  - warm_jobs / warm_stages / warm_tasks: per warm run, the jobs,
+               the stages that ran and their tasks, read from the
+               status tracker under a job group per run (stages
+               skipped for reused shuffle output do no work and are
+               not counted) — stage-count × scheduling-latency is the
+               local floor for multi-exchange plans.
 
 Usage: python tools/profile_query.py [sf_dir] <query> [query ...]
 """
@@ -32,6 +36,25 @@ N_WARM = int(os.environ.get("SPARK_GRAFT_PROFILE_WARM", "3"))
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _job_counts(sc, group: str) -> tuple[int, int, int]:
+    """(jobs, stages that ran, their tasks) of one job group. Status
+    events reach the tracker asynchronously, so the listener bus is
+    drained first."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        stage_ids.update(info.stageIds if info else ())
+    ran = [
+        info
+        for info in map(tracker.getStageInfo, stage_ids)
+        if info is not None and info.numCompletedTasks > 0
+    ]
+    return len(jobs), len(ran), sum(i.numCompletedTasks for i in ran)
 
 
 def main() -> int:
@@ -66,14 +89,14 @@ def main() -> int:
     spark.range(1_000_000).groupBy(F.col("id") % 7).count().collect()  # warmup
 
     specs = all_queries()
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
     out = {}
     for name in names:
         if name not in specs:
             print(f"unknown query {name!r}", file=sys.stderr)
             continue
         release_pins()
-        spark.sparkContext.setJobDescription(f"profile:{name}")
+        sc.setJobGroup(f"profile:{name}", f"profile:{name}")
         try:
             t0 = time.perf_counter()
             df = specs[name].build(spark, sf_dir)
@@ -88,17 +111,25 @@ def main() -> int:
             # run-1's cached pin blocks (the CacheManager matches the
             # rebuilt identical logical plan) — that IS the bench's
             # best-of-3 basis.
-            warm_runs = []
-            for _ in range(N_WARM):
+            warm_runs, warm_builds, counts = [], [], []
+            for i in range(N_WARM):
+                group = f"profile:{name}:warm{i}"
+                sc.setJobGroup(group, f"profile:{name}")
                 t0 = time.perf_counter()
                 df = specs[name].build(spark, sf_dir)
+                warm_builds.append(time.perf_counter() - t0)
                 _materialize(df)
                 warm_runs.append(time.perf_counter() - t0)
+                counts.append(_job_counts(sc, group))
             rec = {
                 "build_s": round(build_s, 3),
                 "run1_s": round(run1_s, 3),
                 "warm_best_s": round(min(warm_runs), 3),
                 "warm_runs": [round(r, 3) for r in warm_runs],
+                "warm_build_s": [round(b, 3) for b in warm_builds],
+                "warm_jobs": [c[0] for c in counts],
+                "warm_stages": [c[1] for c in counts],
+                "warm_tasks": [c[2] for c in counts],
             }
         except Exception as e:  # noqa: BLE001
             rec = {"error": str(e)[:300]}
