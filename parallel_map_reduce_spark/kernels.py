@@ -3,7 +3,9 @@
 The ``mapInArrow`` kernels in ``operators/`` replicate JVM expressions
 bit for bit (the DuckDB oracles hash-check them). What they share lives
 here once: the ASCII tokenizer and shingler, a bounded md5 memo, and
-the dimension-by-dimension dot fold of ``functions/vector.dot``.
+the dimension-by-dimension dot and norm folds of ``functions/vector``
+(``dot``, ``l2_norm``), which the driver-side replicas in
+``operators/similarity.py`` use too.
 
 No pyspark import: ``operators/__init__`` registers this module with
 cloudpickle to be pickled by value, so each kernel closure carries the
@@ -97,6 +99,15 @@ def fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     for i in range(a.shape[1]):
         acc = acc + a[:, i : i + 1] * b[:, i]
     return acc
+
+
+def fold_norms(x: np.ndarray) -> np.ndarray:
+    """Row L2 norms: the sqrt of each row's squares summed in
+    ``fold_dot``'s order, so every double equals ``l2_norm``'s."""
+    acc = np.zeros(x.shape[0])
+    for i in range(x.shape[1]):
+        acc = acc + x[:, i] * x[:, i]
+    return np.sqrt(acc)
 
 
 def centroid_scorer(cent_rows):

@@ -22,12 +22,13 @@ MapReduce" (ICDE 2012), PAPERS.md.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
 from ..functions.vector import cosine_similarity, dot, double_array_sql, l2_norm
-from ..kernels import centroid_scorer, embedding_matrix, fold_dot
+from ..kernels import centroid_scorer, embedding_matrix, fold_dot, fold_norms
 from ..sources.catalog import local_frame, read_parquet
 
 N_PLANES = 12
@@ -71,6 +72,14 @@ def _collect_query_batch(df: DataFrame, what: str) -> list:
     return rows
 
 
+def _topk(df: DataFrame, score: str, tie: str, n: int, name: str) -> DataFrame:
+    """The rows ranked ``name`` = 1..n within each query_id by (score
+    DESC, tie ASC). The tie column makes the order total, so the cut
+    at n is deterministic."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc(tie))
+    return df.withColumn(name, F.row_number().over(w)).filter(F.col(name) <= n)
+
+
 def plane_components(dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes: component (p, d) derives
     from md5-free integer mixing so Spark and tests share them. Values in
@@ -109,12 +118,7 @@ def brute_force_topk(
         cand.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
         .withColumn("cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("c_norm")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _topk(scored, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 def _band_buckets_expr(emb_col: str, dim: int) -> F.Column:
@@ -142,24 +146,30 @@ def _band_buckets_expr(emb_col: str, dim: int) -> F.Column:
     return F.expr("array(" + ", ".join(buckets) + ")")
 
 
-def lsh_ann_topk(emb: DataFrame, query_filter: F.Column, k: int = 10, dim: int = 64) -> DataFrame:
-    """Approximate top-k via banded hyperplane LSH (OR-amplification).
+def _lsh_rows(emb: DataFrame, dim: int) -> DataFrame:
+    """(vec_id, embedding, nrm, band, bucket): one row per band
+    membership, ANN_BANDS rows per vector. This is the LSH store's
+    layout, in-plan or persisted, and a query batch's probe keys.
 
-    Candidates = vectors sharing ANY band bucket with the query — an
-    equi-join on (band, bucket), never a cross join. At 100 TB: write the
-    corpus partitioned by (band, bucket) once; each query probes
-    ANN_BANDS partitions — a partition-pruned scan instead of a full
-    pass. Here both sides are bucketed inline and the (small) query side
-    broadcasts.
-    """
-    with_buckets = emb.withColumn("bkts", _band_buckets_expr("embedding", dim)).withColumn(
-        "nrm", l2_norm("embedding")
+    ONE select, the bucket array inside the posexplode: every DataFrame
+    op re-analyzes the plan holding the N_PLANES*dim plane literals
+    (that dominates a serving request's plan build), and over a bucket
+    column the optimizer inferred a ``size(bkts) > 0`` filter that ran
+    every plane fold twice."""
+    return emb.select(
+        "vec_id",
+        "embedding",
+        l2_norm("embedding").alias("nrm"),
+        F.posexplode(_band_buckets_expr("embedding", dim)).alias("band", "bucket"),
     )
-    # (vec_id, embedding, norm, band, bucket) — ANN_BANDS rows per vector.
-    exploded = with_buckets.select(
-        "vec_id", "embedding", "nrm", F.posexplode("bkts").alias("band", "bucket")
-    )
-    q = exploded.filter(query_filter).select(
+
+
+def _lsh_probe(store: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Top-k by exact cosine over the ``store`` rows sharing ANY (band,
+    bucket) with a query row; both sides are in the ``_lsh_rows``
+    layout. The query side broadcasts into an equi-join on (band,
+    bucket), never a cross join."""
+    q = q.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_norm"),
@@ -173,7 +183,7 @@ def lsh_ann_topk(emb: DataFrame, query_filter: F.Column, k: int = 10, dim: int =
     # the grouping keys) AND the rank window's, so dropDuplicates and
     # row_number share the same shuffle instead of exchanging twice.
     cand = (
-        exploded.join(
+        store.join(
             F.broadcast(q),
             (F.col("band") == F.col("q_band"))
             & (F.col("bucket") == F.col("q_bucket"))
@@ -186,12 +196,20 @@ def lsh_ann_topk(emb: DataFrame, query_filter: F.Column, k: int = 10, dim: int =
     scored = cand.withColumn(
         "cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("nrm"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _topk(scored, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
+
+
+def lsh_ann_topk(emb: DataFrame, query_filter: F.Column, k: int = 10, dim: int = 64) -> DataFrame:
+    """Approximate top-k via banded hyperplane LSH (OR-amplification).
+
+    Candidates = vectors sharing ANY band bucket with the query — an
+    equi-join on (band, bucket), never a cross join. At 100 TB: write the
+    corpus partitioned by (band, bucket) once; each query probes
+    ANN_BANDS partitions — a partition-pruned scan instead of a full
+    pass. Here both sides are bucketed inline and the (small) query side
+    broadcasts.
+    """
+    return _lsh_probe(_lsh_rows(emb, dim), _lsh_rows(emb.filter(query_filter), dim), k)
 
 
 def write_lsh_index(emb: DataFrame, path: str, dim: int = 64) -> None:
@@ -205,25 +223,15 @@ def write_lsh_index(emb: DataFrame, path: str, dim: int = 64) -> None:
     pruning. The bucketing projection is deterministic (fixed
     ``plane_components`` hyperplanes), so a rebuilt index is
     bit-identical for the same corpus."""
-    store = (
-        emb.withColumn("bkts", _band_buckets_expr("embedding", dim))
-        .withColumn("nrm", l2_norm("embedding"))
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            F.posexplode("bkts").alias("band", "bucket"),
-        )
-    )
     # Cluster rows by their target directory before the partitioned
     # write: without this every upstream task writes a sliver into
     # every (band, bucket) dir — N_tasks * 48 tiny files whose open
     # cost then dominates serving scans. One exchange at build time
     # buys one file per bucket (at 100 TB: repartition(N, band,
     # bucket) for N files per bucket, still bounded per directory).
-    store.repartition("band", "bucket").write.mode("overwrite").partitionBy(
-        "band", "bucket"
-    ).parquet(path + "/buckets")
+    _lsh_rows(emb, dim).repartition("band", "bucket").write.mode(
+        "overwrite"
+    ).partitionBy("band", "bucket").parquet(path + "/buckets")
 
 
 def lsh_ann_topk_indexed(
@@ -233,51 +241,18 @@ def lsh_ann_topk_indexed(
     persisted (band, bucket)-partitioned store of ``write_lsh_index``
     instead of re-bucketing the whole corpus per query batch. The query
     batch's bucket ids are recomputed from the raw query vectors (a
-    deterministic projection — the IVF-indexed discipline); the
-    broadcast equi-join on the partition columns (band, bucket) then
-    triggers Spark's DYNAMIC partition pruning — the executed plan's
-    ``PartitionFilters`` carries ``dynamicpruningexpression(band IN
-    ...)`` (pinned in tests/test_similarity.py), so the store scan
-    reads only the probed directories with NO driver-side probe
-    collect (one fewer job than an explicit isin-filter, and the probe
-    set never leaves the JVM). At 100 TB no serving stage scans,
-    shuffles, or re-hashes the corpus. Results are row-identical to
-    the inline operator (same planes, same dedup, same exact-cosine
-    rank; equality pinned in tests)."""
-    spark = emb.sparkSession
-    store = read_parquet(spark, index_path + "/buckets")
-    q = (
-        emb.filter(query_filter)
-        .withColumn("bkts", _band_buckets_expr("embedding", dim))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            l2_norm("embedding").alias("q_norm"),
-            F.posexplode("bkts").alias("q_band", "q_bucket"),
-        )
-    )
-    cand = (
-        store.join(
-            F.broadcast(q),
-            (F.col("band") == F.col("q_band"))
-            & (F.col("bucket") == F.col("q_bucket"))
-            & (F.col("query_id") != F.col("vec_id")),
-        )
-        .select("query_id", "q_emb", "q_norm", "vec_id", "embedding", "nrm")
-        # one exchange serves pair-dedup AND the rank window (the
-        # inline operator's shared-shuffle discipline)
-        .repartition("query_id")
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.withColumn(
-        "cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("nrm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    deterministic projection); the broadcast equi-join on the
+    partition columns (band, bucket) then triggers Spark's DYNAMIC
+    partition pruning — the executed plan's ``PartitionFilters``
+    carries ``dynamicpruningexpression(band IN ...)`` (pinned in
+    tests/test_similarity.py), so the store scan reads only the probed
+    directories with NO driver-side probe collect (one fewer job than
+    an explicit isin-filter, and the probe set never leaves the JVM).
+    At 100 TB no serving stage scans, shuffles, or re-hashes the
+    corpus. Results are row-identical to the inline operator (same
+    planes, same probe; equality pinned in tests)."""
+    store = read_parquet(emb.sparkSession, index_path + "/buckets")
+    return _lsh_probe(store, _lsh_rows(emb.filter(query_filter), dim), k)
 
 
 IVF_K = 16  # coarse centroids
@@ -288,20 +263,18 @@ IVF_TRAIN_ITERS = 2  # Lloyd iterations over the seed centroids
 def _centroid_df(spark, cents: dict[int, list[float]]) -> DataFrame:
     """k-row centroid frame. The driver-side values ALSO ride the
     returned frame (``_pmrs_local_cents``, cid-ascending, with the
-    ``math.sqrt(_seq_dot)`` replica of l2_norm — bit-identical to the
-    c_nrm column) so ``_assign_to_centroids`` can take its zero-shuffle
-    Arrow path without ever re-collecting what the driver already
-    holds. Centroids are driver metadata BY DEFINITION (the Lloyd loop
-    materializes them between iterations), so this adds no job and no
-    new memory class."""
-    import math
-
+    ``fold_norms`` replica of l2_norm — bit-identical to the c_nrm
+    column) so ``_assign_to_centroids`` never re-collects what the
+    driver already holds. Centroids are driver metadata BY DEFINITION
+    (the Lloyd loop materializes them between iterations), so this
+    adds no job and no new memory class."""
     rows = [(cid, [float(x) for x in vec]) for cid, vec in sorted(cents.items())]
     df = local_frame(
         spark, rows, "centroid_id INT, c_emb ARRAY<DOUBLE>"
     ).withColumn("c_nrm", l2_norm("c_emb"))
+    nrms = fold_norms(np.array([vec for _, vec in rows], dtype=np.float64))
     df._pmrs_local_cents = [
-        (cid, vec, math.sqrt(_seq_dot(vec, vec))) for cid, vec in rows
+        (cid, vec, float(n)) for (cid, vec), n in zip(rows, nrms)
     ]
     return df
 
@@ -379,39 +352,34 @@ def _train_partials_fn(cent_rows):
 def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, nrm, centroid_id): nearest centroid by cosine.
 
-    When the centroid values ride the frame (every ``_centroid_df``
-    product — the Lloyd loop, the pretrained-sidecar memo, SemDeDup),
-    assignment is ONE Arrow hop per partition: zero shuffle, no k-fold
+    Assignment is ONE Arrow hop per partition: zero shuffle, no k-fold
     interpreted cosine per vector (r18 opt, guide §4.2 — the crossJoin
     form exploded every vector into k rows, paid k CodegenFallback
     dot folds, and re-collapsed them through a vec_id Exchange that
-    moved the full embedding arrays). Values bit-identical — see
-    ``_assign_fn``.
+    moved the full embedding arrays). Values bit-identical, ties to the
+    lowest centroid_id — see ``_assign_fn``.
 
-    Fallback (a centroid frame NOT built by ``_centroid_df``):
-    broadcast cross-join over k centroid rows + per-vector max_by — one
-    pass over the corpus, no shuffle of the big side. Ties break to the
-    lowest centroid_id in both forms.
+    The centroid values are the driver-side copy a ``_centroid_df``
+    frame carries (the Lloyd loop, the pretrained-sidecar memo,
+    SemDeDup); any other centroid frame, such as one read back from an
+    index, is collected once: k rows of dim doubles, driver metadata
+    by definition.
     """
     local = getattr(cents, "_pmrs_local_cents", None)
-    if local is not None:
-        # embedding/nrm pass through the batch untouched, so the output
-        # schema carries THEIR actual types (the store is float32).
-        in_types = dict(e.dtypes)
-        return e.select("vec_id", "embedding", "nrm").mapInArrow(
-            _assign_fn(local),
-            f"vec_id bigint, embedding {in_types['embedding']}, "
-            f"nrm {in_types['nrm']}, centroid_id int",
-        )
-    scored = e.crossJoin(F.broadcast(cents)).withColumn(
-        "c_cos", dot("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    )
-    return scored.groupBy("vec_id").agg(
-        F.first("embedding").alias("embedding"),
-        F.first("nrm").alias("nrm"),
-        F.max_by(
-            "centroid_id", F.struct(F.col("c_cos"), (-F.col("centroid_id")).alias("t"))
-        ).alias("centroid_id"),
+    if local is None:
+        local = [
+            tuple(r)
+            for r in cents.select("centroid_id", "c_emb", "c_nrm")
+            .orderBy("centroid_id")
+            .collect()
+        ]
+    # embedding/nrm pass through the batch untouched, so the output
+    # schema carries THEIR actual types (the store is float32).
+    in_types = dict(e.dtypes)
+    return e.select("vec_id", "embedding", "nrm").mapInArrow(
+        _assign_fn(local),
+        f"vec_id bigint, embedding {in_types['embedding']}, "
+        f"nrm {in_types['nrm']}, centroid_id int",
     )
 
 
@@ -481,6 +449,38 @@ def ivf_assignments(
     return _assign_to_centroids(e, cents)
 
 
+def _probe_centroids(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, q_emb, q_norm, centroid_id): each query's ``nprobe``
+    nearest centroids by cosine, ties to the lowest centroid_id. Scores
+    k × |Q| rows, so the centroid table broadcasts."""
+    scored = q.crossJoin(F.broadcast(cents)).withColumn(
+        "c_cos", dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_nrm"))
+    )
+    return _topk(scored, "c_cos", "centroid_id", nprobe, "rk").select(
+        "query_id", "q_emb", "q_norm", "centroid_id"
+    )
+
+
+def _driver_probes(q_mat, q_norms, cent_rows, nprobe: int) -> list[list[int]]:
+    """``_probe_centroids`` for a query batch already on the driver:
+    per query vector in ``q_mat`` (L2 norms ``q_norms``), the ids of
+    the ``nprobe`` centroid rows with the highest ``fold_dot / (q_norm
+    * c_nrm)`` cosines, ties to the lowest id. ``fold_dot`` is the
+    ``dot`` fold, so these are the rows the window keeps.
+
+    Zero-norm guard: the Spark form raises DIVIDE_BY_ZERO (ANSI) and
+    numpy would sort NaN, so a zero norm product scores below every
+    real cosine; an all-zero query probes the lowest centroid ids."""
+    cids = np.array([c.centroid_id for c in cent_rows], dtype=np.int64)
+    cmat = np.array([c.c_emb for c in cent_rows], dtype=np.float64)
+    cnrm = np.array([c.c_nrm for c in cent_rows], dtype=np.float64)
+    q = np.array(q_mat, dtype=np.float64).reshape(-1, cmat.shape[1])
+    denom = np.array(q_norms, dtype=np.float64)[:, None] * cnrm[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        key = np.where(denom != 0, -(fold_dot(q, cmat) / denom), np.inf)
+    return [cids[np.lexsort((cids, row))][:nprobe].tolist() for row in key]
+
+
 def ivf_ann_topk(
     emb: DataFrame,
     query_filter: F.Column,
@@ -510,18 +510,8 @@ def ivf_ann_topk(
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_norm"),
     )
-    # nprobe best centroids per query (k × |q| rows — small)
-    q_cents = q.crossJoin(F.broadcast(cents)).withColumn(
-        "c_cos", dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_nrm"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("centroid_id"))
-    probes = (
-        q_cents.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", "q_emb", "q_norm", "centroid_id")
-    )
     a = assigned.alias("a")
-    p = probes.alias("p")
+    p = _probe_centroids(q, cents, nprobe).alias("p")
     cand = a.join(
         F.broadcast(p),
         (F.col("a.centroid_id") == F.col("p.centroid_id"))
@@ -535,12 +525,7 @@ def ivf_ann_topk(
         F.col("a.nrm").alias("nrm"),
     )
     scored = cand.withColumn("cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("nrm")))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _topk(scored, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 def label_lsh_neardup(emb: DataFrame, threshold: float = 0.9, dim: int = 64) -> DataFrame:
@@ -821,8 +806,6 @@ def two_stage_topk(
     probe selection), REFUSED loudly past QUERY_BATCH_CAP, and shipped
     as a broadcast instead of a task-closure capture once |Q| ≥
     GEMM_BROADCAST_MIN_Q (r18, VERDICT r17 task 2)."""
-    import numpy as np
-
     codes, scale = _int8_code_exprs()
     qz = emb.select("vec_id", codes.alias("codes"), scale.alias("scale"))
     qrows = _collect_query_batch(qz.filter(query_filter), "two_stage_topk")
@@ -839,29 +822,8 @@ def two_stage_topk(
     m = k * overfetch
     score = _gemm_shortlist_fn(payload, m)
     cand = qz.mapInArrow(score, "query_id long, vec_id long, approx double")
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    shortlist = (
-        cand.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= m)
-        .select("query_id", "vec_id")
-    )
-    qe = emb.filter(query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
-    )
-    ce = emb.select("vec_id", "embedding", l2_norm("embedding").alias("c_norm"))
-    re = (
-        F.broadcast(shortlist).join(ce, "vec_id")
-        .join(F.broadcast(qe), "query_id")
-        .withColumn("cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("c_norm")))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    shortlist = _topk(cand, "approx", "vec_id", m, "rn").select("query_id", "vec_id")
+    return _exact_rerank(emb, query_filter, shortlist, k)
 
 
 def two_stage_ivf_topk(
@@ -906,15 +868,7 @@ def two_stage_ivf_topk(
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_norm"),
     )
-    q_cents = q.crossJoin(F.broadcast(cents)).withColumn(
-        "c_cos", dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_nrm"))
-    )
-    w0 = Window.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("centroid_id"))
-    probes = (
-        q_cents.withColumn("rk", F.row_number().over(w0))
-        .filter(F.col("rk") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
+    probes = _probe_centroids(q, cents, nprobe).select("query_id", "centroid_id")
     # (query_id, centroid_id, q_codes, q_scale): |Q| * nprobe rows, each
     # carrying its query's codes — broadcast-sized. Joining THIS on
     # centroid_id is a hash equi-join: every corpus row does one O(1)
@@ -932,38 +886,13 @@ def two_stage_ivf_topk(
         ),
         "query_id",
     )
-    dotint = F.aggregate(
-        F.zip_with("codes", "q_codes", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     s1 = (
         qz.join(F.broadcast(probe_q), "centroid_id")
         .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("approx", dotint.cast("double") * F.col("scale") * F.col("q_scale"))
+        .withColumn("approx", _int8_approx())
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    shortlist = (
-        s1.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k * overfetch)
-        .select("query_id", "vec_id")
-    )
-    ce = emb.select("vec_id", "embedding", l2_norm("embedding").alias("c_norm"))
-    re = (
-        F.broadcast(shortlist).join(ce, "vec_id")
-        .join(
-            F.broadcast(q.select("query_id", "q_emb", "q_norm")), "query_id"
-        )
-        .withColumn(
-            "cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("c_norm"))
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    shortlist = _topk(s1, "approx", "vec_id", k * overfetch, "rn").select("query_id", "vec_id")
+    return _exact_rerank(emb, query_filter, shortlist, k)
 
 
 def _int8_code_exprs() -> tuple[F.Column, F.Column]:
@@ -977,6 +906,47 @@ def _int8_code_exprs() -> tuple[F.Column, F.Column]:
     codes = F.transform(x, lambda v: F.round(v * 127.0 / safe).cast("long"))
     scale = F.round(safe / 127.0, 10)
     return codes, scale
+
+
+def _int8_approx() -> F.Column:
+    """Stage-1 score of a code row against a query's (q_codes, q_scale):
+    the integer code dot (exact in a long) times both scales,
+    left-associated as the GEMM kernel applies them."""
+    dotint = F.aggregate(
+        F.zip_with("codes", "q_codes", lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return dotint.cast("double") * F.col("scale") * F.col("q_scale")
+
+
+def _exact_rerank(
+    emb: DataFrame, query_filter: F.Column, shortlist: DataFrame, k: int
+) -> DataFrame:
+    """Stage 2 of the ``two_stage_*`` operators: full-precision vectors
+    for the (query_id, vec_id) shortlist only, re-ranked by exact
+    cosine. The shortlist and the query batch are query-batch-bounded,
+    so both broadcast and the corpus streams through the fetch.
+
+    ``try_divide``: a pair with a zero-norm side scores NULL (ranked
+    last, ties by vec_id) where ``/`` raises DIVIDE_BY_ZERO under ANSI,
+    so an all-zero query completes with the probes its zero-norm guard
+    gave it."""
+    qe = emb.filter(query_filter).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        l2_norm("embedding").alias("q_norm"),
+    )
+    ce = emb.select("vec_id", "embedding", l2_norm("embedding").alias("c_norm"))
+    re = (
+        F.broadcast(shortlist).join(ce, "vec_id")
+        .join(F.broadcast(qe), "query_id")
+        .withColumn(
+            "cos",
+            F.try_divide(dot("q_emb", "embedding"), F.col("q_norm") * F.col("c_norm")),
+        )
+    )
+    return _topk(re, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 def write_ivf_index(
@@ -1030,47 +1000,25 @@ def two_stage_ivf_topk_indexed(
     spark = emb.sparkSession
     cents = read_parquet(spark, index_path + "/centroids")
     store = read_parquet(spark, index_path + "/codes")
-    q = emb.filter(query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
-    )
-    # Probe selection on the DRIVER (r17 opt — the ivfpq_probe_table
-    # discipline applied here): queries and the k-row centroid table
-    # are both bounded metadata, and the old crossJoin+window probes
-    # subplan was referenced TWICE (the probed-ids collect AND the
-    # probe_q join re-expanded it in the final plan). The sequential
-    # _seq_dot fold + math.sqrt replicate l2_norm/dot bit-for-bit, so
-    # the (-cos, centroid_id) sort selects exactly the rows the
-    # row_number window did. Saves one crossJoin+window job and the
-    # in-plan re-expansion (~0.68 s of the 2.28 s warm wall at sf0.1).
-    import math
-
+    # Probe selection on the DRIVER (r17 opt): queries and the k-row
+    # centroid table are both bounded metadata, and the old
+    # crossJoin+window probes subplan was referenced TWICE (the
+    # probed-ids collect AND the probe_q join re-expanded it in the
+    # final plan). Saves one crossJoin+window job and the in-plan
+    # re-expansion (~0.68 s of the 2.28 s warm wall at sf0.1).
     qrows = _collect_query_batch(
-        emb.filter(query_filter).select("vec_id", "embedding"),
+        emb.filter(query_filter).select(
+            "vec_id", "embedding", l2_norm("embedding").alias("q_norm")
+        ),
         "two_stage_ivf_topk_indexed probe selection",
     )
-    crows = [
-        (int(c.centroid_id), [float(v) for v in c.c_emb], float(c.c_nrm))
-        for c in cents.collect()
-    ]
-    probe_pairs = []
-    for r in qrows:
-        qe = [float(v) for v in r["embedding"]]
-        qn = math.sqrt(_seq_dot(qe, qe))
-        # Zero-norm guard (ADVICE r17): the replaced Spark expression
-        # degraded to NaN/Inf cosines and completed; Python would raise
-        # ZeroDivisionError and sorted() has no NaN order. Score such
-        # rows -inf (never probed / probes the lowest centroid ids
-        # deterministically) instead of crashing the build.
-        scored = sorted(
-            (
-                -(_seq_dot(qe, ce) / (qn * cn)) if qn * cn != 0 else math.inf,
-                cid,
-            )
-            for cid, ce, cn in crows
-        )[:nprobe]
-        probe_pairs.extend((r["vec_id"], cid) for _, cid in scored)
+    picks = _driver_probes(
+        [r["embedding"] for r in qrows],
+        [r["q_norm"] for r in qrows],
+        cents.collect(),
+        nprobe,
+    )
+    probe_pairs = [(r["vec_id"], cid) for r, cids in zip(qrows, picks) for cid in cids]
     probes = local_frame(spark, probe_pairs, "query_id BIGINT, centroid_id INT")
     probed_ids = sorted({cid for _, cid in probe_pairs})
     codes, scale = _int8_code_exprs()
@@ -1082,37 +1030,14 @@ def two_stage_ivf_topk_indexed(
         ),
         "query_id",
     )
-    dotint = F.aggregate(
-        F.zip_with("codes", "q_codes", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     s1 = (
         store.filter(F.col("centroid_id").isin(probed_ids))
         .join(F.broadcast(probe_q), "centroid_id")
         .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("approx", dotint.cast("double") * F.col("scale") * F.col("q_scale"))
+        .withColumn("approx", _int8_approx())
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    shortlist = (
-        s1.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k * overfetch)
-        .select("query_id", "vec_id")
-    )
-    ce = emb.select("vec_id", "embedding", l2_norm("embedding").alias("c_norm"))
-    re = (
-        F.broadcast(shortlist).join(ce, "vec_id")
-        .join(F.broadcast(q.select("query_id", "q_emb", "q_norm")), "query_id")
-        .withColumn(
-            "cos", dot("q_emb", "embedding") / (F.col("q_norm") * F.col("c_norm"))
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    shortlist = _topk(s1, "approx", "vec_id", k * overfetch, "rn").select("query_id", "vec_id")
+    return _exact_rerank(emb, query_filter, shortlist, k)
 
 
 SEMDEDUP_THRESHOLD = 0.95
@@ -1334,10 +1259,7 @@ def _pq_encode_kernel(books: list[list[list[float]]]):
                 continue
             vec_ids = batch.column("vec_id").to_numpy()
             x = embedding_matrix(batch.column("embedding"))
-            acc = np.zeros(n)
-            for i in range(x.shape[1]):  # sequential: matches the fold
-                acc = acc + x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
+            nrm = fold_norms(x)
             safe = np.where(nrm > 0, nrm, 1.0)
             xn = x / safe[:, None]
             codes = np.empty((n, m), dtype=np.int32)
@@ -1378,6 +1300,32 @@ def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInArrow(
         _pq_encode_kernel(books), "vec_id bigint, codes array<int>"
     )
+
+
+def _query_luts(q_nembs, books: list[list[list[float]]]) -> list:
+    """Per normalized query vector, its ADC lookup table lut[s][j] =
+    q_s · c_{s,j} (m lists of k doubles), each dot the ``fold_dot`` —
+    bit-identical to ``pq_adc_scores``'s expression-built table."""
+    subdim = len(books[0][0])
+    per_sub = [
+        fold_dot(
+            np.array(
+                [v[s * subdim : (s + 1) * subdim] for v in q_nembs], dtype=np.float64
+            ).reshape(-1, subdim),
+            np.array(book, dtype=np.float64),
+        ).tolist()
+        for s, book in enumerate(books)
+    ]
+    return [[sub[i] for sub in per_sub] for i in range(len(q_nembs))]
+
+
+def _adc_expr(m: int) -> F.Column:
+    """ADC score Σ_s lut[s][code_s]: m array lookups per (code row,
+    query) pair, summed in subspace order."""
+    adc = F.lit(0.0)
+    for s in range(m):
+        adc = adc + F.element_at(F.col("lut")[s], F.col("codes")[s] + 1)
+    return adc
 
 
 def pq_adc_scores(
@@ -1423,14 +1371,23 @@ def pq_adc_scores(
         F.col("nemb").alias("q_nemb"),
         lut.alias("lut"),
     )
-    adc = F.lit(0.0)
-    for s in range(m):
-        adc = adc + F.element_at(
-            F.col("lut")[s], F.col("codes")[s] + 1
-        )
     return codes_df.join(
         F.broadcast(q), F.col("query_id") != F.col("vec_id")
-    ).withColumn("adc", adc)
+    ).withColumn("adc", _adc_expr(m))
+
+
+def _nemb_rerank(short: DataFrame, e: DataFrame, qn: DataFrame, k: int) -> DataFrame:
+    """Stage 2 of ``pq_topk`` / ``pq_topk_indexed``: the (query_id,
+    vec_id) shortlist's normalized vectors ``e`` re-ranked by exact
+    cosine against the (query_id, qe) query vectors ``qn``."""
+    # broadcast the query-batch-bounded shortlist so the corpus side
+    # STREAMS (never shuffles/broadcasts) through the re-rank fetch
+    re_rank = (
+        F.broadcast(short).join(e, "vec_id")
+        .join(F.broadcast(qn), "query_id")
+        .withColumn("cos", dot("qe", "nemb"))
+    )
+    return _topk(re_rank, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 def pq_topk(
@@ -1452,28 +1409,11 @@ def pq_topk(
         books = train_pq_codebooks(emb)
     e = _normalized(emb)
     s1 = pq_adc_scores(emb, query_filter, books)
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    short = (
-        s1.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= shortlist_n)
-        .select("query_id", "vec_id")
-    )
+    short = _topk(s1, "adc", "vec_id", shortlist_n, "rn").select("query_id", "vec_id")
     qn = e.filter(query_filter).select(
         F.col("vec_id").alias("query_id"), F.col("nemb").alias("qe")
     )
-    # broadcast the query-batch-bounded shortlist so the corpus side
-    # STREAMS (never shuffles/broadcasts) through the re-rank fetch
-    re_rank = (
-        F.broadcast(short).join(e, "vec_id")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn("cos", dot("qe", "nemb"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re_rank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _nemb_rerank(short, e, qn, k)
 
 
 def write_ivfpq_index(
@@ -1522,35 +1462,20 @@ def ivfpq_probe_table(
 ):
     """(probe DataFrame, probed centroid ids): stage 0 of IVFPQ serving,
     entirely driver-side metadata — for each normalized query row, its
-    top-``nprobe`` coarse centroids by cosine (|q|=1, so cos = dot /
-    c_nrm; ties to the lowest centroid_id) and its per-subspace ADC
-    lookup table, as |Q| * nprobe rows. Callers serving a FIXED query
-    batch should build this once and ``localCheckpoint`` it — the
-    ~|Q| * m * k doubles otherwise re-cross the Py4J boundary on every
-    request (measured ~1 s per call at even a 40-query batch)."""
-    m = len(books)
-    subdim = len(books[0][0])
-    probe_rows = []
-    for r in qrows:
-        q_nemb = [float(v) for v in r["nemb"]]
-        scored = sorted(
-            (
-                (
-                    -(_seq_dot(q_nemb, [float(v) for v in c.c_emb]) / float(c.c_nrm)),
-                    c.centroid_id,
-                )
-                for c in cent_rows
-            ),
-        )[:nprobe]
-        lut = [
-            [
-                _seq_dot(q_nemb[s * subdim : (s + 1) * subdim], cent)
-                for cent in books[s]
-            ]
-            for s in range(m)
-        ]
-        for _, cid in scored:
-            probe_rows.append((r["vec_id"], int(cid), q_nemb, lut))
+    top-``nprobe`` coarse centroids by cosine (``_driver_probes`` with
+    unit query norms: |q|=1, so cos = dot / c_nrm) and its
+    per-subspace ADC lookup table (``_query_luts``), as |Q| * nprobe
+    rows. Callers serving a FIXED query batch should build this once
+    and ``localCheckpoint`` it — the ~|Q| * m * k doubles otherwise
+    re-cross the Py4J boundary on every request (measured ~1 s per
+    call at even a 40-query batch)."""
+    q_nembs = [[float(v) for v in r["nemb"]] for r in qrows]
+    picks = _driver_probes(q_nembs, np.ones(len(qrows)), cent_rows, nprobe)
+    probe_rows = [
+        (r["vec_id"], cid, q_nemb, lut)
+        for r, q_nemb, lut, cids in zip(qrows, q_nembs, _query_luts(q_nembs, books), picks)
+        for cid in cids
+    ]
     probed_ids = sorted({cid for _, cid, _, _ in probe_rows})
     q = local_frame(
         spark,
@@ -1578,8 +1503,7 @@ def ivfpq_topk(
     Stage 0 (driver, metadata-sized): the broadcast-sized query batch
     picks its top-``nprobe`` coarse centroids by cosine (k x dim
     centroid table and |Q| queries are both driver metadata — the same
-    class as the PQ lookup tables, computed with the same sequential
-    fold as every other driver-side replica).
+    class as the PQ lookup tables; ``ivfpq_probe_table``).
     Stage 1 (pruned ADC scan): the union of probed centroid ids is
     applied as an ``isin`` PARTITION filter on the code store — the
     scan itself reads only nprobe partitions per query batch
@@ -1602,7 +1526,6 @@ def ivfpq_topk(
     it is the approximate trade: vectors whose coarse cell the query
     does not probe are invisible (recall floor pinned in tests)."""
     spark = emb.sparkSession
-    m = len(books)
     store = read_parquet(spark, index_path + "/codes")
     if probe is not None:
         q, probed_ids = probe
@@ -1614,23 +1537,19 @@ def ivfpq_topk(
         qrows = (
             collected_queries
             if collected_queries is not None
-            else _normalized(emb).filter(query_filter).collect()
+            else _collect_query_batch(
+                _normalized(emb).filter(query_filter), "ivfpq_topk probe selection"
+            )
         )
         q, probed_ids = ivfpq_probe_table(spark, qrows, cent_rows, books, nprobe)
-    adc = F.lit(0.0)
-    for s in range(m):
-        adc = adc + F.element_at(F.col("lut")[s], F.col("codes")[s] + 1)
     s1 = (
         store.filter(F.col("centroid_id").isin(probed_ids))
         .join(F.broadcast(q), "centroid_id")
         .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("adc", adc)
+        .withColumn("adc", _adc_expr(len(books)))
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    short = (
-        s1.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= shortlist_n)
-        .select("query_id", "vec_id", F.col("q_nemb").alias("qe"))
+    short = _topk(s1, "adc", "vec_id", shortlist_n, "rn").select(
+        "query_id", "vec_id", F.col("q_nemb").alias("qe")
     )
     vecs = read_parquet(spark, index_path + "/vectors").filter(
         F.col("centroid_id").isin(probed_ids)
@@ -1638,23 +1557,7 @@ def ivfpq_topk(
     re_rank = F.broadcast(short).join(vecs, "vec_id").withColumn(
         "cos", dot("qe", "nemb")
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re_rank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
-
-
-def _seq_dot(a: list[float], b: list[float]) -> float:
-    """Sequential left-fold dot — matches the zip_with/aggregate
-    expression's evaluation order exactly (no pairwise/SIMD
-    re-association), so driver-computed LUTs are bit-identical to
-    expression-computed ones."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
+    return _topk(re_rank, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 def write_pq_index(
@@ -1683,63 +1586,33 @@ def pq_topk_indexed(
     identical to the inline path (tests/test_similarity.py pins it) —
     only where the codes come from differs."""
     spark = emb.sparkSession
-    m = len(books)
-    subdim = len(books[0][0])
     codes_df = read_parquet(spark, index_path)
     e = _normalized(emb)
     # The query batch is the BROADCAST side by contract (|Q| small), so
-    # its ADC lookup tables are computed on the driver — |Q| * m * k
-    # values with the SAME sequential fold as the expression path
-    # (bit-identical scores, pinned by the indexed==inline test) —
-    # instead of shipping the m*k*subdim codebook literals into the
-    # plan, whose 2k-node expression tree dominated build+analysis
-    # time. The corpus side still only ever sees m array lookups/row.
+    # its ADC lookup tables are computed on the driver (``_query_luts``,
+    # bit-identical to the expression path's, pinned by the
+    # indexed==inline test) instead of shipping the m*k*subdim codebook
+    # literals into the plan, whose 2k-node expression tree dominated
+    # build+analysis time. The corpus side still only ever sees m array
+    # lookups/row.
     # callers serving a fixed query batch repeatedly pass the rows in
     # (registry memoizes them) so repeat runs skip the collect job
     qrows = (
         collected_queries
         if collected_queries is not None
-        else e.filter(query_filter).collect()
+        else _collect_query_batch(e.filter(query_filter), "pq_topk_indexed")
     )
-    lut_rows = []
-    for r in qrows:
-        q_nemb = [float(v) for v in r["nemb"]]
-        lut = [
-            [
-                _seq_dot(q_nemb[s * subdim : (s + 1) * subdim], cent)
-                for cent in books[s]
-            ]
-            for s in range(m)
-        ]
-        lut_rows.append((r["vec_id"], q_nemb, lut))
+    q_nembs = [[float(v) for v in r["nemb"]] for r in qrows]
     q = local_frame(
         spark,
-        lut_rows,
+        [
+            (r["vec_id"], q_nemb, lut)
+            for r, q_nemb, lut in zip(qrows, q_nembs, _query_luts(q_nembs, books))
+        ],
         "query_id BIGINT, q_nemb ARRAY<DOUBLE>, lut ARRAY<ARRAY<DOUBLE>>",
     )
-    adc = F.lit(0.0)
-    for s in range(m):
-        adc = adc + F.element_at(F.col("lut")[s], F.col("codes")[s] + 1)
     s1 = codes_df.join(
         F.broadcast(q.drop("q_nemb")), F.col("query_id") != F.col("vec_id")
-    ).withColumn("adc", adc)
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    short = (
-        s1.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= shortlist_n)
-        .select("query_id", "vec_id")
-    )
-    qn = q.select("query_id", F.col("q_nemb").alias("qe"))
-    # broadcast the query-batch-bounded shortlist so the corpus side
-    # STREAMS (never shuffles/broadcasts) through the re-rank fetch
-    re_rank = (
-        F.broadcast(short).join(e, "vec_id")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn("cos", dot("qe", "nemb"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        re_rank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    ).withColumn("adc", _adc_expr(len(books)))
+    short = _topk(s1, "adc", "vec_id", shortlist_n, "rn").select("query_id", "vec_id")
+    return _nemb_rerank(short, e, q.select("query_id", F.col("q_nemb").alias("qe")), k)

@@ -645,12 +645,116 @@ def test_query_batch_cap_refuses_corpus_scale_batch(spark, emb, monkeypatch):
         S.two_stage_topk(emb, F.lit(True), k=3)
 
 
-def test_query_batch_cap_refuses_indexed_probe_batch(spark, emb, tmp_path, monkeypatch):
-    monkeypatch.setattr(S, "QUERY_BATCH_CAP", 10)
-    path = str(tmp_path / "ivf_cap")
+@pytest.fixture(scope="module")
+def ivf_index(emb, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ivf") / "index")
     S.write_ivf_index(emb, path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "op", ["two_stage_ivf_topk_indexed", "pq_topk_indexed", "ivfpq_topk"]
+)
+def test_query_batch_cap_refuses_indexed_probe_batch(
+    spark, emb, pq_books, ivf_index, ivfpq_index, tmp_path, monkeypatch, op
+):
+    if op == "two_stage_ivf_topk_indexed":
+        path, books = ivf_index, ()
+    elif op == "pq_topk_indexed":
+        path, books = str(tmp_path / "pq_cap"), (pq_books,)
+        S.write_pq_index(emb, path, pq_books)
+    else:
+        path, books = ivfpq_index, (pq_books,)
+    monkeypatch.setattr(S, "QUERY_BATCH_CAP", 10)
     with pytest.raises(ValueError, match="QUERY_BATCH_CAP"):
-        S.two_stage_ivf_topk_indexed(emb, path, F.lit(True), k=3)
+        getattr(S, op)(emb, path, F.lit(True), *books, k=3)
+
+
+@pytest.mark.parametrize("op", ["two_stage_ivf_topk_indexed", "ivfpq_topk"])
+def test_zero_query_probes_lowest_centroids(
+    spark, emb, pq_books, ivf_index, ivfpq_index, op
+):
+    """Zero-norm guard of the driver-side probe pick: an all-zero query
+    vector scores below every real cosine, so it probes the nprobe
+    lowest centroid ids. Its batch completes, its rows are the lowest
+    vec_ids of those cells (every score ties), and the other queries'
+    rows are unchanged."""
+    qf = F.col("vec_id") % QUERY_FILTER_MOD == 0
+    zid = (emb.agg(F.max("vec_id")).first()[0] // QUERY_FILTER_MOD + 1) * QUERY_FILTER_MOD
+    zero = (
+        emb.limit(1)
+        .withColumn("vec_id", F.lit(zid).cast("bigint"))
+        .withColumn("embedding", F.transform("embedding", lambda v: F.lit(0.0).cast("float")))
+    )
+    if op == "two_stage_ivf_topk_indexed":
+        path = ivf_index
+
+        def run(e):
+            return S.two_stage_ivf_topk_indexed(e, path, qf, k=K).collect()
+    else:
+        path = ivfpq_index
+
+        def run(e):
+            return S.ivfpq_topk(e, path, qf, pq_books, k=K).collect()
+
+    got = run(emb.unionByName(zero))
+    assert {tuple(r) for r in got if r.query_id != zid} == {tuple(r) for r in run(emb)}
+    lowest = sorted(
+        r.centroid_id for r in spark.read.parquet(path + "/centroids").collect()
+    )[: S.IVF_NPROBE]
+    cells = sorted(
+        r.vec_id
+        for r in spark.read.parquet(path + "/codes")
+        .filter(F.col("centroid_id").isin(lowest))
+        .collect()
+    )
+    zero_rows = sorted((r for r in got if r.query_id == zid), key=lambda r: r.rank)
+    assert [r.vec_id for r in zero_rows] == cells[:K]
+
+
+def test_driver_probes_and_luts_match_in_plan_state(spark, emb, pq_books):
+    """The driver-side serving state is bit-identical to the in-plan
+    expressions it replaces: ``_driver_probes`` picks the
+    (query_id, centroid_id) pairs of ``_probe_centroids``' window,
+    ``fold_norms`` gives l2_norm's bits, and ``_query_luts`` gives the
+    bits of ``pq_adc_scores``' expression-built lookup tables."""
+    import numpy as np
+
+    from parallel_map_reduce_spark.functions.vector import l2_norm
+    from parallel_map_reduce_spark.kernels import fold_norms
+
+    def bits(x):
+        return np.array(x, dtype=np.float64).view(np.int64).tolist()
+
+    qf = F.col("vec_id") % QUERY_FILTER_MOD == 0
+    cents = S.train_ivf_centroids(emb, S.IVF_K)
+    q = emb.filter(qf).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        l2_norm("embedding").alias("q_norm"),
+    )
+    in_plan = {
+        (r.query_id, r.centroid_id)
+        for r in S._probe_centroids(q, cents, S.IVF_NPROBE).collect()
+    }
+    qrows = q.collect()
+    q_mat = np.array([r.q_emb for r in qrows], dtype=np.float64)
+    assert bits(fold_norms(q_mat)) == bits([r.q_norm for r in qrows])
+    picks = S._driver_probes(
+        q_mat, [r.q_norm for r in qrows], cents.collect(), S.IVF_NPROBE
+    )
+    driver = {(r.query_id, cid) for r, cids in zip(qrows, picks) for cid in cids}
+    assert driver == in_plan and len(driver) == len(qrows) * S.IVF_NPROBE
+
+    expr_luts = (
+        S.pq_adc_scores(emb, qf, pq_books)
+        .select("query_id", "q_nemb", "lut")
+        .dropDuplicates(["query_id"])
+        .collect()
+    )
+    assert expr_luts
+    luts = S._query_luts([list(r.q_nemb) for r in expr_luts], pq_books)
+    assert bits(luts) == bits([r.lut for r in expr_luts])
 
 
 def test_gemm_query_broadcast_path_is_bit_identical(spark, emb):
@@ -723,3 +827,66 @@ def test_assign_kernel_matches_crossjoin_form(spark, emb):
     k_rows = {r.vec_id: (tuple(r.embedding), r.nrm, r.centroid_id) for r in kernel.collect()}
     l_rows = {r.vec_id: (tuple(r.embedding), r.nrm, r.centroid_id) for r in legacy.collect()}
     assert k_rows == l_rows and len(k_rows) > 0
+
+
+def test_assign_reads_back_parquet_centroids(spark, emb, tmp_path):
+    """A centroid frame without the driver-side copy (here, read back
+    from parquet) is collected once and takes the same Arrow path: the
+    same assignments as the ``_centroid_df`` frame, no pair join."""
+    from parallel_map_reduce_spark.functions.vector import l2_norm
+
+    cents = S.train_ivf_centroids(emb, k=8, iters=1)
+    path = str(tmp_path / "cents")
+    cents.write.parquet(path)
+    read_back = spark.read.parquet(path)
+    assert not hasattr(read_back, "_pmrs_local_cents")
+    e = emb.select("vec_id", "embedding").withColumn("nrm", l2_norm("embedding"))
+    got_df = S._assign_to_centroids(e, read_back)
+    got = {(r.vec_id, r.nrm, r.centroid_id) for r in got_df.collect()}
+    want = {
+        (r.vec_id, r.nrm, r.centroid_id)
+        for r in S._assign_to_centroids(e, cents).collect()
+    }
+    assert got == want and len(got) == emb.count()
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "NestedLoopJoin" not in plan
+
+
+def test_ann_family_ranks_through_one_topk():
+    """The ANN family's "rank within query_id, keep <= n" window is
+    written once, in ``_topk``, and the scalar ``_seq_dot`` replica of
+    ``kernels.fold_dot`` stays deleted: a copy that comes back fails
+    here."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(S)
+    topk = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_topk"
+    )
+    body = ast.get_source_segment(src, topk)
+    outside = src.replace(body, "")
+    for needle in ('Window.partitionBy("query_id")', "row_number("):
+        assert needle in body
+        assert needle not in outside, needle
+    assert "def _seq_dot" not in src
+
+
+def test_driver_probes_rank_zero_norm_products_last():
+    """``_driver_probes``' zero-norm guard: a zero centroid never
+    outranks a real cosine, and an all-zero query (every product zero)
+    probes the lowest centroid ids."""
+    from pyspark.sql import Row
+
+    cents = [
+        Row(centroid_id=c, c_emb=v, c_nrm=n)
+        for c, v, n in [
+            (0, [0.0, 0.0], 0.0),
+            (1, [1.0, 0.0], 1.0),
+            (2, [-1.0, 0.0], 1.0),
+            (3, [0.0, 1.0], 1.0),
+        ]
+    ]
+    picks = S._driver_probes([[-1.0, 0.0], [0.0, 0.0]], [1.0, 0.0], cents, 3)
+    assert picks == [[2, 3, 1], [0, 1, 2]]
