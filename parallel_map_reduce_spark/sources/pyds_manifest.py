@@ -1,15 +1,15 @@
 """Spark 4 Python Data Source for the reference's manifest corpus.
 
 ``text_manifest.read_manifest_documents`` reproduces the reference's
-input model (1-based ids in manifest order, ``src/tema1.cpp:324-364``)
-by joining ``spark.read.text(wholetext=True)`` against a broadcast
-(path -> id) dim. This module is the SAME contract as a first-class
-source via the PySpark 4 DataSource API (SPARK-44076): the manifest is
-parsed once on the driver, each file becomes one ``InputPartition``
-carrying its manifest id, and executors read their files directly —
-ids are native to the partitioning (no join), reads stay distributed
-(one task per file, the reference's per-file mapper granularity), and
-the source composes with everything DataFrame
+input model (1-based ids in manifest order, ``src/tema1.cpp:324-364``);
+above its driver-read bound it joins ``spark.read.text(wholetext=True)``
+against a broadcast (path -> id) dim. This module is the SAME contract
+as a first-class source via the PySpark 4 DataSource API (SPARK-44076):
+the manifest is parsed once on the driver, each file becomes one
+``InputPartition`` carrying its manifest id, and executors read their
+files directly — ids are native to the partitioning (no join), reads
+stay distributed (one task per file, the reference's per-file mapper
+granularity), and the source composes with everything DataFrame
 (``spark.read.format("manifest_text")``).
 
 Scale note: same caveat as the join-based reader — whole-file rows are

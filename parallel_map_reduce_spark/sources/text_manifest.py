@@ -6,6 +6,20 @@ each file becomes one document row with a **1-based id in manifest
 order** (id assigned at ``src/tema1.cpp:353``, before any scheduling
 sort, so ids are stable regardless of parallelism).
 
+Two readers, one byte semantics. A manifest whose entries sum to at
+most ``inverted_index.SMALL_CORPUS_BYTES`` (32 MB, the bound the CLI's
+ordering already applies) is read on the driver, as the reference loads
+every file in one process: each distinct file is opened once in binary
+mode and the raw bytes reach the JVM as one Arrow ``LocalRelation``, with
+no file listing and no scan job. The driver holds that corpus plus its
+Arrow copy while the relation is built, and the relation for the life of
+the plan. Above the bound ``spark.read.text(wholetext=True)`` reads in
+the executors; the driver holds only the id table. Either way the JVM
+builds each row's string from the file's raw bytes (the text source's
+``UTF8String.fromBytes``, the driver side's BINARY -> STRING cast), so
+rows, ``length`` and ``octet_length`` agree on ill-formed UTF-8 too, and
+every manifest entry, an empty file's included, yields one row.
+
 At 100 TB you would not use whole-file text rows (a single giant file
 skews a partition); you'd land documents in parquet first. This source
 exists for parity with the reference's ingestion path and for small
@@ -24,7 +38,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from .catalog import local_frame
 
 # Serializes the parallelPartitionDiscovery.threshold set/restore in
-# read_manifest_documents (see there).
+# _build_manifest_documents (see there).
 _DISCOVERY_THRESHOLD_LOCK = threading.Lock()
 
 DOCUMENTS_SCHEMA = StructType(
@@ -48,18 +62,25 @@ def parse_manifest(manifest_path: str) -> list[str]:
     return [p if os.path.isabs(p) else os.path.join(base, p) for p in paths]
 
 
-def manifest_total_bytes(manifest_path: str) -> int:
-    """Total corpus size from driver-side stat metadata (one stat per
-    manifest entry — the same listing cost the scan pays anyway). Used
-    as the size hint for ``index_order_partitions``; missing files
-    count 0 and surface as scan errors later, not here."""
-    total = 0
-    for p in parse_manifest(manifest_path):
+def _file_sizes(paths: list[str]) -> dict[str, int | None]:
+    """One stat per distinct path: its size, or None if it is missing."""
+    sizes: dict[str, int | None] = {}
+    for p in dict.fromkeys(paths):
         try:
-            total += os.stat(p).st_size
+            sizes[p] = os.stat(p).st_size
         except OSError:
-            pass
-    return total
+            sizes[p] = None
+    return sizes
+
+
+def manifest_total_bytes(manifest_path: str) -> int:
+    """Total corpus size from driver-side stat metadata, summed per
+    manifest entry (a duplicate entry counts again). Used as the size
+    hint for ``index_order_partitions``; missing files count 0 and
+    surface as read errors later, not here."""
+    paths = parse_manifest(manifest_path)
+    sizes = _file_sizes(paths)
+    return sum(sizes[p] or 0 for p in paths)
 
 
 def _scan_paths(paths: list[str]) -> list[str]:
@@ -69,8 +90,8 @@ def _scan_paths(paths: list[str]) -> list[str]:
     thousands of explicit paths are each resolved/stat'ed individually
     (measured 5x slower at 2,840 files). Any extra files the directory
     holds (e.g. the manifest itself) produce rows whose path misses the
-    id map and are dropped by the same join/filter that drops
-    unmatched-URI rows, so both scan modes yield identical documents.
+    id map and are dropped by the id join, so both scan modes yield
+    identical documents.
     Callers dedupe their path list first (replication of duplicate
     manifest entries is the id JOIN's job, not the scan's); a list
     that still carries duplicates keeps the explicit form. Manifest files
@@ -126,20 +147,23 @@ _RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def read_manifest_documents(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """documents(doc_id BIGINT, text STRING) with 1-based manifest-order ids.
+    """documents(doc_id BIGINT, text STRING): one row per manifest entry,
+    with its 1-based manifest position as the id (never
+    ``monotonically_increasing_id``, which depends on partitioning — the
+    property the reference checker verifies).
 
-    Implementation: ``spark.read.text(path, wholetext=True)`` per file
-    keeps reading distributed (each file is one task); ids come from the
-    manifest position, not from ``monotonically_increasing_id`` (which is
-    partition-dependent and would not be stable across parallelism, the
-    exact property the reference checker verifies). An id table of at
-    most 1000 distinct path keys rides in the scan's projection as a map
-    literal; a larger one is built with ``local_frame`` and
-    broadcast-joined to the scan on the file path.
+    Entries summing to at most ``SMALL_CORPUS_BYTES`` (read at call
+    time) are read on the driver on every call; larger manifests are
+    scanned by ``spark.read.text`` and their plan is cached per
+    fingerprint (see ``_RELATION_CACHE``). A missing file raises,
+    naming its path, on both sides.
     """
+    from ..operators.inverted_index import SMALL_CORPUS_BYTES
     from .artifact_cache import source_key
 
     paths = parse_manifest(manifest_path)
+    if manifest_total_bytes(manifest_path) <= SMALL_CORPUS_BYTES:
+        return _driver_documents(spark, paths)
     fingerprint = source_key("manifest_docs", "/", [manifest_path] + paths)
     try:
         app_id = spark.sparkContext.applicationId
@@ -156,18 +180,30 @@ def read_manifest_documents(spark: SparkSession, manifest_path: str) -> DataFram
     return df
 
 
+def _driver_documents(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Each distinct file read once, as bytes; the JVM casts them to
+    STRING exactly as the text source builds its rows. Not cached:
+    there is no listing to reuse, and a cached frame would pin the
+    corpus."""
+    raw: dict[str, bytes] = {}
+    for p in paths:
+        if p not in raw:
+            with open(p, "rb") as fh:
+                raw[p] = fh.read()
+    rows = [(i + 1, raw[p]) for i, p in enumerate(paths)]
+    return local_frame(spark, rows, "doc_id BIGINT NOT NULL, raw BINARY").select(
+        "doc_id", F.col("raw").cast("string").alias("text")
+    )
+
+
 def _build_manifest_documents(
     spark: SparkSession, manifest_path: str, paths: list[str]
 ) -> DataFrame:
     if any(os.path.basename(p).startswith(("_", ".")) for p in paths):
         # Hadoop's hidden-file filter drops '_'/'.'-prefixed files from
-        # EVERY spark.read.text scan — explicit path lists included
-        # (verified under Spark 4.1, worse than the directory-mode-only
-        # drop the advisor flagged). The Python DataSource twin open()s
-        # files directly on executors (no Hadoop listing, same schema,
-        # same manifest-order ids — equality pinned in
-        # tests/test_sources_sinks.py), so such corpora serve through
-        # it instead of silently losing documents.
+        # EVERY spark.read.text scan, explicit path lists included. The
+        # Python DataSource twin open()s files on executors (no Hadoop
+        # listing, same schema and ids), so such corpora lose nothing.
         from . import pyds_manifest
 
         pyds_manifest.register(spark)
@@ -177,17 +213,12 @@ def _build_manifest_documents(
             .load()
         )
     # Map normalized absolute path (raw + URI-encoded forms) -> 1-based
-    # manifest id. A scanned row carries exactly ONE of the forms, so
-    # alias keys never double-match; duplicate manifest ENTRIES (same
-    # path, several ids) are legitimate replication — the file is
-    # SCANNED once (paths dedupe below; Spark's file scan yields one
-    # row per path LISTING, so an un-deduped duplicate would n^2 under
-    # the replicating join — advisor r9, pinned in
-    # tests/test_sources_sinks.py) and the id join fans the single row
-    # out to one row per manifest entry. Two DIFFERENT paths whose
-    # forms collide (a literal 'a%20b' file next to an 'a b' file)
-    # cannot be attributed unambiguously — fail loudly naming the key
-    # rather than mis-assign ids.
+    # manifest id. A scanned row carries exactly ONE of the forms. A
+    # duplicate manifest entry is SCANNED once (the file scan yields
+    # one row per path listing, so an un-deduped duplicate would n^2
+    # under the join) and the id join fans that row out to one row per
+    # entry. Two DIFFERENT paths whose forms collide (a literal 'a%20b'
+    # file next to an 'a b' file) cannot be attributed: fail loudly.
     id_map: list[tuple[str, int]] = []
     key_owner: dict[str, str] = {}
     for i, p in enumerate(paths):
@@ -203,20 +234,12 @@ def _build_manifest_documents(
     scan = _scan_paths(list(dict.fromkeys(paths)))
     # Above spark.sql.sources.parallelPartitionDiscovery.threshold
     # (default 32) paths, relation creation runs the file LISTING as a
-    # distributed Spark job — built for object-store layouts where
-    # driver-side listing crawls; for an explicit local-fs manifest it
-    # charges a whole job launch to stat a few hundred files (measured
-    # 1.37 s -> 0.17 s on the 355-file flagship corpus). Raise the
-    # threshold for THIS relation build only (listing happens eagerly
-    # inside read.text) and restore, so genuinely huge globbed reads
-    # elsewhere in the session keep the distributed path.
+    # Spark job: a whole job launch to stat local files (1.37 s -> 0.17 s
+    # at 355 files). Raise the threshold for THIS relation build only
+    # (listing happens eagerly inside read.text) and restore it; the
+    # process-wide lock keeps a concurrent manifest read on the same
+    # session from seeing or restoring the temporary value.
     _KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    # The set/restore is a session-GLOBAL conf mutation; a concurrent
-    # manifest read on another thread of the same session could observe
-    # the temporary value or have it restored mid-build (advisor r10).
-    # The process-wide lock serializes exactly this critical section —
-    # listing happens eagerly inside read.text, so the window is short;
-    # other session users are unaffected unless they read this conf.
     with _DISCOVERY_THRESHOLD_LOCK:
         old_thr = spark.conf.get(_KEY, None)
         spark.conf.set(_KEY, str(max(64, len(scan) + 1)))
@@ -236,52 +259,26 @@ def _build_manifest_documents(
                 spark.conf.unset(_KEY)
             else:
                 spark.conf.set(_KEY, old_thr)
-    if len(id_map) <= 1000 and len({p for p, _ in id_map}) == len(id_map):
-        # Small manifest (the parity corpora): the id table rides into
-        # the plan as a map literal — a scan-side projection with no
-        # broadcast exchange or join stage at all (same doc ids by
-        # construction). Against the Arrow-built join below, warm CLI
-        # runs on the 355-file flagship corpus cost the same, but the
-        # first run in a process pays the JVM's one-time Arrow set-up
-        # (~0.7 s cold, 4 interleaved pairs on a 4-vCPU VM), which a
-        # one-shot CLI run never amortizes. Built as ONE parsed SQL
-        # expression: create_map over 2n F.lit()
-        # columns pays 2n py4j round-trips (~0.4 s for 355 files,
-        # pure driver overhead re-paid on every plan build). Keys ride
-        # as decode(unhex('<hex>'),'UTF-8') — hex has NO SQL-literal
-        # meaning for ANY path byte (advisor r10: the previous
-        # hand-rolled quote/backslash escaper silently trusted every
-        # other character class), each key folds to a string constant
-        # (deterministic foldable children), so the whole map()
-        # constant-folds to one Literal exactly like before — and the
-        # hex form even parses faster (3.8 ms vs 10.3 ms at 355
-        # entries). F.lit(dict) would be cleaner still but raises
-        # UNSUPPORTED_FEATURE.LITERAL_TYPE on this PySpark build.
+    if len(id_map) <= 1000 and len({k for k, _ in id_map}) == len(id_map):
+        # The id table rides in the scan's projection as ONE parsed
+        # map(...) literal: no join stage, and no Arrow set-up, which
+        # the first Arrow table in a JVM pays (the join below cost
+        # 1.0-3.1 s more on a cold 700-file, 34 MB CLI run, 3/3 pairs).
+        # Keys are decode(unhex(<hex>)): no path byte has SQL meaning in
+        # hex. Rows whose path misses the map (a directory scan's extra
+        # files) are dropped, as the join drops them.
         mp = F.expr(
             "map("
-            + ",".join(
-                f"decode(unhex('{p.encode('utf-8').hex()}'),'UTF-8'),{i}"
-                for p, i in id_map
-            )
+            + ",".join(f"decode(unhex('{k.encode().hex()}'),'UTF-8'),{i}" for k, i in id_map)
             + ")"
         )
-        # Drop rows whose input_file_name() missed the map — with the
-        # _uri_keys aliases that is only directory-scan extras (e.g.
-        # the manifest file itself sitting in the scanned directory),
-        # never a manifest document: the join branch drops such rows
-        # via its inner join, and the two branches must have identical
-        # semantics — NULL doc_ids must never flow into downstream
-        # groupBys (advisor r7).
-        return raw.select(
-            mp[F.col("path")].cast("bigint").alias("doc_id"), "text"
-        ).filter(F.col("doc_id").isNotNull())
-    # Large (or pathological duplicate-path) manifests: a million-entry
-    # expression literal would bloat the plan — keep the id table as a
-    # small dim and broadcast-join it (no shuffle of text blobs either).
-    # It reaches the JVM as Arrow data, so the join runs no Python-worker
-    # job to unpickle it.
-    ids_df = local_frame(spark, id_map, "path STRING, doc_id BIGINT")
-    return (
-        raw.join(F.broadcast(ids_df), on="path", how="inner")
-        .select("doc_id", "text")
-    )
+        docs = raw.select(mp[F.col("path")].cast("bigint").alias("doc_id"), "text")
+        docs = docs.filter(F.col("doc_id").isNotNull())
+    else:
+        # The id table (never the text) is broadcast-joined to the scan.
+        ids_df = local_frame(spark, id_map, "path STRING, doc_id BIGINT")
+        docs = raw.join(F.broadcast(ids_df), on="path", how="inner").select("doc_id", "text")
+    # The file scan makes no split, hence no row, for an empty file.
+    sizes = _file_sizes(paths)
+    empty = [(i + 1, "") for i, p in enumerate(paths) if sizes[p] == 0]
+    return docs.unionByName(local_frame(spark, empty, DOCUMENTS_SCHEMA)) if empty else docs

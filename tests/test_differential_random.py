@@ -14,6 +14,7 @@ from __future__ import annotations
 import random
 
 import pyspark.sql.functions as F
+from manifest_sides import SIDES, on_sides
 
 SEED = 20260813
 
@@ -452,6 +453,7 @@ def test_repeated_substring_spans_match_python_replica(spark):
     assert got == want and len(want) > 10
 
 
+@on_sides(*SIDES)
 def test_manifest_reader_matches_python_reference(spark, tmp_path):
     """Seeded-random manifest corpora vs a trivial Python reference:
     random filenames drawn from a pool including URI-encoding hazards
