@@ -32,19 +32,22 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def double_array_sql(values) -> str:
-    """SQL text of an ``array(...)`` of exact DOUBLE literals.
+def double_sql(v) -> str:
+    """SQL text of one exact DOUBLE literal.
 
-    Each value is written ``repr(v) + "D"``: repr is the shortest
-    string that round-trips the float, and the ``D`` suffix makes the
-    parser read it as a DOUBLE, so the literal is bit-identical to
-    ``F.lit(float(v))``. One parsed ``F.expr`` replaces a py4j round
-    trip per element. Raises ValueError on NaN or infinity, which have
-    no numeric literal form."""
-    parts = []
-    for v in values:
-        v = float(v)
-        if not math.isfinite(v):
-            raise ValueError(f"double_array_sql: non-finite value {v!r}")
-        parts.append(repr(v) + "D")
-    return "array(" + ", ".join(parts) + ")"
+    The value is written ``repr(v) + "D"``: repr is the shortest string
+    that round-trips the float, and the ``D`` suffix makes the parser
+    read it as a DOUBLE, so the literal is bit-identical to
+    ``F.lit(float(v))``. Raises ValueError on NaN or infinity, which
+    have no numeric literal form."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"double_sql: non-finite value {v!r}")
+    return repr(v) + "D"
+
+
+def double_array_sql(values) -> str:
+    """SQL text of an ``array(...)`` of exact DOUBLE literals
+    (``double_sql`` each). One parsed ``F.expr`` replaces a py4j round
+    trip per element."""
+    return "array(" + ", ".join(double_sql(v) for v in values) + ")"

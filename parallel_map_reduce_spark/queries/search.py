@@ -175,7 +175,7 @@ SELECT query, doc_id, score, rank FROM (
     oracle=_bm25_multi_oracle(),
     doc=f"Multi-query BM25 top-{_MULTI_K} serving: a {len(BM25_QUERY_BATCH)}-"
     "query batch ranked from ONE statistics build — index-side tf/df/dl "
-    "computed once, the (query, word) batch broadcast in, so adding "
+    "computed once, the (word -> queries) batch a map literal, so adding "
     "queries never adds corpus passes (the retrieval-service shape; at "
     "100 TB the stats are the persisted index artifact). Per-term "
     "scores rounded to 8 dp and summed as DECIMAL (order-free — with "

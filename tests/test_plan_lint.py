@@ -74,8 +74,6 @@ CARTESIAN_OK = {
     "orders_priority_woe_iv": "report assembly: the 1-row totals and the "
     "1-row IV aggregate cross onto the |priorities|-row cell table; the "
     "only fact-table pass is the category groupBy",
-    "search_bm25_served": "1-row corpus (N, avgdl) aggregate broadcast "
-    "(same as search_bm25; dl read from the persisted index artifact)",
     "search_bm25_multi": "1-row corpus (N, avgdl) aggregate broadcast "
     "(same as search_bm25); every other join is a hash equi-join on "
     "word / doc_id",
@@ -120,7 +118,6 @@ SINGLE_PARTITION_OK = {
     "orders_priority_woe_iv": "1-row good/bad totals + the 1-row IV sum "
     "over the |priorities|-row cell table",
     "search_bm25_multi": "1-row corpus (N, avgdl) aggregate",
-    "search_bm25_served": "1-row corpus (N, avgdl) aggregate",
 }
 
 SKIP_PREFIX = "streaming_"  # live drains execute on build; covered elsewhere
