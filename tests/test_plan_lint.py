@@ -8,8 +8,11 @@ plan test.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from parallel_map_reduce_spark.queries import core
 from parallel_map_reduce_spark.registry import all_queries
 
 # name -> reason the pattern is intentional there
@@ -122,6 +125,16 @@ SINGLE_PARTITION_OK = {
 
 SKIP_PREFIX = "streaming_"  # live drains execute on build; covered elsewhere
 
+# manifest_inverted_index reads the reference checkout's 3-file
+# checker/test_small.txt fixture, of which the repo holds no copy, so it
+# is built and linted only where that file exists. The 355-chapter
+# entries (reference_corpus_index, text_line_repetition) are always
+# linted: _reference_corpus below points them at the real manifest when
+# it exists, else at a copy rebuilt from refdata/reference_corpus.parquet.
+NO_FIXTURE = (
+    set() if os.path.exists(core._SMALL_MANIFEST) else {"manifest_inverted_index"}
+)
+
 # Entries whose build() is INHERENTLY eager (registry.py laziness
 # contract): iterative fixpoints must run their supersteps to produce a
 # plan, guards must count to refuse, and driver-side k-row seeds/
@@ -169,11 +182,18 @@ EAGER_BUILD_OK = {
 }
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _reference_corpus(reference_manifest):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(core, "_REF_MANIFEST", reference_manifest)
+        yield
+
+
 @pytest.fixture(scope="module")
 def frames(spark, sf_dir):
     out = {}
     for name, spec in all_queries().items():
-        if name.startswith(SKIP_PREFIX):
+        if name.startswith(SKIP_PREFIX) or name in NO_FIXTURE:
             continue
         out[name] = spec.build(spark, sf_dir)
     return out
@@ -193,7 +213,11 @@ def test_build_launches_no_jobs(spark, sf_dir, frames):
     release_pins()
     offenders = {}
     for name, spec in all_queries().items():
-        if name.startswith(SKIP_PREFIX) or name in EAGER_BUILD_OK:
+        if (
+            name.startswith(SKIP_PREFIX)
+            or name in EAGER_BUILD_OK
+            or name in NO_FIXTURE
+        ):
             continue
         group = f"lint-lazy-{name}"
         sc.setJobGroup(group, name)

@@ -341,13 +341,17 @@ def test_line_repetition_signals_hand_computed(spark):
     assert r.dup_para_char_frac == 0.0
 
 
-def test_line_repetition_reference_corpus_nontrivial(spark, sf_dir):
+def test_line_repetition_reference_corpus_nontrivial(
+    spark, sf_dir, reference_manifest, monkeypatch
+):
     """The entry must not be vacuous: the reference corpus has real
     paragraph structure and at least some duplicated lines (chapter
-    headings, blank-trimmed runs)."""
-    from parallel_map_reduce_spark.queries.core import text_line_repetition
+    headings, blank-trimmed runs). The corpus is the real manifest where
+    it exists, else the committed copy (see ``reference_manifest``)."""
+    from parallel_map_reduce_spark.queries import core
 
-    rows = text_line_repetition(spark, sf_dir).collect()
+    monkeypatch.setattr(core, "_REF_MANIFEST", reference_manifest)
+    rows = core.text_line_repetition(spark, sf_dir).collect()
     assert len(rows) == 355
     assert sum(1 for r in rows if r.n_paragraphs > 1) > 200
     assert any(r.dup_line_frac > 0 for r in rows)

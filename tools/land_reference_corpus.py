@@ -12,7 +12,10 @@ the Spark manifest source it serves as the oracle for.
 Idempotent: re-run refreshes the parquet. The output is committed to the
 repo (the corpus is 6.4 MB of public-domain text; parquet is smaller) so
 the oracle works regardless of whether the driver's DuckDB pass runs
-before the Spark pass.
+before the Spark pass. Where the reference checkout is absent, the
+tests' ``reference_manifest`` fixture (``tests/conftest.py``) also
+rebuilds a stand-in manifest and its chapter files from this parquet,
+so re-landing it changes what those tests read.
 """
 
 from __future__ import annotations
