@@ -9,13 +9,19 @@ them exactly:
   bucket-join for candidate pairs. The banding join is the scale path:
   candidates come from equi-joins on (band, signature), never an O(n²)
   cross join. Public basis: Broder's minhash + LSH banding as used in
-  MapReduce entity-resolution literature (PAPERS.md, ICDE 2017).
+  MapReduce entity-resolution literature (PAPERS.md, ICDE 2017). One
+  core serves documents, increments and value domains alike: a wide
+  (key, m0..m15) signature row (the Arrow kernel for documents, one
+  JVM aggregate for char-shingled values), one band projection
+  (``_band_sigs``) and one (band, sig) equi-join (``_band_join``).
 - **SimHash**: 32-bit sign-of-weighted-bit-votes fingerprint; identical
   fingerprints = near-dup bucket.
 - **n-gram Jaccard**: exact Jaccard over 3-token shingles computed via an
   inverted-index self-join (pairs sharing a shingle), which is the
   standard similarity-join decomposition — work is proportional to
-  co-occurring shingles, not to the pair count.
+  co-occurring shingles, not to the pair count. One pair path: sized
+  (doc_id, shingle, n) rows in, the set sizes riding the rows, capped
+  (posting lists) or uncapped (equi-self-join).
 
 Scale notes: every op here keys its shuffles on content-derived hashes,
 which distribute uniformly; the one skew risk is ultra-frequent shingles
@@ -103,16 +109,6 @@ def _shingle_array_col(k: int) -> F.Column:
     return F.array_distinct(shingles)
 
 
-def _shingles_of_words(wa: DataFrame, k: int) -> DataFrame:
-    """(doc_id, shingle) from a (doc_id, words ARRAY<STRING>) frame:
-    the distinct-shingle array (``_shingle_array_col``) through a
-    single explode. A projection — no Exchange before the downstream
-    hash."""
-    return wa.select(
-        "doc_id", F.explode(_shingle_array_col(k)).alias("shingle")
-    )
-
-
 def _sized_shingles_of_words(wa: DataFrame, k: int) -> DataFrame:
     """(doc_id, shingle, n) where n = the document's DISTINCT-shingle
     count — the per-doc set size carried ON the exploded rows so no
@@ -184,33 +180,22 @@ def _sized_shingle_rows_fn(k: int):
 
 def doc_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, shingle) DISTINCT k-token shingles (space-joined),
-    ASCII contract tokens (clean_words_array). Array-native — see
-    _shingles_of_words."""
-    return _shingles_of_words(clean_words_array(docs), k)
-
-
-def unicode_doc_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, shingle) DISTINCT k-token shingles over UNICODE tokens
-    (the r14 UTF-8 contract: lower, split on runs of non-letters via
-    \\p{L} — operators/tokenize.py:unicode_tokenize's semantics in
-    array form, same zero-shuffle projection shape as the ASCII
-    path). This is how the dedup family meets real UTF-8 corpora:
-    shingling rides the Unicode tokenizer, everything downstream
-    (df caps, posting lists, jaccard arithmetic) is script-agnostic."""
-    from .tokenize import UNICODE_SPLIT_REGEX
-
-    words = F.filter(
-        F.split(F.lower(F.col("text")), UNICODE_SPLIT_REGEX),
-        lambda w: F.length(w) > 0,
+    ASCII contract tokens (clean_words_array): the distinct-shingle
+    array (``_shingle_array_col``) through a single explode. A
+    projection — no Exchange before the downstream hash."""
+    return clean_words_array(docs).select(
+        "doc_id", F.explode(_shingle_array_col(k)).alias("shingle")
     )
-    return _shingles_of_words(docs.select("doc_id", words.alias("words")), k)
 
 
 def unicode_doc_sized_shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, shingle, n) over UNICODE tokens — the sized form of
-    ``unicode_doc_shingles`` (see ``_sized_shingles_of_words``), so the
-    capped jaccard path needs no separate sizes pass for UTF-8 corpora
-    either."""
+    """(doc_id, shingle, n) DISTINCT k-token shingles over UNICODE
+    tokens (the r14 UTF-8 contract: lower, split on runs of non-letters
+    via \\p{L} — operators/tokenize.py:unicode_tokenize's semantics in
+    array form), sized like ``_sized_shingles_of_words``. This is how
+    the dedup family meets real UTF-8 corpora: shingling rides the
+    Unicode tokenizer, and the jaccard pair path (df caps, posting
+    lists, arithmetic) is script-agnostic."""
     from .tokenize import UNICODE_SPLIT_REGEX
 
     words = F.filter(
@@ -315,13 +300,30 @@ def _minhash_wide(docs: DataFrame) -> DataFrame:
     )
 
 
+def _minhash_agg(sh: DataFrame, key: str) -> DataFrame:
+    """(key, m0..m{N-1}) from (key, shingle) rows: md5-derived 32-bit
+    shingle hash, then the N affine mins as ONE wide aggregate keyed on
+    ``key`` — the JVM form of ``_minhash_wide``'s signature row, for
+    shingle sources the document kernel does not tokenize (char
+    3-grams of a value domain). A NULL shingle hashes to NULL, so its
+    mins are NULL."""
+    hashed = sh.select(key, md5_i32("shingle").alias("hv"))
+    return hashed.groupBy(key).agg(
+        *[
+            F.min((F.lit(a) * F.col("hv") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
+                f"m{j}"
+            )
+            for j, (a, b) in enumerate(MINHASH_SEEDS)
+        ]
+    )
+
+
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, j, minhash): N_HASHES-row signature per document.
 
     Shingle hash is md5-derived 32-bit; each hash family j applies
-    (a_j * h + b_j) mod P. The wide one-exchange aggregate
-    (_minhash_wide) unpivots to this row contract AFTER aggregation —
-    |docs|-sized, map-side only."""
+    (a_j * h + b_j) mod P. The wide signature row (_minhash_wide)
+    unpivots to this row contract — |docs|-sized, map-side only."""
     per_j = F.array(
         *[
             F.struct(
@@ -335,14 +337,10 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def lsh_band_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig): md5 over the band's ordered minhash values.
-
-    Derived straight from the wide signature row — each band's sig is
-    md5 of the comma-joined mins in j order, a pure projection, so the
-    whole derivation has exactly ONE exchange (the shingle groupBy; the
-    r11 form paid a second (doc_id, band)-keyed exchange to reassemble
-    bands from the unpivoted rows)."""
+def _band_sigs(wide: DataFrame, key: str) -> DataFrame:
+    """(key, band, sig) from a wide (key, m0..m{N-1}) signature row:
+    each band's sig is md5 of the ','-joined mins in j order (NULL
+    mins are skipped), a pure projection with no exchange of its own."""
     per_band = F.array(
         *[
             F.struct(
@@ -360,9 +358,35 @@ def lsh_band_signatures(docs: DataFrame) -> DataFrame:
             for band in range(N_BANDS)
         ]
     )
-    return _minhash_wide(docs).select(
-        "doc_id", F.explode(per_band).alias("s")
-    ).select("doc_id", F.col("s.band").alias("band"), F.col("s.sig").alias("sig"))
+    return wide.select(key, F.explode(per_band).alias("s")).select(
+        key, F.col("s.band").alias("band"), F.col("s.sig").alias("sig")
+    )
+
+
+def lsh_band_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, sig): md5 over the band's ordered minhash values,
+    projected straight from the document kernel's wide signature row,
+    so the whole derivation has zero exchanges."""
+    return _band_sigs(_minhash_wide(docs), "doc_id")
+
+
+def _band_join(
+    left: DataFrame, right: DataFrame, key: str, out: tuple[str, str], ordered: bool
+) -> DataFrame:
+    """DISTINCT (out[0], out[1]) key pairs whose (key, band, sig) rows
+    share a band bucket: the ONE (band, sig) equi-join of the LSH
+    family. ``ordered`` keeps only left key < right key — a self-join
+    then yields each unordered pair once and never pairs a key (or a
+    NULL) with itself."""
+    cond = (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig"))
+    if ordered:
+        cond = cond & (F.col(f"a.{key}") < F.col(f"b.{key}"))
+    return (
+        left.alias("a")
+        .join(right.alias("b"), cond)
+        .select(F.col(f"a.{key}").alias(out[0]), F.col(f"b.{key}").alias(out[1]))
+        .distinct()
+    )
 
 
 def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
@@ -380,18 +404,7 @@ def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     # signature computations per materialize (the executed plan showed
     # two MapInArrow nodes). One pinned computation feeds both sides.
     bands = pin(lsh_band_signatures(docs))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_join(bands, bands, "doc_id", ("doc_a", "doc_b"), ordered=True)
 
 
 # ---- SimHash ----
@@ -491,7 +504,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     df_cap: int | None = JACCARD_SHINGLE_DF_CAP,
-    shingles: DataFrame | None = None,
     sized_shingles: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard): Jaccard over 3-token shingle sets via
@@ -499,54 +511,38 @@ def ngram_jaccard_pairs(
     ever materialized). jaccard = |∩| / (|A| + |B| - |∩|) — pure integer
     arithmetic, so the double division is bit-identical in any engine.
 
+    One pair path over sized (doc_id, shingle, n) rows, n = the
+    document's DISTINCT-shingle count: the ASCII Arrow kernel
+    (``_sized_shingle_rows_fn``) by default, or ``sized_shingles``
+    (e.g. ``unicode_doc_sized_shingles`` for UTF-8 corpora) — the pair
+    machinery is script-agnostic. The set sizes ride the rows through
+    the pair shuffle (guide §2.3 — a few metadata bytes through the
+    one existing shuffle), so no separate sizes aggregation (a SECOND
+    full scan + tokenize of the corpus) and no size joins exist.
+
     100 TB note: one shingle shared by f documents contributes f² join
     rows, so corpus-hot shingles would dominate the self-join. The df cap
-    removes them from the JOIN ONLY (set sizes stay exact): the hot set
-    is tiny by construction, so it broadcasts into an anti-join — no
-    extra shuffle of the shingle stream.
+    removes them from the JOIN ONLY (set sizes stay exact).
 
     Capped (default): per-shingle posting list + in-row pair array,
     bounded at cap² per shingle. Uncapped (df_cap=None): distributed
     equi-self-join — no per-row f² array, so a hot shingle spreads over
     many tasks instead of OOMing one (used by the capped==uncapped
-    equivalence test; at corpus scale always pass a cap).
-
-    ``shingles`` overrides the default ASCII shingle source (e.g.
-    unicode_doc_shingles for UTF-8 corpora) — the pair machinery is
-    script-agnostic. ``sized_shingles`` is the (doc_id, shingle, n)
-    form (``_sized_shingles_of_words``) for the capped path, and ONLY
-    the capped path: passing it with ``df_cap=None`` or together with
-    ``shingles`` is refused loudly (ADVICE r17 — silently falling
-    through to the ASCII tokenizer would produce wrong Jaccard values
-    rather than an error).
+    equivalence tests; at corpus scale always pass a cap).
     """
-    if sized_shingles is not None and (df_cap is None or shingles is not None):
-        raise ValueError(
-            "ngram_jaccard_pairs: sized_shingles is only consumed by the "
-            "capped posting-list path — pass df_cap (and not shingles) "
-            "with it, or pass the row-form shingles override instead"
+    # Default ASCII source: the Arrow kernel (one Python hop at scan
+    # speed — see _sized_shingle_rows_fn) instead of the interpreted
+    # HOF pipeline; ~35% of the query's warm wall was the shingle
+    # projection.
+    sh = (
+        sized_shingles
+        if sized_shingles is not None
+        else docs.select("doc_id", "text").mapInArrow(
+            _sized_shingle_rows_fn(SHINGLE_K),
+            "doc_id bigint, shingle string, n int",
         )
-    # Capped path (r17 opt): the per-doc set size n rides the exploded
-    # shingle rows (guide §2.3 — a few metadata bytes through the one
-    # existing shuffle), so the old separate sizes aggregation — a
-    # SECOND full scan + tokenize of the corpus — and the two size
-    # joins at the tail disappear. Plan: 4 Exchanges + 2 joins → 2
-    # Exchanges + 0 joins; values identical (n is the same distinct
-    # count either way, jaccard arithmetic unchanged).
-    if df_cap is not None and shingles is None:
-        # Default ASCII source: the Arrow kernel (one Python hop at
-        # scan speed — see _sized_shingle_rows_fn) instead of the
-        # interpreted HOF pipeline; ~35% of the query's warm wall was
-        # the shingle projection. Explicit sized_shingles overrides
-        # (the unicode tokenizer) keep their JVM form.
-        sh = (
-            sized_shingles
-            if sized_shingles is not None
-            else docs.select("doc_id", "text").mapInArrow(
-                _sized_shingle_rows_fn(SHINGLE_K),
-                "doc_id bigint, shingle string, n int",
-            )
-        )
+    )
+    if df_cap is not None:
         # repartition-first: complete-mode aggregate after the exchange —
         # map-side partial collect_list has zero combine benefit on
         # distinct (shingle, doc_id) pairs and buffers each task's whole
@@ -572,43 +568,8 @@ def ngram_jaccard_pairs(
                 ),
             )
         )
-        inter = (
-            postings.select(F.explode(pair_arr).alias("p"))
-            .select("p.doc_a", "p.na", "p.doc_b", "p.nb")
-            # na/nb are functionally dependent on doc_a/doc_b — extra
-            # group keys, same groups, and the sizes arrive for free.
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(F.count("*").alias("inter"))
-        )
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-        return inter.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    if df_cap is not None:
-        # Capped with a row-form ``shingles`` override: posting-list
-        # formulation with the separate sizes aggregate (the override
-        # has no per-row size; callers pin the override so the two
-        # references share one computation).
-        postings = (
-            sh.repartition("shingle")
-            .groupBy("shingle")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        )
-        postings = postings.filter(F.size("ds") <= df_cap)
-        pair_arr = F.flatten(
-            F.transform(
-                F.col("ds"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
-        pairs = (
-            postings.select(F.explode(pair_arr).alias("p"))
-            .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        pairs = postings.select(F.explode(pair_arr).alias("p")).select(
+            "p.doc_a", "p.na", "p.doc_b", "p.nb"
         )
     else:
         # Uncapped: a corpus-hot shingle shared by f docs would build an
@@ -616,18 +577,17 @@ def ngram_jaccard_pairs(
         # a per-task OOM cliff. The equi-self-join spreads that f² work
         # across the cluster instead (AQE skew-split applies). Slower on
         # the average shingle, but it degrades instead of dying.
-        a = sh.select(F.col("shingle"), F.col("doc_id").alias("doc_a"))
-        b = sh.select(F.col("shingle"), F.col("doc_id").alias("doc_b"))
+        a = sh.select("shingle", F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+        b = sh.select("shingle", F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
         pairs = a.join(b, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
-    inter = pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    inter = (
+        # na/nb are functionally dependent on doc_a/doc_b — extra group
+        # keys, same groups, and the sizes arrive for free.
+        pairs.groupBy("doc_a", "doc_b", "na", "nb").agg(F.count("*").alias("inter"))
+    )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return inter.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -693,7 +653,9 @@ def connected_components(
     growing exponentially with iterations. Converges in diameter rounds;
     near-dup clusters are shallow (a dup cluster's diameter is the chain
     length of pairwise matches, almost always ≤ 3), so the fixpoint
-    check (one count per round) exits after 2-4 rounds. For adversarial
+    check (one count per round) exits after 2-4 rounds; a graph still
+    changing after ``max_iter`` rounds raises RuntimeError rather than
+    return unconverged labels. For adversarial
     diameters at 100 TB the alternating large-star/small-star scheme
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014 — PAPERS.md) converges in O(log d) rounds with the same
@@ -777,6 +739,13 @@ def connected_components(
         labels = new_labels.drop("chg")
         if not changed:
             break
+    else:
+        # Unconverged labels would silently split components: refuse.
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} propagation rounds (a component's "
+            "diameter exceeds max_iter); raise max_iter"
+        )
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -791,17 +760,8 @@ def incremental_lsh_matches_indexed(
     exchange and only the increment shuffles; per-run cost is
     O(|increment|) signature compute + the bucket join. Both inputs
     carry (doc_id, band, sig) = lsh_band_signatures output."""
-    return (
-        new_bands.alias("n")
-        .join(
-            corpus_bands.alias("c"),
-            (F.col("n.band") == F.col("c.band")) & (F.col("n.sig") == F.col("c.sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("corpus_doc"),
-        )
-        .distinct()
+    return _band_join(
+        new_bands, corpus_bands, "doc_id", ("new_doc", "corpus_doc"), ordered=False
     )
 
 
@@ -853,8 +813,8 @@ def fuzzy_value_pairs(
         raise ValueError(
             f"fuzzy_value_pairs: {n_vals} distinct values of {col!r} exceeds "
             f"max_values={max_values}; the |V|^2 levenshtein join is only for "
-            "vocabulary-sized domains — use char-shingle MinHash-LSH "
-            "(minhash_signatures + lsh_candidate_pairs) for large vocabularies"
+            "vocabulary-sized domains — use the char-shingle MinHash-LSH "
+            "path (fuzzy_value_pairs_lsh) for large vocabularies"
         )
     a, b = vals.alias("a"), vals.alias("b")
     return (
@@ -1018,10 +978,12 @@ def fuzzy_value_pairs_lsh(
     missed by every band is lost — the standard LSH trade; recall vs
     the exact |V|² baseline is pinned in tests/test_dedup.py).
 
-    Scale shape: shingling and hashing are projections; the only
-    exchanges are the per-(value, j) min partial agg and the band
-    equi-join. No distinct-count guard needed — nothing here is
-    quadratic in |V|."""
+    Scale shape: shingling and hashing are projections; the value
+    domain's distinct and the wide per-value min aggregate share ONE
+    value-keyed exchange, then the band equi-join. No distinct-count
+    guard needed — nothing here is quadratic in |V|. A NULL value
+    hashes to NULL mins and never pairs (the join keeps val_a <
+    val_b)."""
     vals = df.select(F.col(col).alias("v")).distinct()
     n_sh = F.length("v") - F.lit(2)
     grams = F.when(
@@ -1032,51 +994,9 @@ def fuzzy_value_pairs_lsh(
             )
         ),
     ).otherwise(F.array(F.col("v")))
-    sh = vals.select("v", F.explode(grams).alias("shingle")).withColumn(
-        "hv", md5_i32("shingle")
-    )
-    seeds = F.array(
-        *[
-            F.struct(F.lit(j).alias("j"), F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for j, (a, b) in enumerate(MINHASH_SEEDS)
-        ]
-    )
-    mh = (
-        sh.select("v", "hv", F.explode(seeds).alias("s"))
-        .select(
-            "v",
-            F.col("s.j").alias("j"),
-            ((F.col("s.a") * F.col("hv") + F.col("s.b")) % F.lit(MINHASH_PRIME)).alias("h"),
-        )
-        .groupBy("v", "j")
-        .agg(F.min("h").alias("minhash"))
-    )
-    bands = (
-        mh.withColumn("band", (F.col("j") / F.lit(ROWS_PER_BAND)).cast("int"))
-        .groupBy("v", "band")
-        .agg(
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct("j", "minhash"))),
-                        lambda s: s["minhash"].cast("string"),
-                    ),
-                    ",",
-                )
-            ).alias("sig")
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.v") < F.col("b.v")),
-        )
-        .select(F.col("a.v").alias("val_a"), F.col("b.v").alias("val_b"))
-        .distinct()
-    )
+    sh = vals.select("v", F.explode(grams).alias("shingle"))
+    bands = _band_sigs(_minhash_agg(sh, "v"), "v")
+    cand = _band_join(bands, bands, "v", ("val_a", "val_b"), ordered=True)
     return (
         cand.filter(F.abs(F.length("val_a") - F.length("val_b")) <= max_dist)
         .withColumn("dist", F.levenshtein("val_a", "val_b"))

@@ -6,12 +6,14 @@ and the oracle CTE live here ONCE so entries cannot silently diverge."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, read_parquet
+from ..sources.catalog import REFDATA_DIR, load_table, read_parquet
 
-HTML_FIXTURE_PARQUET = "/root/repo/refdata/html_fixture.parquet"
+HTML_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "html_fixture.parquet")
 
 # DuckDB CTE mirroring scoped_html_docs — interpolate as
 # f"WITH {HDOCS_CTE}, ..." and select from `hdocs`.

@@ -11,12 +11,14 @@ other under a future scoping change)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, read_parquet
+from ..sources.catalog import REFDATA_DIR, load_table, read_parquet
 
-UNICODE_FIXTURE_PARQUET = "/root/repo/refdata/unicode_fixture.parquet"
+UNICODE_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "unicode_fixture.parquet")
 
 # DuckDB CTE mirroring scoped_unicode_docs — interpolate as
 # f"WITH {UDOCS_CTE}, ..." and select from `udocs`.
@@ -43,7 +45,7 @@ def scoped_unicode_docs(
     ).select(*cols)
 
 
-NFC_FIXTURE_PARQUET = "/root/repo/refdata/nfc_fixture.parquet"
+NFC_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "nfc_fixture.parquet")
 
 # DuckDB CTE mirroring scoped_nfc_docs (r15 NFC contract —
 # tools/gen_nfc_fixture.py).

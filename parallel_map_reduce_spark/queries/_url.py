@@ -4,12 +4,14 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, read_parquet
+from ..sources.catalog import REFDATA_DIR, load_table, read_parquet
 
-URL_FIXTURE_PARQUET = "/root/repo/refdata/url_fixture.parquet"
+URL_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "url_fixture.parquet")
 
 # DuckDB CTE mirroring scoped_url_docs.
 UDOCS_URL_CTE = f"""urldocs AS (

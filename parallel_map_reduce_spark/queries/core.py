@@ -6,6 +6,8 @@ Each query has a DuckDB oracle built from the same tokenization contract
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -13,7 +15,7 @@ from ..operators.inverted_index import format_index_rows, inverted_index, rank_w
 from ..operators.tokenize import doc_word_pairs, filter_empty, normalize_tokens, tokenize
 from ..plans.flagship import flagship_inverted_index
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import REFDATA_DIR, load_table
 from ..sources.text_manifest import read_manifest_documents
 from ._sql import WORDS_CTE
 
@@ -162,7 +164,7 @@ _REF_MANIFEST = "/root/reference/checker/test.txt"
 # with 1-based MANIFEST-order ids — filename sort would misnumber
 # (chapter_10 < chapter_2 lexicographically), so the landing script
 # walks the manifest in Python, independent of the Spark source.
-_REF_CORPUS_PARQUET = "/root/repo/refdata/reference_corpus.parquet"
+_REF_CORPUS_PARQUET = os.path.join(REFDATA_DIR, "reference_corpus.parquet")
 
 
 @register(

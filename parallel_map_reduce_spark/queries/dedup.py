@@ -14,8 +14,9 @@ from ..registry import register
 from ..sources.catalog import load_table
 from ._sql import ORDERED_WORDS_CTE
 
-# md5-derived 32-bit int, DuckDB spelling (matches functions/hashing.md5_i32)
-_HV32 = "CAST(concat('0x', substr(md5({col}), 1, 8)) AS BIGINT)"
+# md5-derived 32-bit int, DuckDB spelling (matches functions/hashing.md5_i32,
+# NULL on NULL: ``||`` propagates NULL where concat() would not)
+_HV32 = "CAST('0x' || substr(md5({col}), 1, 8) AS BIGINT)"
 
 _SEEDS_VALUES = ",\n        ".join(
     f"({j}, {a}, {b})" for j, (a, b) in enumerate(D.MINHASH_SEEDS)
@@ -38,6 +39,47 @@ shingles AS (
 )
 
 
+def _minhash_ctes(key: str, source: str) -> str:
+    """hashed/seeds/mh/bands CTEs over ``source``'s (key, shingle) rows:
+    the ONE DuckDB mirror of the minhash signature (mh: key, j,
+    minhash) and its band projection (bands: key, band, sig — md5 of
+    the ','-joined mins in j order), for any key column and shingle
+    source."""
+    return f"""hashed AS (
+    SELECT {key}, {_HV32.format(col='shingle')} AS hv FROM {source}
+),
+seeds(j, a, b) AS (
+    VALUES {_SEEDS_VALUES}
+),
+mh AS (
+    SELECT h.{key}, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
+    FROM hashed h CROSS JOIN seeds s
+    GROUP BY h.{key}, s.j
+),
+bands AS (
+    SELECT {key}, (j // {D.ROWS_PER_BAND})::INT AS band,
+           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
+    FROM mh GROUP BY {key}, (j // {D.ROWS_PER_BAND})
+)"""
+
+
+def _band_join_sql(
+    key: str, left: str, right: str, out: tuple[str, str], ordered: bool
+) -> str:
+    """DISTINCT key pairs sharing a (band, sig) bucket — the oracle twin
+    of operators/dedup.py:_band_join (``ordered``: left key < right)."""
+    lt = f" AND a.{key} < b.{key}" if ordered else ""
+    return f"""SELECT DISTINCT a.{key} AS {out[0]}, b.{key} AS {out[1]}
+FROM {left} a JOIN {right} b
+  ON a.band = b.band AND a.sig = b.sig{lt}"""
+
+
+# The document band table (shingles → mh → bands), shared by every
+# document-LSH oracle below.
+_DOC_BANDS_CTES = f"""{_SHINGLES_CTE},
+{_minhash_ctes("doc_id", "shingles")}"""
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -57,16 +99,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_signatures",
     oracle=f"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-)
-SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-FROM hashed h CROSS JOIN seeds s
-GROUP BY h.doc_id, s.j
+WITH {_DOC_BANDS_CTES}
+SELECT doc_id, j, minhash FROM mh
 """,
     doc=f"MinHash signatures: {D.N_HASHES} hash families over distinct "
     f"{D.SHINGLE_K}-token shingles (Broder minhash; LSH input).",
@@ -77,28 +111,25 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Reusable CTE chain ending in lsh_pairs(doc_a < doc_b) — shared by the
-# pair query below and the near-dup triangle census in queries/graph.py.
-LSH_PAIRS_CTES = f"""{_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.doc_id, s.j
-),
-bands AS (
-    SELECT doc_id, (j // {D.ROWS_PER_BAND}) AS band,
-           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-    FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
-),
+# pair query below, the cluster oracles and the near-dup graph oracles
+# in queries/graph.py and queries/curation.py.
+LSH_PAIRS_CTES = f"""{_DOC_BANDS_CTES},
 lsh_pairs AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+{_band_join_sql("doc_id", "bands", "bands", ("doc_a", "doc_b"), True)}
+)"""
+
+# Transitive closure of the candidate graph (edges both ways) — the
+# connected-components oracle of dedup_clusters and dedup_cluster_keepers.
+_LSH_REACH_CTES = f"""{LSH_PAIRS_CTES},
+edges AS (
+    SELECT doc_a AS src, doc_b AS dst FROM lsh_pairs
+    UNION
+    SELECT doc_b AS src, doc_a AS dst FROM lsh_pairs
+),
+reach(src, dst) AS (
+    SELECT src, dst FROM edges
+    UNION
+    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
 )"""
 
 
@@ -219,38 +250,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters",
     oracle=f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.doc_id, s.j
-),
-bands AS (
-    SELECT doc_id, (j // {D.ROWS_PER_BAND}) AS band,
-           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-    FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
-),
-pairs AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM pairs
-    UNION
-    SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
+WITH RECURSIVE {_LSH_REACH_CTES}
 SELECT src AS doc_id,
        LEAST(src, MIN(dst))::BIGINT AS cluster_id
 FROM reach GROUP BY src
@@ -313,21 +313,8 @@ def ensure_corpus_band_table(spark: SparkSession, sf_dir: str) -> str:
 # signatures are deterministic md5 arithmetic, so the drained store
 # must hash-match this regardless of micro-batch boundaries.
 BAND_TABLE_ORACLE = f"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.doc_id, s.j
-)
-SELECT doc_id, (j // {D.ROWS_PER_BAND})::INT AS band,
-       md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
+WITH {_DOC_BANDS_CTES}
+SELECT doc_id, band, sig FROM bands
 """
 
 
@@ -339,23 +326,7 @@ FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
 # this one SQL is exactly the "append path equals a from-scratch
 # rebuild" proof the promotion lifecycle needs.
 _INCR_MATCH_ORACLE = f"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.doc_id, s.j
-),
-bands AS (
-    SELECT doc_id, (j // {D.ROWS_PER_BAND}) AS band,
-           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-    FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
-),
+WITH {_DOC_BANDS_CTES},
 new_bands AS (
     SELECT b.* FROM bands b JOIN documents d ON d.doc_id = b.doc_id
     WHERE d.source = '{INCR_SOURCE}'
@@ -364,9 +335,7 @@ corpus_bands AS (
     SELECT b.* FROM bands b JOIN documents d ON d.doc_id = b.doc_id
     WHERE d.source <> '{INCR_SOURCE}'
 )
-SELECT DISTINCT n.doc_id AS new_doc, c.doc_id AS corpus_doc
-FROM new_bands n JOIN corpus_bands c
-  ON n.band = c.band AND n.sig = c.sig
+{_band_join_sql("doc_id", "new_bands", "corpus_bands", ("new_doc", "corpus_doc"), False)}
 """
 
 
@@ -557,38 +526,7 @@ def part_name_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_keepers",
     oracle=f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-hashed AS (
-    SELECT doc_id, {_HV32.format(col='shingle')} AS hv FROM shingles
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.doc_id, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.doc_id, s.j
-),
-bands AS (
-    SELECT doc_id, (j // {D.ROWS_PER_BAND}) AS band,
-           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-    FROM mh GROUP BY doc_id, (j // {D.ROWS_PER_BAND})
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-),
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM cand
-    UNION
-    SELECT doc_b AS src, doc_a AS dst FROM cand
-),
-reach(src, dst) AS (
-    SELECT src, dst FROM edges
-    UNION
-    SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+WITH RECURSIVE {_LSH_REACH_CTES},
 clusters AS (
     SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
     FROM reach GROUP BY src
@@ -746,26 +684,9 @@ grams AS (
              ELSE [v] END) AS shingle
     FROM vals
 ),
-hashed AS (
-    SELECT v, {_HV32.format(col='shingle')} AS hv FROM grams
-),
-seeds(j, a, b) AS (
-    VALUES {_SEEDS_VALUES}
-),
-mh AS (
-    SELECT h.v, s.j, MIN((s.a * h.hv + s.b) % {D.MINHASH_PRIME}) AS minhash
-    FROM hashed h CROSS JOIN seeds s
-    GROUP BY h.v, s.j
-),
-bands AS (
-    SELECT v, (j // {D.ROWS_PER_BAND}) AS band,
-           md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS sig
-    FROM mh GROUP BY v, (j // {D.ROWS_PER_BAND})
-),
+{_minhash_ctes("v", "grams")},
 cand AS (
-    SELECT DISTINCT a.v AS val_a, b.v AS val_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.sig = b.sig AND a.v < b.v
+{_band_join_sql("v", "bands", "bands", ("val_a", "val_b"), True)}
 )
 SELECT val_a, val_b, levenshtein(val_a, val_b)::INT AS dist
 FROM cand
@@ -981,7 +902,7 @@ WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= {_JACCARD_THRESHOLD}
 """,
     doc="UNICODE near-dup pairs (r14 — dedup meets UTF-8): n-gram "
     "Jaccard over k-token shingles of UNICODE tokens "
-    "(operators/dedup.py:unicode_doc_shingles rides the r14 "
+    "(operators/dedup.py:unicode_doc_sized_shingles rides the r14 "
     "tokenization contract: lower, split on [^\\p{{L}}]+, all "
     "scripts) on the committed multi-script fixture; the pair "
     "machinery (posting lists, df cap, integer-exact jaccard) is the "

@@ -9,6 +9,8 @@ independent record of what was encoded.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,7 +22,7 @@ from ..multimodal.codec import (
     image_features_map,
 )
 from ..registry import register
-from ..sources.catalog import load_table, read_parquet
+from ..sources.catalog import REFDATA_DIR, load_table, read_parquet
 
 
 # Committed binary fixture of REAL image files (PNG/GIF/BMP/JPEG built
@@ -28,7 +30,7 @@ from ..sources.catalog import load_table, read_parquet
 # with the encode-time dimensions stored as exp_* columns. The Spark
 # side PARSES the bytes (multimodal/imagehdr.py); the oracle reads the
 # exp_* record of what was encoded — an independent check of the parse.
-_IMAGE_FIXTURE_PARQUET = "/root/repo/refdata/image_fixture.parquet"
+_IMAGE_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "image_fixture.parquet")
 
 
 def _image_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,7 +138,7 @@ def multimodal_image_resize_oriented(spark: SparkSession, sf_dir: str) -> DataFr
 # Committed WAV fixture — same discipline as the image fixture above:
 # real PCM files built by stdlib struct (tools/gen_audio_fixture.py),
 # encode-time parameters recorded as exp_* columns the oracle reads.
-_AUDIO_FIXTURE_PARQUET = "/root/repo/refdata/audio_fixture.parquet"
+_AUDIO_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "audio_fixture.parquet")
 
 
 @register(
@@ -212,8 +214,8 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Committed AVI fixture + the generator's sampled-frame expectation
 # table (byte offsets from the builder's serialization arithmetic,
 # pixel CRCs from the pattern formula — tools/gen_video_fixture.py).
-_VIDEO_FIXTURE_PARQUET = "/root/repo/refdata/video_fixture.parquet"
-_VIDEO_FRAMES_EXPECTED_PARQUET = "/root/repo/refdata/video_frames_expected.parquet"
+_VIDEO_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "video_fixture.parquet")
+_VIDEO_FRAMES_EXPECTED_PARQUET = os.path.join(REFDATA_DIR, "video_frames_expected.parquet")
 
 
 @register(

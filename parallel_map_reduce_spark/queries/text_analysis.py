@@ -3,12 +3,14 @@ constants as operators/text_analysis.py (stopword lists, regexes)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text_analysis as T
 from ..registry import pin, register
-from ..sources.catalog import load_table
+from ..sources.catalog import REFDATA_DIR, load_table
 from ._sql import ORDERED_WORDS_CTE
 
 _WORDS_TF_CTE = """
@@ -1104,7 +1106,7 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LANGID_FIXTURE_PARQUET = "/root/repo/refdata/langid_fixture.parquet"
+LANGID_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "langid_fixture.parquet")
 
 # DuckDB CTE mirroring the Spark-side scoping below.
 LDOCS_CTE = f"""ldocs AS (
@@ -1176,7 +1178,7 @@ def _lang_profiles_artifact(spark: SparkSession) -> str:
     from ..sources.catalog import read_parquet
 
     key = source_key(
-        "langid_profiles_v1", "/root/repo/refdata", "langid_fixture.parquet"
+        "langid_profiles_v1", REFDATA_DIR, "langid_fixture.parquet"
     )
 
     def build(tmp: str) -> None:

@@ -27,16 +27,18 @@ projection. Zero shuffles of record data at any corpus size.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.html_extract import html_extract_duckdb_expr, html_text_column
 from ..registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import REFDATA_DIR, load_table
 from ..sources.warc import read_warc
 
-WARC_FIXTURE_DIR = "/root/repo/refdata/warc"
-WARC_EXPECTED_PARQUET = "/root/repo/refdata/warc_expected.parquet"
+WARC_FIXTURE_DIR = os.path.join(REFDATA_DIR, "warc")
+WARC_EXPECTED_PARQUET = os.path.join(REFDATA_DIR, "warc_expected.parquet")
 
 # DuckDB CTE mirroring scoped_warc_records.
 WRECS_CTE = f"""wrecs AS (
@@ -433,7 +435,7 @@ def crawl_wet_to_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ROBOTS_FIXTURE_PARQUET = "/root/repo/refdata/robots_fixture.parquet"
+ROBOTS_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "robots_fixture.parquet")
 ROBOTS_AGENT = "sparkbot"
 
 # DuckDB CTE mirroring scoped_robots_docs.
@@ -599,8 +601,8 @@ def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SITEMAP_FIXTURE_PARQUET = "/root/repo/refdata/sitemap_fixture.parquet"
-SITEMAP_EXPECTED_PARQUET = "/root/repo/refdata/sitemap_expected.parquet"
+SITEMAP_FIXTURE_PARQUET = os.path.join(REFDATA_DIR, "sitemap_fixture.parquet")
+SITEMAP_EXPECTED_PARQUET = os.path.join(REFDATA_DIR, "sitemap_expected.parquet")
 
 # DuckDB CTE mirroring the host-block scoping below: the sitemap host
 # universe is the robots fixture's h{t}-{kb}.example grid, keyed by

@@ -28,6 +28,14 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The committed fixtures (``refdata/`` at the checkout root), located
+# from this package's own file so registry entries, streaming sources
+# and their oracles find them in a checkout at any path.
+REFDATA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "refdata",
+)
+
 # (abspath, mtime_ns, size) -> inferred StructType. Parquet schema
 # inference runs a one-task footer-read JOB per spark.read.parquet();
 # under the registry's plan-only build contract (registry.py) a query

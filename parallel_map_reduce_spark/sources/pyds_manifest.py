@@ -53,21 +53,26 @@ class ManifestTextReader(DataSourceReader):
         return [ManifestFilePartition(i + 1, p) for i, p in enumerate(paths)]
 
     def read(self, partition: ManifestFilePartition):
-        # Executor-side: whole-file read with the same UTF-8
-        # replacement semantics as spark.read.text.
-        with open(partition.path, encoding="utf-8", errors="replace") as fh:
+        # Executor-side: the file's raw bytes; the JVM builds the
+        # string (text_manifest.bytes_to_text).
+        with open(partition.path, "rb") as fh:
             yield (partition.doc_id, fh.read())
 
 
 class ManifestTextDataSource(DataSource):
-    """``spark.read.format("manifest_text").option("manifest", p).load()``"""
+    """``spark.read.format("manifest_text").option("manifest", p).load()``
+    yields (doc_id, raw BINARY) rows — each file's bytes, undecoded;
+    ``text_manifest.bytes_to_text`` makes them documents, so the JVM
+    decodes ill-formed UTF-8 exactly as ``spark.read.text`` does (a
+    Python ``errors="replace"`` decode turns an encoded surrogate into
+    three U+FFFD where the JVM puts one)."""
 
     @classmethod
     def name(cls) -> str:
         return "manifest_text"
 
     def schema(self) -> str:
-        return "doc_id bigint, text string"
+        return "doc_id bigint, raw binary"
 
     def reader(self, schema) -> DataSourceReader:
         return ManifestTextReader(self.options)
@@ -105,7 +110,7 @@ class ManifestTextStreamReader(SimpleDataSourceStreamReader):
         # prefetched batch to serve/replay it.
         rows = []
         for i in range(start, end):
-            with open(self.paths[i], encoding="utf-8", errors="replace") as fh:
+            with open(self.paths[i], "rb") as fh:
                 rows.append((i + 1, fh.read()))
         return rows
 

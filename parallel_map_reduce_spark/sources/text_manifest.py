@@ -191,9 +191,14 @@ def _driver_documents(spark: SparkSession, paths: list[str]) -> DataFrame:
             with open(p, "rb") as fh:
                 raw[p] = fh.read()
     rows = [(i + 1, raw[p]) for i, p in enumerate(paths)]
-    return local_frame(spark, rows, "doc_id BIGINT NOT NULL, raw BINARY").select(
-        "doc_id", F.col("raw").cast("string").alias("text")
-    )
+    return bytes_to_text(local_frame(spark, rows, "doc_id BIGINT NOT NULL, raw BINARY"))
+
+
+def bytes_to_text(raw: DataFrame) -> DataFrame:
+    """(doc_id, text) from (doc_id, raw BINARY) rows: the JVM builds
+    each string from the file's bytes (``UTF8String.fromBytes``, as the
+    text source does), the one byte semantics of every manifest reader."""
+    return raw.select("doc_id", F.col("raw").cast("string").alias("text"))
 
 
 def _build_manifest_documents(
@@ -203,11 +208,11 @@ def _build_manifest_documents(
         # Hadoop's hidden-file filter drops '_'/'.'-prefixed files from
         # EVERY spark.read.text scan, explicit path lists included. The
         # Python DataSource twin open()s files on executors (no Hadoop
-        # listing, same schema and ids), so such corpora lose nothing.
+        # listing, same ids and bytes), so such corpora lose nothing.
         from . import pyds_manifest
 
         pyds_manifest.register(spark)
-        return (
+        return bytes_to_text(
             spark.read.format("manifest_text")
             .option("manifest", manifest_path)
             .load()

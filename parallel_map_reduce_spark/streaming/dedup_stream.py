@@ -32,7 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import lsh_band_signatures
+from ..operators.dedup import incremental_lsh_matches_indexed, lsh_band_signatures
 from ..sources.catalog import load_table, local_frame
 
 
@@ -102,27 +102,6 @@ def _fresh_result_dir(kind: str, sf_dir: str) -> str:
     return out
 
 
-def incremental_matches_against(
-    new_docs: DataFrame, corpus_bands: DataFrame
-) -> DataFrame:
-    """(new_doc, corpus_doc): one micro-batch's collisions against the
-    prebuilt corpus band table."""
-    nb = lsh_band_signatures(new_docs)
-    return (
-        nb.alias("n")
-        .join(
-            corpus_bands.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.sig") == F.col("c.sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("new_doc"),
-            F.col("c.doc_id").alias("corpus_doc"),
-        )
-        .distinct()
-    )
-
-
 def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the document stream through ingest-time LSH matching;
     return all (new_doc, corpus_doc) collisions found across batches."""
@@ -142,9 +121,9 @@ def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc = batch_df.filter(F.col("source") == INCR_SOURCE).select(
             "doc_id", "text"
         )
-        incremental_matches_against(inc, corpus_bands).write.mode(
-            "append"
-        ).parquet(out_dir)
+        incremental_lsh_matches_indexed(
+            lsh_band_signatures(inc), corpus_bands
+        ).write.mode("append").parquet(out_dir)
 
     # Fresh checkpoint per invocation (a reused one would drain zero
     # batches on repeat runs); removed after the drain completes.

@@ -33,9 +33,8 @@ from pyspark.sql.types import (
 )
 
 from ..multimodal.codec import IMAGE_FEATURES_SCHEMA, image_features_map
+from ..sources.catalog import REFDATA_DIR
 from .events_stream import _staging_dir
-
-_FIXTURE_DIR = "/root/repo/refdata"
 
 IMAGE_FIXTURE_SCHEMA = StructType(
     [
@@ -57,7 +56,7 @@ def read_image_payload_stream(spark: SparkSession) -> DataFrame:
     arrival log of media blobs)."""
     return (
         spark.readStream.schema(IMAGE_FIXTURE_SCHEMA)
-        .parquet(_staging_dir(_FIXTURE_DIR, "image_fixture"))
+        .parquet(_staging_dir(REFDATA_DIR, "image_fixture"))
         .select("doc_id", "payload")
     )
 

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.robots import robots_verdicts_folded
+from ..sources.catalog import REFDATA_DIR
 from .events_stream import _staging_dir
 
 ROBOTS_FIXTURE_SCHEMA = StructType(
@@ -56,7 +57,7 @@ def read_robots_url_stream(spark: SparkSession) -> DataFrame:
 
     _ensure_session_confs(spark)
     return spark.readStream.schema(ROBOTS_FIXTURE_SCHEMA).parquet(
-        _staging_dir("/root/repo/refdata", "robots_fixture")
+        _staging_dir(REFDATA_DIR, "robots_fixture")
     )
 
 

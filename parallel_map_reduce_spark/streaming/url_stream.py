@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators.url_canon import canonical_url_column
+from ..sources.catalog import REFDATA_DIR
 from .events_stream import _staging_dir
 
 URL_FIXTURE_SCHEMA = StructType(
@@ -41,7 +42,7 @@ def read_url_stream(spark: SparkSession) -> DataFrame:
 
     _ensure_session_confs(spark)
     return spark.readStream.schema(URL_FIXTURE_SCHEMA).parquet(
-        _staging_dir("/root/repo/refdata", "url_fixture")
+        _staging_dir(REFDATA_DIR, "url_fixture")
     )
 
 

@@ -10,7 +10,6 @@ the rework exists for — no Exchange where none is needed.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from parallel_map_reduce_spark.operators import dedup as D
 from parallel_map_reduce_spark.operators.text_analysis import fingerprints
@@ -55,19 +54,10 @@ def test_minhash_zero_exchange(spark, docs):
 
 
 def test_minhash_kernel_matches_aggregate_form(spark, docs):
-    """The Arrow kernel is bit-identical to the r12 explode+aggregate
-    formulation it replaced (tokenize/md5/affine-min replica)."""
-    from parallel_map_reduce_spark.functions.hashing import md5_i32
-
-    sh = D.doc_shingles(docs).withColumn("hv", md5_i32("shingle"))
-    agg_form = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(a) * F.col("hv") + F.lit(b)) % F.lit(D.MINHASH_PRIME)
-            ).alias(f"m{j}")
-            for j, (a, b) in enumerate(D.MINHASH_SEEDS)
-        ]
-    )
+    """The Arrow kernel is bit-identical to the JVM wide aggregate
+    (``_minhash_agg``, the form the value-domain LSH path runs) over
+    the JVM shingles (tokenize/md5/affine-min replica)."""
+    agg_form = D._minhash_agg(D.doc_shingles(docs), "doc_id")
     kernel_form = D._minhash_wide(docs)
     assert agg_form.schema == kernel_form.schema
     assert kernel_form.exceptAll(agg_form).count() == 0
@@ -152,6 +142,17 @@ def test_connected_components_local_equals_distributed_random(spark):
     assert local == dist and len(local) > 100
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """The distributed loop must refuse to return labels that are still
+    changing: a 20-node chain needs 19 propagation rounds, so
+    max_iter=3 raises instead of splitting the component."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 20)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        D.connected_components(pairs, max_iter=3, local_cap=0)
+
+
 def test_fuzzy_value_pairs_guards_high_cardinality(spark):
     """The |V|^2 levenshtein join must REFUSE a high-cardinality domain
     (silently running quadratic on a big vocabulary is the failure
@@ -187,6 +188,35 @@ def test_fuzzy_lsh_pairs_are_exact_subset_with_recall(spark, sf_dir):
     assert len(exact) > 0
     recall = len(lsh) / len(exact)
     assert recall >= 0.5, (recall, len(lsh), len(exact))
+
+
+def test_fuzzy_lsh_pairs_match_oracle_on_edge_values(spark):
+    """NULL, the empty string and 1-2 character values (shingled as the
+    whole value) go through the same band core as long names: the
+    Spark pairs equal the registered DuckDB oracle's, a NULL never
+    pairs, and near-identical long values do."""
+    import duckdb
+    import pyarrow as pa
+
+    from parallel_map_reduce_spark.registry import all_queries
+
+    names = [
+        None, "", "a", "b", "ab", "ba", "abc", "abd",
+        "almond antique", "almond antiqua", "almond antique ",
+        "blush thistle", "blush thistles", "Customer#000000001",
+        "Customer#000000002", "Customer#000000012", "zz", "z",
+    ]
+    parts = spark.createDataFrame([(n,) for n in names], "p_name STRING")
+    got = {
+        (r.val_a, r.val_b, r.dist)
+        for r in D.fuzzy_value_pairs_lsh(parts, "p_name").collect()
+    }
+    con = duckdb.connect()
+    con.register("part", pa.table({"p_name": pa.array(names, pa.string())}))
+    want = set(con.execute(all_queries()["part_name_fuzzy_pairs_lsh"].oracle).fetchall())
+    assert got == want
+    assert all(None not in pair for pair in got)
+    assert ("almond antiqua", "almond antique", 1) in got
 
 
 def test_jaccard_prefix_matches_brute_force(spark, docs):
@@ -479,17 +509,59 @@ def test_corpus_promote_chain_and_compaction(spark, sf_dir, docs):
     assert n_parquet(cdir) <= n_buckets < n_before
 
 
-def test_ngram_jaccard_refuses_misused_sized_shingles(spark, docs):
-    """sized_shingles is consumed ONLY by the capped posting-list path;
-    silently tokenizing ASCII instead would return wrong Jaccard values
-    (ADVICE r17)."""
-    sized = D.unicode_doc_sized_shingles(docs)
-    with pytest.raises(ValueError, match="sized_shingles"):
-        D.ngram_jaccard_pairs(docs, df_cap=None, sized_shingles=sized)
-    with pytest.raises(ValueError, match="sized_shingles"):
-        D.ngram_jaccard_pairs(
-            docs,
-            df_cap=10,
-            shingles=D.unicode_doc_shingles(docs),
-            sized_shingles=sized,
-        )
+def test_jaccard_cap_is_lossless_over_unicode_sized_shingles(spark, sf_dir):
+    """The one pair path takes sized (doc_id, shingle, n) rows on both
+    sides of the df cap: over the Unicode-tokenized multi-script
+    fixture, capped == uncapped (the uncapped equi-self-join reads the
+    set sizes from the rows, like the posting lists)."""
+    from parallel_map_reduce_spark.queries._unicode import scoped_unicode_docs
+
+    udocs = scoped_unicode_docs(spark, sf_dir)
+
+    def pairs(df_cap):
+        return {
+            (r.doc_a, r.doc_b, round(r.jaccard, 12))
+            for r in D.ngram_jaccard_pairs(
+                udocs,
+                df_cap=df_cap,
+                sized_shingles=D.unicode_doc_sized_shingles(udocs),
+            ).collect()
+        }
+
+    capped = pairs(D.JACCARD_SHINGLE_DF_CAP)
+    assert capped == pairs(None) and len(capped) > 0
+
+
+def _package_sources():
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "parallel_map_reduce_spark",
+    )
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                yield os.path.relpath(path, pkg), open(path, encoding="utf-8").read()
+
+
+def test_one_band_join_and_one_oracle_minhash():
+    """The LSH family keeps one implementation per concept: one Spark
+    (band, sig) equi-join (operators/dedup.py:_band_join), one oracle
+    band join (queries/dedup.py:_band_join_sql) and one oracle minhash
+    CTE (queries/dedup.py:_minhash_ctes)."""
+    import re
+
+    patterns = {
+        "spark band join": re.compile(r'F\.col\("\w+\.sig"\)\s*==\s*F\.col\("\w+\.sig"\)'),
+        "sql band join": re.compile(r"\b\w+\.sig\s*=\s*\w+\.sig\b"),
+        "oracle minhash": re.compile(re.escape("MIN((s.a * h.hv + s.b) %")),
+    }
+    for label, pat in patterns.items():
+        hits = [
+            f"{rel}:{src.count(chr(10), 0, m.start()) + 1}"
+            for rel, src in _package_sources()
+            for m in pat.finditer(src)
+        ]
+        assert len(hits) == 1, (label, hits)

@@ -151,3 +151,27 @@ def test_no_create_dataframe_outside_local_frame():
                     ):
                         offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
     assert offenders == []
+
+
+def test_package_locates_refdata_from_its_own_file():
+    """Committed fixtures are found through ``catalog.REFDATA_DIR``,
+    derived from the package's own location: no package file embeds
+    the checkout's absolute path or an absolute path into refdata/,
+    so a checkout anywhere finds its data."""
+    import re
+
+    from parallel_map_reduce_spark.sources.catalog import REFDATA_DIR
+
+    checkout = os.path.dirname(PKG)
+    assert REFDATA_DIR == os.path.join(checkout, "refdata")
+    absolute_refdata = re.compile(r"""["']/[^"'\n]*refdata""")
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            src = open(path, encoding="utf-8").read()
+            if checkout in src or absolute_refdata.search(src):
+                offenders.append(os.path.relpath(path, PKG))
+    assert offenders == []

@@ -254,8 +254,9 @@ def test_python_datasource_manifest_equals_join_reader(spark):
     from parallel_map_reduce_spark.sources import pyds_manifest, text_manifest
 
     pyds_manifest.register(spark)
-    df = spark.read.format("manifest_text").option("manifest", manifest).load()
-    assert [f.name for f in df.schema.fields] == ["doc_id", "text"]
+    raw = spark.read.format("manifest_text").option("manifest", manifest).load()
+    assert [f.name for f in raw.schema.fields] == ["doc_id", "raw"]
+    df = text_manifest.bytes_to_text(raw)
     assert df.rdd.getNumPartitions() == len(
         text_manifest.parse_manifest(manifest)
     )
@@ -284,7 +285,7 @@ def test_python_datasource_manifest_streams_incrementally(spark):
 
     pyds_manifest.register(spark)
     n_files = len(text_manifest.parse_manifest(manifest))
-    stream = (
+    stream = text_manifest.bytes_to_text(
         spark.readStream.format("manifest_text")
         .option("manifest", manifest)
         .option("batch_files", "1")
@@ -543,32 +544,65 @@ _BYTE_CASES = [
 
 
 def test_manifest_byte_semantics_match_across_sides(spark, tmp_path):
-    """Both sides hand the JVM the file's raw bytes, so ill-formed UTF-8
-    collects to the same rows with the same in-JVM length and
-    octet_length. A Python-side decode (errors="replace") replaces an
-    encoded surrogate with three U+FFFD where the JVM puts one."""
+    """Every manifest reader hands the JVM the file's raw bytes, so
+    ill-formed UTF-8 collects to the same rows with the same in-JVM
+    length and octet_length: the driver read, the ``spark.read.text``
+    scan, and the Python DataSource twin (batch, which serves
+    '_'-prefixed files above the bound, and stream). A Python-side
+    decode (errors="replace") replaces an encoded surrogate with three
+    U+FFFD where the JVM puts one."""
+    from parallel_map_reduce_spark.sources import pyds_manifest
     from parallel_map_reduce_spark.sources.text_manifest import (
+        bytes_to_text,
         read_manifest_documents,
     )
 
-    lines = []
-    for i, raw in enumerate(_BYTE_CASES):
-        (tmp_path / f"case{i:02d}.txt").write_bytes(raw)
-        lines.append(f"case{i:02d}.txt")
-    man = tmp_path / "manifest.txt"
-    man.write_text(f"{len(lines)}\n" + "\n".join(lines) + "\n")
+    def manifest(prefix):
+        lines = []
+        for i, raw in enumerate(_BYTE_CASES):
+            (tmp_path / f"{prefix}case{i:02d}.txt").write_bytes(raw)
+            lines.append(f"{prefix}case{i:02d}.txt")
+        man = tmp_path / f"{prefix}manifest.txt"
+        man.write_text(f"{len(lines)}\n" + "\n".join(lines) + "\n")
+        return str(man)
+
+    def rows(df):
+        return sorted(
+            map(
+                tuple,
+                df.select(
+                    "doc_id", "text", F.length("text"), F.octet_length("text")
+                ).collect(),
+            )
+        )
+
+    plain, hidden = manifest(""), manifest("_")
     got = {}
     for side in SIDES:
         with manifest_side(side):
-            df = read_manifest_documents(spark, str(man))
-            got[side] = sorted(
-                map(
-                    tuple,
-                    df.select(
-                        "doc_id", "text", F.length("text"), F.octet_length("text")
-                    ).collect(),
-                )
-            )
-    assert got["driver"] == got["distributed"]
+            got[side] = rows(read_manifest_documents(spark, plain))
+            # '_'-prefixed files: the DataSource twin above the bound
+            got[f"{side} hidden"] = rows(read_manifest_documents(spark, hidden))
+    pyds_manifest.register(spark)
+    # foreachBatch, not the memory sink: that sink keeps rows as Java
+    # strings and would re-encode the replaced bytes itself.
+    got["stream"] = []
+    q = (
+        bytes_to_text(
+            spark.readStream.format("manifest_text").option("manifest", hidden).load()
+        )
+        .writeStream.foreachBatch(lambda df, _: got["stream"].extend(rows(df)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    got["stream"].sort()
+    for reader, got_rows in got.items():
+        assert got_rows == got["driver"], reader
     octets = {r[0]: r[3] for r in got["driver"]}
     assert octets == {i + 1: len(raw) for i, raw in enumerate(_BYTE_CASES)}
+    assert got["driver"][0][1] == "a\ufffdb"

@@ -400,6 +400,16 @@ def test_streaming_neardup_lsh_equals_batch_incremental(spark, sf_dir):
         for r in dedup_incremental_lsh(spark, sf_dir).collect()
     )
     assert live == batch
+    # ... and the registered DuckDB oracle (the shared band CTE and
+    # band-join SQL), recomputed from scratch on both sides.
+    import duckdb
+
+    from parallel_map_reduce_spark.registry import all_queries
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    oracle = sorted(con.execute(all_queries()["streaming_neardup_lsh"].oracle).fetchall())
+    assert live == oracle and len(live) > 0
 
 
 def test_streaming_ivfpq_index_equals_batch_store(spark, sf_dir, tmp_path):
