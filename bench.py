@@ -53,7 +53,7 @@ HEADLINE = (
     "similarity_topk_bruteforce",
     # round-10 rotation (VERDICT r9 task 6): the persisted LSH store's
     # serving entry — at its pruning-effective 20-query batch, where
-    # DPP actually skips directories and serving beats inline
+    # partition pruning actually skips directories and serving beats inline
     # re-bucketing (lsh_serving_notch: 1.37 vs 1.73 s) — replaces the
     # inline build-per-batch form; the inline operator keeps its
     # registry entry, equality pytests, and the notch's b400 row.
@@ -1454,7 +1454,7 @@ def main() -> int:
 
     # LSH serving notch (VERDICT r9 task 6): the persisted (band,
     # bucket)-partitioned ANN store only beats inline re-bucketing when
-    # dynamic partition pruning actually skips directories — HEADLINE's
+    # partition pruning actually skips directories — HEADLINE's
     # 400-query batch probes all 48 buckets, so the store is
     # cost-neutral there. Time inline vs served at BOTH batch sizes
     # (b20 = vec_id%1000, prunes; b400 = vec_id%50, probes everything)

@@ -21,7 +21,10 @@ Scale shapes:
   ``_corpus_stats`` memoizes them per session (key: app id, plan hash,
   the files' ns-mtime/size stamps), so a rewritten ``dl`` misses the
   memo. Over an in-plan ``dl`` it crosses the 1-row aggregate in, as
-  ``bm25_scores`` does.
+  ``bm25_scores`` does. A served request over at most
+  ``ONE_TASK_MAX_DOCS`` documents is one job of one task: the pruned
+  tf buckets and the dl are each coalesced to one partition, so the
+  plan has no exchange and no broadcast.
 """
 
 from __future__ import annotations
@@ -153,16 +156,21 @@ def doc_lengths(docs: DataFrame) -> DataFrame:
     return ordered_words(docs).groupBy("doc_id").agg(F.count("*").alias("dl"))
 
 
-# On a small corpus a request's (query, doc_id) sum and rank window
-# share ONE exchange, on ``query``: it saves the request a job, but all
-# of one query's rows then meet in one task with no map-side partial
-# sum. Measured on 4 vCPU, 24 interleaved request pairs per point: the
-# one exchange is 50-110 ms faster at 500-20,000 documents (20-23 of 24
-# pairs, 1- and 4-query batches), and a 1-query request over 200,000
-# documents is 490 ms slower with it (23 of 24). Above the bound, and
-# for an in-plan dl whose size is unknown at build, the sum exchanges on
-# (query, doc_id) and the window on query.
-ONE_EXCHANGE_MAX_DOCS = 20_000
+# On a small corpus a request runs in ONE task: the pruned tf buckets
+# and the dl are coalesced to one partition each, so the df window, the
+# dl join, the (query, doc_id) sum and the rank window need no exchange
+# and no broadcast. It saves the request its exchange and broadcast
+# jobs, but all of its rows then meet in one task. Measured on 4 vCPU,
+# in-session, 12 interleaved request pairs per point (sf0.1's documents
+# repeated with new ids), median one task vs exchanged: faster at 5,000
+# documents (1-query 541 vs 916 ms, 4-query 545 vs 758, 12/12), at
+# 20,000 (519 vs 739 and 834 vs 946, 12/12) and for a 1-query request
+# at 50,000 (752 vs 872, 12/12); slower for a 4-query request at 50,000
+# (1727 vs 1344, 0/12) and at 200,000 (1-query 2024 vs 1497, 4-query
+# 5270 vs 3260, 0/12). Above the bound, and for an in-plan dl whose size
+# is unknown at build, df is a window over the word buckets, the sum
+# exchanges on (query, doc_id) and the window on query.
+ONE_TASK_MAX_DOCS = 20_000
 
 # (session app id, dl semanticHash, dl input-file stamps) -> (dl, n_docs,
 # avgdl). The corpus stats of a served dl are the same on every request,
@@ -254,10 +262,14 @@ def bm25_rank_batch(
     aggregate is crossed into the scorer, so building stays job-free.
 
     On a word-bucketed ``tf`` the request is one scan of the query
-    terms' buckets (``df`` is a window over the bucket partitioning).
-    When the memoized ``n_docs`` is at most ``ONE_EXCHANGE_MAX_DOCS``,
-    one exchange, on ``query``, serves the (query, doc) sum and the rank
-    window; otherwise they exchange once each."""
+    terms' buckets. When the memoized ``n_docs`` is at most
+    ``ONE_TASK_MAX_DOCS``, the pruned tf and the dl are each coalesced
+    to one partition and joined under a ``shuffle_hash`` hint: the
+    ``df`` window, the join, the (query, doc) sum and the rank window
+    all read that one partition, so the request is one job of one task.
+    Otherwise (and for an in-plan ``dl``) ``df`` is a window over the
+    bucket partitioning, and the sum and the rank window exchange once
+    each."""
     stats = _corpus_stats(dl)
     # BM25 treats repeated query terms as weight-1 (standard qtf=1 form);
     # dedupe per query so the score is a set function of the query.
@@ -277,11 +289,15 @@ def bm25_rank_batch(
     # On a word-bucketed index table this IN-filter reaches the scan and
     # bucket-prunes it (SelectedBucketsCount in the plan — pinned in
     # tests/test_search.py): serving touches only the query terms'
-    # buckets, never the whole index. The df window's partitioning is
-    # the buckets', so it needs no exchange.
-    tf = tf.filter(F.col("word").isin(*by_word)).withColumn(
-        "df", F.expr("count(1) OVER (PARTITION BY word)")
-    )
+    # buckets, never the whole index.
+    tf = tf.filter(F.col("word").isin(*by_word))
+    if stats is not None and stats[0] <= ONE_TASK_MAX_DOCS:
+        # One partition on each side: the df window, the dl join, the
+        # (query, doc_id) sum and the rank window all read it, so the
+        # plan has no exchange and no broadcast. Above the bound the df
+        # window reads the word buckets' partitioning.
+        tf, dl = tf.coalesce(1), dl.coalesce(1).hint("shuffle_hash")
+    tf = tf.withColumn("df", F.expr("count(1) OVER (PARTITION BY word)"))
     scored = tf.join(dl, "doc_id")
     if stats is None:
         corpus = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
@@ -296,10 +312,6 @@ def bm25_rank_batch(
         "doc_id",
         F.round(s, 8).cast("decimal(18,8)").alias("s"),
     )
-    if stats is not None and stats[0] <= ONE_EXCHANGE_MAX_DOCS:
-        # one exchange: the (query, doc_id) sum and the rank window
-        # both read this partitioning
-        per_term = per_term.repartition("query")
     return (
         per_term.groupBy("query", "doc_id")
         .agg(F.expr("round(CAST(sum(s) AS DOUBLE), 4) AS score"))

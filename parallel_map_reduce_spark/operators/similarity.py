@@ -22,6 +22,8 @@ MapReduce" (ICDE 2012), PAPERS.md.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -55,6 +57,18 @@ GEMM_BROADCAST_MIN_Q = 1_024
 # is ~100 MB of block matrix per task — re-partition the hot key or
 # raise n_centroids past it, as the SemDeDup paper does).
 PAIR_BLOCK_ROW_CAP = 200_000
+# A served LSH request whose probe is expected to read at most this many
+# store bytes (|Q| x store bytes / 2^r) carries its query batch in the
+# plan as literals and runs in one task; a larger one joins the batch as
+# a broadcast table and exchanges on query_id, so its candidates spread
+# over the cores. Measured on 4 vCPU, in-session, 8-10 interleaved
+# request pairs per point, median one task vs exchanged: faster up to
+# ~10 MB expected (2,000-vector store, 1-40 queries: 600-1210 vs
+# 815-1494 ms; 20,000 vectors, 1-10 queries: 902-1742 vs 1275-2218 ms;
+# 100,000 vectors, 1-2 queries: 1229-1260 vs 1530-1617 ms), level at
+# 8.3 MB (2,000 vectors, 80 queries: 1397 vs 1369 ms) and slower at
+# 19.5 MB (100,000 vectors, 4 queries: 2102 vs 1704 ms, 1 of 8 pairs).
+ANN_ONE_TASK_MAX_BYTES = 8 << 20
 
 
 def _collect_query_batch(df: DataFrame, what: str) -> list:
@@ -234,25 +248,117 @@ def write_lsh_index(emb: DataFrame, path: str, dim: int = 64) -> None:
     ).partitionBy("band", "bucket").parquet(path + "/buckets")
 
 
+def _json_sql(values, sql_type: str) -> str:
+    """SQL text of the finite ``values`` as one constant of ``sql_type``:
+    a JSON string literal that ``from_json`` decodes once, when the
+    optimizer folds constants. The parser reads one string token where
+    ``double_array_sql`` gives it a literal per number (20 vectors of 64
+    doubles took ~300 ms to parse that way), and ``json.dumps`` writes
+    each float as its shortest round-trip repr, so every double is
+    exact."""
+    return f"from_json('{json.dumps(values)}', '{sql_type}')"
+
+
+def _driver_band_buckets(q_mat: np.ndarray) -> np.ndarray:
+    """(n, ANN_BANDS) int bucket ids of the rows of ``q_mat``:
+    ``_band_buckets_expr`` computed on the driver. ``fold_dot`` sums
+    each plane dot in the JVM fold's order, so every sign bit, and so
+    every bucket, equals the JVM's."""
+    planes = np.array(plane_components(q_mat.shape[1]), dtype=np.float64)
+    bits = (fold_dot(q_mat, planes) > 0).reshape(-1, ANN_BANDS, ANN_PLANES_PER_BAND)
+    return bits @ (1 << np.arange(ANN_PLANES_PER_BAND))
+
+
 def lsh_ann_topk_indexed(
     emb: DataFrame, index_path: str, query_filter: F.Column, k: int = 10, dim: int = 64
 ) -> DataFrame:
     """Serving-only twin of ``lsh_ann_topk``: candidates come from the
     persisted (band, bucket)-partitioned store of ``write_lsh_index``
-    instead of re-bucketing the whole corpus per query batch. The query
-    batch's bucket ids are recomputed from the raw query vectors (a
-    deterministic projection); the broadcast equi-join on the
-    partition columns (band, bucket) then triggers Spark's DYNAMIC
-    partition pruning — the executed plan's ``PartitionFilters``
-    carries ``dynamicpruningexpression(band IN ...)`` (pinned in
-    tests/test_similarity.py), so the store scan reads only the probed
-    directories with NO driver-side probe collect (one fewer job than
-    an explicit isin-filter, and the probe set never leaves the JVM).
-    At 100 TB no serving stage scans, shuffles, or re-hashes the
-    corpus. Results are row-identical to the inline operator (same
-    planes, same probe; equality pinned in tests)."""
-    store = read_parquet(emb.sparkSession, index_path + "/buckets")
-    return _lsh_probe(store, _lsh_rows(emb.filter(query_filter), dim), k)
+    instead of re-bucketing the whole corpus per query batch.
+
+    The query batch is collected on the driver (one job, capped at
+    QUERY_BATCH_CAP like the two-stage operators' batches) and bucketed
+    there (``_driver_band_buckets``, bit-exact with the JVM fold). The
+    store scan carries a static filter, an OR of the probed (band,
+    bucket) pairs, so it reads exactly the probed partitions
+    (``PartitionFilters`` and ``number of partitions read``, pinned in
+    tests/test_similarity.py), and the plane literals never enter the
+    request plan. A batch whose probe is expected to read at most
+    ANN_ONE_TASK_MAX_BYTES rides the plan as literals and the request
+    is one task with no exchange; a larger batch is a broadcast table
+    joined on (band, bucket), exchanged on query_id. Results are
+    row-identical to the inline operator (same planes, same probe;
+    equality pinned in tests). A query vector with a NULL or non-finite
+    component, or not ``dim`` long, is refused with ValueError; an
+    empty batch gives the typed empty result."""
+    spark = emb.sparkSession
+    qrows = _collect_query_batch(
+        emb.filter(query_filter).select("vec_id", "embedding"), "lsh_ann_topk_indexed"
+    )
+    if not qrows:
+        return local_frame(
+            spark, [], "query_id BIGINT, vec_id BIGINT, cos DOUBLE, rank INT NOT NULL"
+        )
+    q_ids = [r["vec_id"] for r in qrows]
+    vecs = [r["embedding"] for r in qrows]
+    q_mat = None
+    if all(v is not None and len(v) == dim for v in vecs):
+        q_mat = np.array(vecs, dtype=np.float64)  # a NULL component reads as NaN
+    if q_mat is None or not np.isfinite(q_mat).all():
+        raise ValueError(
+            f"lsh_ann_topk_indexed: every query vector needs {dim} finite, "
+            "non-NULL components"
+        )
+    q_norms = fold_norms(q_mat)
+    buckets = _driver_band_buckets(q_mat).tolist()
+    probed = sorted({(b, x) for row in buckets for b, x in enumerate(row)})
+    store = read_parquet(spark, index_path + "/buckets").filter(
+        " OR ".join(f"(band = {b} AND bucket = {x})" for b, x in probed)
+    )
+    # Each query reads one of each band's 2^r buckets. The relation's
+    # size is the whole store's (a path-based relation prunes partitions
+    # at execution), so a query's expected read is 1/2^r of it.
+    store_bytes = int(store._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if len(qrows) * store_bytes >> ANN_PLANES_PER_BAND > ANN_ONE_TASK_MAX_BYTES:
+        q = local_frame(
+            spark,
+            [
+                (qid, vec, nrm, b, x)
+                for qid, vec, nrm, row in zip(q_ids, vecs, q_norms.tolist(), buckets)
+                for b, x in enumerate(row)
+            ],
+            "vec_id BIGINT, embedding ARRAY<DOUBLE>, nrm DOUBLE, band INT, bucket INT",
+        )
+        return _lsh_probe(store, q, k)
+    # (band * 2^r + bucket) -> the indices of the queries probing it
+    probes: dict[int, list[int]] = {}
+    for i, row in enumerate(buckets):
+        for b, x in enumerate(row):
+            probes.setdefault(b << ANN_PLANES_PER_BAND | x, []).append(i)
+    qmap = ", ".join(f"{key}, array({', '.join(map(str, ix))})" for key, ix in probes.items())
+    # SQL text, one parsed expression per column: every Column-API call
+    # is a py4j round trip. cos is _lsh_probe's (the ``dot`` fold, then
+    # the same division), so each value is bit-identical to it; it is
+    # computed ahead of the pair dedup, so the dedup carries no vectors.
+    cand = (
+        store.selectExpr(
+            f"explode(map({qmap})[band * {1 << ANN_PLANES_PER_BAND} + bucket]) AS qi",
+            "vec_id",
+            "embedding",
+            "nrm",
+        )
+        .selectExpr(
+            f"{_json_sql(q_ids, 'array<bigint>')}[qi] AS query_id",
+            "vec_id",
+            f"aggregate(zip_with({_json_sql(q_mat.tolist(), 'array<array<double>>')}[qi],"
+            " embedding, (x, y) -> x * cast(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
+            f" / ({_json_sql(q_norms.tolist(), 'array<double>')}[qi] * nrm) AS cos",
+        )
+        .filter("query_id != vec_id")
+        .coalesce(1)
+        .dropDuplicates(["query_id", "vec_id"])
+    )
+    return _topk(cand, "cos", "vec_id", k, "rank").select("query_id", "vec_id", "cos", "rank")
 
 
 IVF_K = 16  # coarse centroids

@@ -152,19 +152,21 @@ def _lsh_index_dir(spark: SparkSession, sf_dir: str) -> str:
     "doc ('bucket once, probe one partition per query') made real: "
     "candidates come from a PERSISTED (band, bucket)-partitioned "
     "parquet store (built once per corpus version, atomic artifact "
-    "cache), and the query batch's bucket ids — recomputed from the "
-    "raw query vectors, a deterministic projection — prune the scan to "
-    "the probed directories (PartitionFilters pinned in tests). "
-    "Serving never re-buckets or full-scans the corpus; results are "
-    "row-identical to the inline operator. Batch size is the "
-    "PRUNING-EFFECTIVE one (vec_id % 1000 — 20 queries at sf0.1): a "
-    "400-query batch probes all 48 (band, bucket) directories, which "
+    "cache). The query batch is collected at build (capped at "
+    "QUERY_BATCH_CAP) and bucketed on the driver, bit-exact with the "
+    "JVM fold; a static filter on the probed (band, bucket) pairs "
+    "prunes the scan to exactly those directories (PartitionFilters "
+    "and partitions read pinned in tests). A batch whose expected read "
+    "is within ANN_ONE_TASK_MAX_BYTES rides the plan as literals and "
+    "the request runs in one task; a larger one is a broadcast table "
+    "with one exchange on query_id. Serving never re-buckets or "
+    "full-scans the corpus; results are row-identical to the inline "
+    "operator. Batch size is the PRUNING-EFFECTIVE one (vec_id % 1000): "
+    "a 400-query batch probes all 48 (band, bucket) directories, which "
     "erases the store's point (measured cost-neutral, r9 "
-    "PARITY_SF0.1.md addendum 2); at 20 queries DPP skips most of the "
-    "store and serving beats inline re-bucketing (bench "
-    "lsh_serving_notch: served 1.37 s vs inline 1.73 s) — the "
-    "production shape, where query batches are tiny against the "
-    "corpus. operators/similarity.py:lsh_ann_topk_indexed.",
+    "PARITY_SF0.1.md addendum 2) — the production shape is a query "
+    "batch tiny against the corpus. "
+    "operators/similarity.py:lsh_ann_topk_indexed.",
     tags=("similarity", "ann", "lsh", "serving", "index"),
 )
 def similarity_ann_lsh_served(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,40 +23,49 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from .text_manifest import parse_manifest
 
 
-class ManifestFilePartition(InputPartition):
-    """One manifest entry = one partition: (1-based id, absolute path)."""
+class ManifestFilesPartition(InputPartition):
+    """Manifest entries read by one task: (1-based id, absolute path)
+    pairs."""
 
-    def __init__(self, doc_id: int, path: str):
-        self.doc_id = doc_id
-        self.path = path
+    def __init__(self, entries: list[tuple[int, str]]):
+        self.entries = entries
+
+
+def _read_files(partition: ManifestFilesPartition):
+    # Executor-side: each file's raw bytes; the JVM builds the string
+    # (text_manifest.bytes_to_text).
+    for doc_id, path in partition.entries:
+        with open(path, "rb") as fh:
+            yield (doc_id, fh.read())
+
+
+def _manifest_option(options: dict) -> str:
+    path = options.get("manifest") or options.get("path")
+    if not path:
+        raise ValueError("manifest_text requires option 'manifest' (or 'path')")
+    return path
 
 
 class ManifestTextReader(DataSourceReader):
     def __init__(self, options: dict):
-        path = options.get("manifest") or options.get("path")
-        if not path:
-            raise ValueError("manifest_text requires option 'manifest' (or 'path')")
-        self.manifest_path = path
+        self.manifest_path = _manifest_option(options)
 
     def partitions(self) -> list[InputPartition]:
         # Driver-side: the manifest is metadata (N lines). Ids are the
         # 1-based manifest positions — stable under any scheduling,
         # the property the reference checker verifies.
         paths = parse_manifest(self.manifest_path)
-        return [ManifestFilePartition(i + 1, p) for i, p in enumerate(paths)]
+        return [ManifestFilesPartition([(i + 1, p)]) for i, p in enumerate(paths)]
 
-    def read(self, partition: ManifestFilePartition):
-        # Executor-side: the file's raw bytes; the JVM builds the
-        # string (text_manifest.bytes_to_text).
-        with open(partition.path, "rb") as fh:
-            yield (partition.doc_id, fh.read())
+    def read(self, partition: ManifestFilesPartition):
+        return _read_files(partition)
 
 
 class ManifestTextDataSource(DataSource):
@@ -77,7 +86,7 @@ class ManifestTextDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         return ManifestTextReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "ManifestTextStreamReader":
+    def streamReader(self, schema) -> "ManifestTextStreamReader":
         return ManifestTextStreamReader(self.options)
 
 
@@ -86,38 +95,34 @@ def register(spark) -> None:
     spark.dataSource.register(ManifestTextDataSource)
 
 
-class ManifestTextStreamReader(SimpleDataSourceStreamReader):
+class ManifestTextStreamReader(DataSourceStreamReader):
     """Streaming flavor: the manifest is a replayable, ordered log and
-    the offset is an index into it — each trigger ingests the next
-    slice of files (``batch_files`` per trigger), so a drain feeds the
-    live index-maintenance pipeline file-by-file exactly the way a
-    landing zone would. ``readBetweenOffsets`` replays any committed
-    range from the manifest (deterministic ids → exact replay), which
-    is what makes the source restart-safe."""
+    the offset is an index into it. The latest offset is the manifest's
+    end, so a micro-batch reads every file it has not read yet, in
+    input partitions of ``batch_files`` files (one task each). Any
+    committed range replays from the manifest (deterministic ids, exact
+    replay), which is what makes the source restart-safe. Spark runs an
+    ``availableNow`` trigger over this reader as one batch, and that
+    batch reads the whole manifest."""
 
     def __init__(self, options: dict):
-        path = options.get("manifest") or options.get("path")
-        if not path:
-            raise ValueError("manifest_text requires option 'manifest' (or 'path')")
-        self.paths = parse_manifest(path)
+        self.paths = parse_manifest(_manifest_option(options))
         self.batch_files = int(options.get("batch_files", "64"))
 
     def initialOffset(self) -> dict:
         return {"index": 0}
 
-    def _rows(self, start: int, end: int) -> list[tuple]:
-        # Materialized list, not a generator: the engine pickles the
-        # prefetched batch to serve/replay it.
-        rows = []
-        for i in range(start, end):
-            with open(self.paths[i], "rb") as fh:
-                rows.append((i + 1, fh.read()))
-        return rows
+    def latestOffset(self) -> dict:
+        return {"index": len(self.paths)}
 
-    def read(self, start: dict):
-        lo = start["index"]
-        hi = min(lo + self.batch_files, len(self.paths))
-        return self._rows(lo, hi), {"index": hi}
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        lo, hi = start["index"], end["index"]
+        return [
+            ManifestFilesPartition(
+                [(i + 1, self.paths[i]) for i in range(j, min(j + self.batch_files, hi))]
+            )
+            for j in range(lo, hi, self.batch_files)
+        ]
 
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return self._rows(start["index"], end["index"])
+    def read(self, partition: ManifestFilesPartition):
+        return _read_files(partition)

@@ -19,6 +19,8 @@ from parallel_map_reduce_spark.operators.similarity import (
     ANN_BANDS,
     ANN_PLANES_PER_BAND,
     _band_buckets_expr,
+    _driver_band_buckets,
+    _json_sql,
     plane_components,
 )
 from parallel_map_reduce_spark.sources.catalog import local_frame
@@ -66,11 +68,9 @@ def _reference_buckets(vec: list[float]) -> list[int]:
     return out
 
 
-def test_band_buckets_match_sequential_fold_reference(spark):
-    """The parsed projection equals a pure-Python sign-of-fold on
-    random FLOAT vectors, on the zero vector, and on a vector exactly
+def _bucket_test_vectors(dim: int) -> list[list[float]]:
+    """200 random FLOAT vectors, the zero vector, and a vector exactly
     orthogonal to plane 0 (its dot folds to 0.0, so bit 0 is clear)."""
-    dim = 64
     rng = np.random.default_rng(7)
     vecs = [
         [float(x) for x in row]
@@ -79,21 +79,52 @@ def test_band_buckets_match_sequential_fold_reference(spark):
     p0 = plane_components(dim)[0]
     ortho = [0.0] * dim
     ortho[3], ortho[40] = p0[40], -p0[3]
-    vecs += [[0.0] * dim, ortho]
     acc = 0.0
     for x, y in zip(ortho, p0):
         acc = acc + x * y
     assert acc == 0.0 and _reference_buckets(ortho)[0] & 1 == 0
+    return vecs + [[0.0] * dim, ortho]
 
+
+def _jvm_buckets(spark, vecs: list[list[float]]) -> dict[int, list[int]]:
     df = local_frame(
         spark,
         list(enumerate(vecs)),
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    ).select("vec_id", _band_buckets_expr("embedding", dim).alias("b"))
-    got = {r["vec_id"]: list(r["b"]) for r in df.collect()}
-    assert got == {i: _reference_buckets(v) for i, v in enumerate(vecs)}
+    ).select("vec_id", _band_buckets_expr("embedding", len(vecs[0])).alias("b"))
     assert df.schema["b"].dataType.simpleString() == "array<int>"
     assert df.schema["b"].dataType.containsNull is False
+    return {r["vec_id"]: list(r["b"]) for r in df.collect()}
+
+
+def test_band_buckets_match_sequential_fold_reference(spark):
+    """The parsed projection equals a pure-Python sign-of-fold on
+    random FLOAT vectors, on the zero vector, and on a vector exactly
+    orthogonal to plane 0."""
+    vecs = _bucket_test_vectors(64)
+    got = _jvm_buckets(spark, vecs)
+    assert got == {i: _reference_buckets(v) for i, v in enumerate(vecs)}
+
+
+def test_driver_band_buckets_match_projection(spark):
+    """The served LSH request buckets its queries on the driver; on the
+    same vectors that gives the JVM projection's buckets."""
+    vecs = _bucket_test_vectors(64)
+    got = _driver_band_buckets(np.array(vecs, dtype=np.float64))
+    assert {i: row.tolist() for i, row in enumerate(got)} == _jvm_buckets(spark, vecs)
+
+
+def test_json_sql_round_trips_bit_for_bit(spark):
+    """The served LSH request's query literals (``_json_sql``) come back
+    from ``from_json`` with the same bits, awkward values included."""
+    values = [[0.1, -0.0, 5e-324, 1e308, -1e308, 1 / 3], plane_components(64)[0]]
+    df = spark.range(1).select(F.expr(_json_sql(values, "array<array<double>>")).alias("a"))
+    # folded to one constant
+    assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
+    got = df.first()["a"]
+    assert [[_bits(v) for v in row] for row in got] == [
+        [_bits(v) for v in row] for row in values
+    ]
 
 
 _DDL = (

@@ -173,6 +173,11 @@ EAGER_BUILD_OK = {
     "(|corpus|/50 rows, capped at QUERY_BATCH_CAP with a loud refusal "
     "past it; broadcast past GEMM_BROADCAST_MIN_Q) captured into the "
     "Arrow GEMM coarse stage",
+    "similarity_ann_lsh_served": "bounded query-batch collect "
+    "(capped at QUERY_BATCH_CAP with a loud refusal past it): the "
+    "queries are bucketed on the driver, so the store scan gets a "
+    "static (band, bucket) filter and a small batch rides the plan as "
+    "literals",
     "crawl_wet_to_index": "WET artifact build + catalog landing: writes "
     "the conversion WARC files, re-reads them, lands the parquet table "
     "the index then reads (cold-cache artifact class)",

@@ -251,8 +251,8 @@ def test_bm25_rank_batch_edge_cases(spark, tmp_path):
 
 def test_bm25_served_request_plan(spark, sf_dir):
     """On a warm stats entry one served request over the word-bucketed
-    tf and the parquet dl is three jobs (the dl broadcast, the tf map
-    stage, the final stage): one bucket-pruned tf scan, one exchange, no
+    tf and the parquet dl (a corpus within ONE_TASK_MAX_DOCS) is one
+    job: one bucket-pruned tf scan, no exchange, no broadcast, no
     nested-loop join."""
     import re
 
@@ -273,8 +273,8 @@ def test_bm25_served_request_plan(spark, sf_dir):
         req.collect()
     finally:
         sc.setJobGroup("bm25-served-idle", "idle")
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert "Exchange" not in plan, plan
     table = tf._jdf.queryExecution().analyzed().collectLeaves().head()
     name = table.catalogTable().get().identifier().table()
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln and name in ln]
@@ -285,9 +285,9 @@ def test_bm25_served_request_plan(spark, sf_dir):
 
 
 def test_bm25_rank_batch_exchanges_by_corpus_size(spark, tmp_path, monkeypatch):
-    """Up to ONE_EXCHANGE_MAX_DOCS documents the (query, doc_id) sum and
-    the rank window share one exchange on query; above it the sum
-    exchanges on (query, doc_id) first. Both give the same ranks."""
+    """Up to ONE_TASK_MAX_DOCS documents the request is one partition
+    with no exchange; above it the sum exchanges on (query, doc_id) and
+    the rank window on query. Both give the Python BM25's ranks."""
     import re
 
     from parallel_map_reduce_spark.operators import search as SE
@@ -297,15 +297,15 @@ def test_bm25_rank_batch_exchanges_by_corpus_size(spark, tmp_path, monkeypatch):
 
     def exchanges(got):
         # keys of each hash exchange, ids dropped; this tf is not
-        # bucketed, so its df window adds one on word
+        # bucketed, so above the bound its df window adds one on word
         plan = got._jdf.queryExecution().executedPlan().toString()
         keys = re.findall(r"Exchange hashpartitioning\((.*?), \d+\)", plan)
         return sorted(k for k in (re.sub(r"#\d+L?", "", k) for k in keys) if k != "word")
 
     small = SE.bm25_rank_batch(tf, dl, QUERIES)
-    assert exchanges(small) == ["query"]
+    assert "Exchange" not in small._jdf.queryExecution().executedPlan().toString()
     _assert_ranks(small, want)
-    monkeypatch.setattr(SE, "ONE_EXCHANGE_MAX_DOCS", len(DL_ROWS) - 1)
+    monkeypatch.setattr(SE, "ONE_TASK_MAX_DOCS", len(DL_ROWS) - 1)
     large = SE.bm25_rank_batch(tf, dl, QUERIES)
     assert exchanges(large) == ["query", "query, doc_id"]
     _assert_ranks(large, want)

@@ -7,6 +7,8 @@ against the exact baseline so that regression can't recur.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -118,14 +120,35 @@ def test_pretrained_sidecar_artifacts_roundtrip_bitexact(spark, sf_dir, emb):
     assert loaded == fresh and len(loaded) == S.IVF_K
 
 
+def _partitions_read(df) -> int:
+    """Summed ``number of partitions read`` of the file scans in ``df``'s
+    executed plan (read after the plan has run)."""
+    stack, total = [df._jdf.queryExecution().executedPlan()], 0
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            if kind == "FileSourceScanExec":
+                metric = node.metrics().get("numPartitions")
+                total += metric.get().value() if metric.isDefined() else 0
+            children = node.children()
+            stack += [children.apply(i) for i in range(children.size())]
+    return total
+
+
 def test_lsh_indexed_equals_inline(spark, emb, tmp_path):
     """The persisted-index LSH serving path (write_lsh_index +
     lsh_ann_topk_indexed) must return EXACTLY the inline operator's
     rows: the bucketing projection is deterministic (fixed planes),
     parquet round-trips the vectors exactly, and the partition-pruned
     store scan sees the same candidate rows the in-plan equi-join
-    keeps. Also pins that the pruned scan carries band/bucket
-    partition filters — the layout property the artifact exists for."""
+    keeps. Also pins that the store scan carries a static band/bucket
+    partition filter and reads exactly the probed partitions — the
+    layout property the artifact exists for."""
     qf = F.col("vec_id") % QUERY_FILTER_MOD == 0
     idx = str(tmp_path / "lsh_index")
     S.write_lsh_index(emb, idx)
@@ -140,11 +163,17 @@ def test_lsh_indexed_equals_inline(spark, emb, tmp_path):
     }
     assert inline == indexed and len(inline) > 0
     plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "band" in plan and "bucket" in plan
-    # the probe set must reach the scan as DYNAMIC pruning (no
-    # driver-side probe collect) — the property the operator relies on
-    assert "dynamicpruning" in plan.lower()
+    # one store scan, in the final and the initial plan; the plan string
+    # cuts a long filter short with "..."
+    filters = re.findall(r"PartitionFilters: \[(.*?), PushedFilters", plan)
+    assert filters and all("band" in f and "bucket" in f for f in filters), plan
+    # the probe set reaches the scan as a static filter, not as dynamic
+    # pruning, and prunes to the (band, bucket) pairs the batch probes
+    assert "dynamicpruning" not in plan.lower()
+    probed = emb.filter(qf).select(
+        F.posexplode(S._band_buckets_expr("embedding", 64)).alias("band", "bucket")
+    )
+    assert _partitions_read(indexed_df) == probed.distinct().count()
 
 
 def test_lsh_indexed_prunes_unprobed_buckets(spark, emb, tmp_path):
@@ -172,6 +201,60 @@ def test_lsh_indexed_prunes_unprobed_buckets(spark, emb, tmp_path):
             (F.col("band") == r.band) & (F.col("bucket") == r.bucket)
         ).count()
     assert probed_rows < total, "probe read the whole store"
+
+
+@pytest.fixture(scope="module")
+def lsh_idx(emb, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("lsh") / "lsh_index")
+    S.write_lsh_index(emb, idx)
+    return idx
+
+
+@pytest.mark.parametrize("one_task", [True, False])
+def test_lsh_indexed_one_task_bound_both_sides(emb, lsh_idx, monkeypatch, one_task):
+    """Within ANN_ONE_TASK_MAX_BYTES the served request carries its
+    query batch as literals and has no exchange; above it the batch is
+    a broadcast table and the request exchanges on query_id. Both
+    sides give the inline operator's rows, cosines bit for bit, and its
+    schema."""
+    qf = F.col("vec_id") % QUERY_FILTER_MOD == 0
+    monkeypatch.setattr(S, "ANN_ONE_TASK_MAX_BYTES", 1 << 62 if one_task else -1)
+    got = S.lsh_ann_topk_indexed(emb, lsh_idx, qf, k=K)
+    rows = sorted(map(tuple, got.collect()))
+    inline = S.lsh_ann_topk(emb, qf, k=K)
+    assert rows == sorted(map(tuple, inline.collect())) and len(rows) > 0
+    assert got.schema == inline.schema
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    if one_task:
+        assert "Exchange" not in plan, plan
+    else:
+        assert "BroadcastExchange" in plan
+        assert "Exchange hashpartitioning(query_id" in plan, plan
+
+
+def test_lsh_indexed_empty_batch_is_typed(emb, lsh_idx):
+    """A query filter that matches nothing gives no rows and the
+    inline operator's (query_id, vec_id, cos, rank) schema."""
+    got = S.lsh_ann_topk_indexed(emb, lsh_idx, F.lit(False), k=K)
+    assert got.collect() == []
+    assert got.schema == S.lsh_ann_topk(emb, F.lit(False), k=K).schema
+
+
+@pytest.mark.parametrize("bad", ["nan", "inf", "null_component", "null_vector"])
+def test_lsh_indexed_refuses_non_finite_query(spark, emb, lsh_idx, bad):
+    """A query vector with a NaN, infinite or NULL component, or a NULL
+    vector, raises ValueError before the request plan is built."""
+    from parallel_map_reduce_spark.sources.catalog import local_frame
+
+    vec = None
+    if bad != "null_vector":
+        vec = [0.5] * 64
+        vec[3] = {"nan": float("nan"), "inf": float("inf"), "null_component": None}[bad]
+    qid = 10**9
+    extra = local_frame(spark, [(qid, vec)], "vec_id BIGINT, embedding ARRAY<FLOAT>")
+    both = emb.select("vec_id", "embedding").unionByName(extra)
+    with pytest.raises(ValueError, match="finite"):
+        S.lsh_ann_topk_indexed(both, lsh_idx, F.col("vec_id") == qid, k=K)
 
 
 def test_ann_candidates_subset_scored_correctly(spark, emb):

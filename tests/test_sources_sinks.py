@@ -269,7 +269,7 @@ def test_python_datasource_manifest_equals_join_reader(spark):
 
 def test_python_datasource_manifest_streams_incrementally(spark):
     """The streaming flavor of the manifest source ingests the corpus
-    file-by-file (offset = manifest index, one file per micro-batch
+    file-by-file (offset = manifest index, one file per input partition
     here) and ends up with exactly the batch reader's rows — the
     replayable-log contract that feeds the live index-maintenance
     pipeline."""
@@ -309,6 +309,39 @@ def test_python_datasource_manifest_streams_incrementally(spark):
         map(tuple, text_manifest.read_manifest_documents(spark, manifest).collect())
     )
     assert got == want
+
+
+def test_manifest_stream_drains_fully_under_available_now(spark, tmp_path):
+    """An ``availableNow`` drain reads the whole manifest: the reader's
+    latest offset is the manifest's end, so Spark's single-batch
+    fallback for a Python stream source still reads every file, in
+    ``batch_files``-sized input partitions."""
+    from parallel_map_reduce_spark.sources import pyds_manifest
+    from parallel_map_reduce_spark.sources.text_manifest import bytes_to_text
+
+    texts = ["alpha beta", "gamma", "delta epsilon zeta"]
+    man = _write_manifest(tmp_path, [(f"f{i}.txt", t) for i, t in enumerate(texts)])
+    pyds_manifest.register(spark)
+    got = []
+    q = (
+        bytes_to_text(
+            spark.readStream.format("manifest_text")
+            .option("manifest", man)
+            .option("batch_files", "1")
+            .load()
+        )
+        .writeStream.foreachBatch(
+            lambda df, _: got.extend(tuple(r) for r in df.collect())
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert sorted(got) == [(i + 1, t) for i, t in enumerate(texts)]
 
 
 def _write_manifest(tmp_path, names_and_texts):
