@@ -148,11 +148,12 @@ def rank_within_letter(index: DataFrame, num_partitions: int | None = None) -> D
     26 tasks (one hot letter = one straggler at 100 TB). Range
     partitioning keeps each letter's rows contiguous ACROSS partitions in
     sorted order, so partition count scales freely; within each partition
-    ``sortWithinPartitions`` completes the total order. Downstream
-    partitionBy(letter) writers then emit part files whose name order IS
-    the reference's row order (pinned by tests/test_sink_order.py on the
-    partitioned layout; the single-file parity sink independently
-    re-sorts and does not rely on it).
+    ``sortWithinPartitions`` completes the total order. This order IS
+    the letter files' row order: the single-file sink streams the
+    partitions back in index order and appends each row as it arrives
+    (no driver re-sort), and partitionBy(letter) writers emit part files
+    whose name order is the row order. tests/test_sink_order.py pins both
+    layouts with letters spanning partitions.
 
     ``num_partitions=1`` (callers pass ``index_order_partitions(bytes)``
     when they know the source size) swaps the range exchange for a
@@ -160,9 +161,9 @@ def rank_within_letter(index: DataFrame, num_partitions: int | None = None) -> D
     megabytes the range path's boundary-sampling job plus one more
     shuffle ARE the cost — the rows themselves are trivial. coalesce is
     a narrow dependency, so the upstream scan stays parallel and the
-    single final task aggregates, sorts, formats, and writes exactly
-    once — the same single-threaded terminal stage the reference binary
-    runs at this scale. Row order is identical by construction (total
+    single final task aggregates, sorts and formats exactly once — the
+    same single-threaded terminal stage the reference binary runs at
+    this scale. Row order is identical by construction (total
     order either way; pinned in tests/test_inverted_index.py)."""
     order = (F.asc("letter"), F.desc("df"), F.asc("word"))
     if num_partitions == 1:

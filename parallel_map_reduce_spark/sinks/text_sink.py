@@ -1,23 +1,23 @@
-"""Partitioned formatted-text sink — the reference's 26 letter files.
+"""Formatted-text sink — the reference's 26 letter files.
 
 The reference opens ``a.txt``…``z.txt`` and fprintf's ordered rows
-(reference ``src/tema1.cpp:293-309,236-248``). Spark's native layout is a
-directory per partition value; ``write_letter_files`` produces
-byte-identical single files per letter for golden-file parity by
-coalescing each letter partition to one task file and renaming.
+(reference ``src/tema1.cpp:293-309,236-248``). ``write_letter_files``
+does the same from the driver: the ordered, formatted index rows stream
+back partition by partition and each line goes straight into its
+letter's file. There is no staging write, no commit protocol and no
+driver re-sort; the order is ``rank_within_letter``'s.
 
-At scale you would keep the directory-per-letter layout (parallel
-writers); the single-file rename is a small-corpus parity mode.
+At scale you would keep Spark's directory-per-letter layout (parallel
+writers), which ``single_file=False`` writes.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
+import string
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.inverted_index import format_index_rows, rank_within_letter
 
@@ -35,40 +35,35 @@ def write_letter_files(
     (``index_order_partitions(source_bytes)``) — ``1`` collapses a
     megabyte-scale corpus's ordering to one task with no range-sampling
     job; identical rows either way.
+
+    ``single_file=True`` truncates all 26 files (a stale file is
+    overwritten, a letter with no words gets an empty one), then streams
+    the rows with ``toLocalIterator(prefetchPartitions=True)``; the order
+    is total (letter ASC, df DESC, word ASC) and partitions arrive in
+    order, so each line is appended as it arrives. The driver holds at
+    most two partitions of formatted rows, the one being written and the
+    one prefetched: the whole index when ``order_partitions=1``, about
+    1/R of it on the range path with R range partitions. A row whose
+    letter sorts below the previous row's raises ``ValueError``.
+    ``single_file=False`` writes Spark's ``letter=<x>/part-*`` layout.
     """
     rows = format_index_rows(rank_within_letter(index, order_partitions))
     os.makedirs(out_dir, exist_ok=True)
     if not single_file:
         rows.write.mode("overwrite").partitionBy("letter").text(out_dir)
         return
-    # Parity mode: one text file per letter. sortWithinPartitions order is
-    # preserved per written file only if each letter is a single partition,
-    # so re-sort inside each letter directory write via orderBy on a
-    # per-letter slice. 26 letters -> 26 small writes; fine at corpus scale.
-    staging = os.path.join(out_dir, "_staging")
-    rows.write.mode("overwrite").partitionBy("letter").text(staging)
-    import string
-
-    for letter in string.ascii_lowercase:
-        part_dir = os.path.join(staging, f"letter={letter}")
-        target = os.path.join(out_dir, f"{letter}.txt")
-        lines: list[str] = []
-        if os.path.isdir(part_dir):
-            for f in sorted(glob.glob(os.path.join(part_dir, "part-*"))):
-                with open(f, encoding="utf-8") as fh:
-                    lines.extend(fh.read().splitlines())
-        # Re-assert the total order (df desc, word asc) at file-write time.
-        # This makes the parity files independent of part-file enumeration,
-        # which means golden parity does NOT exercise rank_within_letter's
-        # part-name-order contract — tests/test_sink_order.py pins that
-        # contract directly on the single_file=False layout instead.
-        # df = count of ids inside brackets; word = prefix before ':['.
-        def sort_key(line: str) -> tuple[int, str]:
-            word, _, rest = line.partition(":[")
-            df = rest.rstrip("]").count(" ") + 1 if rest.rstrip("]") else 0
-            return (-df, word)
-
-        lines.sort(key=sort_key)
-        with open(target, "w", encoding="utf-8") as fh:
-            fh.write("".join(ln + "\n" for ln in lines))
-    shutil.rmtree(staging, ignore_errors=True)
+    with ExitStack() as stack:
+        files = {
+            letter: stack.enter_context(
+                open(os.path.join(out_dir, f"{letter}.txt"), "w", encoding="utf-8")
+            )
+            for letter in string.ascii_lowercase
+        }
+        prev = ""
+        for letter, line in rows.toLocalIterator(prefetchPartitions=True):
+            if letter < prev:
+                raise ValueError(
+                    f"index rows out of order: letter {letter!r} after {prev!r}"
+                )
+            prev = letter
+            files[letter].write(line + "\n")

@@ -54,6 +54,14 @@ def test_cli_rejects_bad_args(tmp_path):
         main(["1", "1", str(tmp_path / "missing.txt")])
 
 
+def _corpus_texts(n: int) -> list[str]:
+    """The first ``n`` documents of refdata/reference_corpus.parquet."""
+    import pyarrow.parquet as pq
+
+    corpus = os.path.join(os.path.dirname(__file__), "..", "refdata", "reference_corpus.parquet")
+    return pq.read_table(corpus).sort_by("doc_id").column("text").to_pylist()[:n]
+
+
 def _reference_letter_files(texts: list[str]) -> dict[str, bytes]:
     """The reference's algorithm, inline: each document's distinct
     cleaned words (split on space/tab/newline, keep ASCII letters,
@@ -77,11 +85,10 @@ def test_cli_mr_sweep_matches_inline_reference(spark, tmp_path, side):
     """The M×R determinism contract without the reference checkout: 60
     documents of refdata/reference_corpus.parquet as files, and every
     (M, R) in {1, 4}² must write the inline reference's 26 files byte
-    for byte, on both sides of the manifest's driver-read bound."""
-    import pyarrow.parquet as pq
-
-    corpus = os.path.join(os.path.dirname(__file__), "..", "refdata", "reference_corpus.parquet")
-    texts = pq.read_table(corpus).sort_by("doc_id").column("text").to_pylist()[:60]
+    for byte, on both sides of the manifest's driver-read bound. Each
+    ``--out`` starts with stale letter files, which must be overwritten
+    (an empty letter included), and must end holding the 26 files only."""
+    texts = _corpus_texts(60)
     names = []
     for i, text in enumerate(texts):
         (tmp_path / f"doc{i:03d}.txt").write_text(text, encoding="utf-8")
@@ -90,9 +97,14 @@ def test_cli_mr_sweep_matches_inline_reference(spark, tmp_path, side):
     manifest.write_text(f"{len(names)}\n" + "\n".join(names) + "\n")
     want = _reference_letter_files(texts)
     assert sum(map(len, want.values())) > 1000
+    assert not all(want.values())  # a letter with no words
     with manifest_side(side):
         for mappers, reducers in [(1, 1), (1, 4), (4, 1), (4, 4)]:
             out = tmp_path / f"m{mappers}r{reducers}"
+            out.mkdir()
+            for letter in want:
+                (out / f"{letter}.txt").write_text("stale:[0]\n")
             assert main([str(mappers), str(reducers), str(manifest), "--out", str(out)]) == 0
             got = {letter: (out / f"{letter}.txt").read_bytes() for letter in want}
             assert got == want, f"M={mappers} R={reducers}"
+            assert sorted(os.listdir(out)) == sorted(f"{letter}.txt" for letter in want)

@@ -142,6 +142,29 @@ def test_connected_components_local_equals_distributed_random(spark):
     assert local == dist and len(local) > 100
 
 
+@pytest.mark.parametrize("pairs_n, path", [(3, "driver"), (4, "loop")])
+def test_connected_components_local_edge_cap_sides(spark, monkeypatch, pairs_n, path):
+    """Both sides of CC_LOCAL_EDGE_CAP = N = 3: a chain of N pairs is 2N
+    symmetrized edges and runs the driver union-find; N + 1 pairs is
+    2N + 2 edges and runs the propagation loop. Labels are the same
+    either way: every node joins the component of node 1."""
+    calls = []
+    cc_local = D._cc_local
+
+    def spy(edge_rows):
+        calls.append(1)
+        return cc_local(edge_rows)
+
+    monkeypatch.setattr(D, "CC_LOCAL_EDGE_CAP", 3)
+    monkeypatch.setattr(D, "_cc_local", spy)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, pairs_n + 1)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    got = {(r.doc_id, r.cluster_id) for r in D.connected_components(pairs).collect()}
+    assert got == {(i, 1) for i in range(1, pairs_n + 2)}
+    assert len(calls) == (1 if path == "driver" else 0)
+
+
 def test_connected_components_raises_when_unconverged(spark):
     """The distributed loop must refuse to return labels that are still
     changing: a 20-node chain needs 19 propagation rounds, so
