@@ -1,16 +1,14 @@
 """LIVE Structured Streaming queries wired into the correctness gate.
 
 Each entry actually runs a streaming query (file source → watermarked
-stateful aggregation → memory sink, drained with availableNow) and
-returns the sink contents as a batch DataFrame — so the DuckDB oracle
-checks the STREAMING engine's output, not a batch twin. The batch twins
-in ``queries/streaming_batch.py`` stay as independent checks of the same
-logical semantics.
+stateful aggregation → memory sink, drained with availableNow by
+``streaming/drain.py``) and returns the sink contents as a batch
+DataFrame — so the DuckDB oracle checks the STREAMING engine's output,
+not a batch twin. The batch twins in ``queries/streaming_batch.py`` stay
+as independent checks of the same logical semantics.
 """
 
 from __future__ import annotations
-
-import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,15 +16,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..streaming import events_stream as ES
 from ..streaming import sessionize as SZ
-
-# Memory-sink query names must be unique per (re)run within a session.
-_seq = itertools.count()
-
-
-def _drain(stream_df: DataFrame, base: str, spark: SparkSession) -> DataFrame:
-    name = f"{base}_{next(_seq)}"
-    ES.run_to_memory(stream_df, name)
-    return spark.table(name)
+from ..streaming.drain import drain
 
 
 @register(
@@ -46,7 +36,7 @@ GROUP BY 1, 2
 )
 def streaming_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ES.hourly_tumbling_stream(ES.read_events_stream(spark, sf_dir))
-    return _drain(stream, "live_hourly", spark)
+    return drain(stream, "complete")[0]
 
 
 @register(
@@ -71,7 +61,7 @@ GROUP BY 1
 )
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ES.sliding_windows_stream(ES.read_events_stream(spark, sf_dir))
-    out = _drain(stream, "live_sliding", spark)
+    out = drain(stream, "complete")[0]
     return out.select("window_start_us", "n_events")
 
 
@@ -89,7 +79,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_sliding_users_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ES.sliding_windows_stream(ES.read_events_stream(spark, sf_dir))
-    out = _drain(stream, "live_sliding_users", spark)
+    out = drain(stream, "complete")[0]
     return out.select("window_start_us", "n_events", "n_users_approx")
 
 
@@ -131,7 +121,7 @@ GROUP BY user_id, session_id
 )
 def streaming_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = SZ.session_window_agg(ES.read_events_stream(spark, sf_dir), streaming=True)
-    return _drain(stream, "live_sessions", spark)
+    return drain(stream, "complete")[0]
 
 
 @register(
@@ -158,13 +148,7 @@ def streaming_segment_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ES.segment_enriched_stream(
         ES.read_events_stream(spark, sf_dir), customer
     )
-    return _drain(stream, "live_segment", spark)
-
-
-def _drain_append(stream_df: DataFrame, base: str, spark: SparkSession) -> DataFrame:
-    name = f"{base}_{next(_seq)}"
-    ES.run_to_memory_append(stream_df, name)
-    return spark.table(name)
+    return drain(stream, "complete")[0]
 
 
 @register(
@@ -199,7 +183,7 @@ def streaming_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_type") == "click"
     )
     stream = ES.purchase_click_interval_join(purchases, clicks)
-    return _drain_append(stream, "live_pclick", spark)
+    return drain(stream)[0]
 
 
 @register(
@@ -218,7 +202,7 @@ SELECT DISTINCT user_id, event_type FROM events
 )
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ES.dedup_keys_stream(ES.read_events_stream(spark, sf_dir))
-    return _drain_append(stream, "live_dedup", spark)
+    return drain(stream)[0]
 
 
 from ..operators import curation as _C  # noqa: E402  (oracle constants)
@@ -245,7 +229,7 @@ def streaming_curation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import curation_stream as CS
 
     stream = CS.curation_stream(CS.read_documents_stream(spark, sf_dir))
-    return _drain_append(stream, "live_curation", spark)
+    return drain(stream)[0]
 
 
 @register(
@@ -277,7 +261,7 @@ def streaming_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rocks = IS.rocksdb_session(spark)
     stream = IS.inverted_index_stream(CS.read_documents_stream(rocks, sf_dir))
-    return IS.drain_rocksdb(stream, f"live_index_rocks_{next(_seq)}", rocks)
+    return IS.drain_rocksdb(stream, None, rocks)
 
 
 def _set_index_oracle() -> None:
@@ -437,7 +421,7 @@ def streaming_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = load_table(spark, sf_dir, "documents")
     stream = MS.image_features_stream(MS.read_image_payload_stream(spark), docs)
-    return _drain_append(stream, "live_mm_features", spark)
+    return drain(stream)[0]
 
 
 def _set_multimodal_oracle() -> None:
@@ -490,7 +474,7 @@ def streaming_url_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     stream = US.url_frontier_stream(US.read_url_stream(spark), ids)
-    return _drain_append(stream, "live_urlfront", spark)
+    return drain(stream)[0]
 
 
 from .warc_ingest import WRECS_CTE as _WRECS_CTE
@@ -556,7 +540,7 @@ def streaming_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "block_digest_ok",
         "payload_digest_ok",
     )
-    return _drain_append(out, "live_warc", spark)
+    return drain(out)[0]
 
 
 from .warc_ingest import ROBOTS_ORACLE as _ROBOTS_ORACLE
@@ -602,4 +586,4 @@ def streaming_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = RS.robots_filter_stream(
         RS.read_robots_url_stream(spark), rules_by_host, ids
     )
-    return _drain_append(stream, "live_robots", spark)
+    return drain(stream)[0]

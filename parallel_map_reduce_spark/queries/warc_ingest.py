@@ -36,6 +36,7 @@ from ..operators.html_extract import html_extract_duckdb_expr, html_text_column
 from ..registry import register
 from ..sources.catalog import REFDATA_DIR, load_table
 from ..sources.warc import read_warc
+from ..streaming.drain import fresh_result_dir
 
 WARC_FIXTURE_DIR = os.path.join(REFDATA_DIR, "warc")
 WARC_EXPECTED_PARQUET = os.path.join(REFDATA_DIR, "warc_expected.parquet")
@@ -267,7 +268,6 @@ FROM x
 def crawl_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sinks.warc_sink import write_warc_conversions
     from ..sources.warc import read_warc
-    from ..streaming.dedup_stream import _fresh_result_dir
 
     pages = scoped_warc_records(spark, sf_dir).filter(
         (F.col("warc_type") == "response")
@@ -280,7 +280,7 @@ def crawl_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("warc_date").alias("date"),
         html_text_column(F.col("payload_text")).alias("text"),
     )
-    out_dir = _fresh_result_dir("wet_roundtrip", sf_dir)
+    out_dir = fresh_result_dir("wet_roundtrip", sf_dir)
     write_warc_conversions(wet_in, out_dir)
     reread = read_warc(spark, out_dir).filter(
         F.col("warc_type") == "conversion"
@@ -401,7 +401,6 @@ def crawl_wet_to_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.inverted_index import inverted_index as build_index
     from ..sinks.warc_sink import write_warc_conversions
     from ..sources.catalog import read_parquet
-    from ..streaming.dedup_stream import _fresh_result_dir
 
     pages = scoped_warc_records(spark, sf_dir).filter(
         (F.col("warc_type") == "response")
@@ -414,7 +413,7 @@ def crawl_wet_to_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("warc_date").alias("date"),
         html_text_column(F.col("payload_text")).alias("text"),
     )
-    wet_dir = _fresh_result_dir("wet_to_index", sf_dir)
+    wet_dir = fresh_result_dir("wet_to_index", sf_dir)
     write_warc_conversions(wet_in, wet_dir)
     conv = read_warc(spark, wet_dir).filter(F.col("warc_type") == "conversion")
     docs = conv.select(
@@ -423,7 +422,7 @@ def crawl_wet_to_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint").alias("doc_id"),
         F.col("payload_text").alias("text"),
     )
-    landed_dir = _fresh_result_dir("wet_landed", sf_dir)
+    landed_dir = fresh_result_dir("wet_landed", sf_dir)
     docs.write.mode("overwrite").parquet(landed_dir)
     landed = read_parquet(spark, landed_dir)
     idx = build_index(landed)

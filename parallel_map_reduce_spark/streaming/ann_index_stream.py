@@ -28,13 +28,10 @@ commits — searchability lag is one micro-batch.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .drain import drain, fresh_result_dir
 
 
 def run_ivfpq_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,14 +46,7 @@ def run_ivfpq_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = _pretrained_pq_books(spark, sf_dir)
     cents = _pretrained_cents(spark, sf_dir)
 
-    # pid-keyed store, cleared up front: repeat runs (bench best-of-N,
-    # gate re-runs) would otherwise append duplicates. Kept after the
-    # drain — the returned DataFrame reads it lazily.
-    tag = hashlib.md5(
-        f"annidx:{os.path.abspath(sf_dir)}:{os.getpid()}".encode()
-    ).hexdigest()[:12]
-    store = os.path.join(tempfile.gettempdir(), "pmrs_ann_index_stream", tag)
-    shutil.rmtree(store, ignore_errors=True)
+    store = fresh_result_dir("pmrs_ann_index_stream", sf_dir)
 
     staging = _staging_dir(sf_dir, table="embeddings")
     # memoized schema probe (catalog.read_parquet): zero-job on warm
@@ -83,17 +73,7 @@ def run_ivfpq_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             store + "/vectors"
         )
 
-    ckpt = tempfile.mkdtemp(prefix="pmrs_annidx_ckpt_")
-    try:
-        (
-            stream.writeStream.foreachBatch(_apply)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(stream, foreach_batch=_apply)
 
     out = spark.read.parquet(store + "/codes")
     return out.select(

@@ -23,83 +23,12 @@ result equals the batch run exactly and shares its DuckDB oracle.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_lsh_matches_indexed, lsh_band_signatures
 from ..sources.catalog import load_table, local_frame
-
-
-def _fresh_result_dir(kind: str, sf_dir: str) -> str:
-    """Deterministic per-(pid, sf_dir) result directory under
-    ``/tmp/<kind>/<pid>/<hash>``, cleared up front: repeat runs in one
-    process (bench best-of-N, gate re-runs) reuse ONE directory
-    instead of leaking a fresh mkdtemp each invocation. The dir must
-    outlive the call (the returned DataFrame reads it lazily), so it
-    is cleared at the START of the next run, not on exit — and
-    sibling PID dirs whose process has exited are swept here too
-    (advisor r13: pid-keyed tags otherwise accumulate in /tmp
-    indefinitely across processes)."""
-    parent = os.path.join(tempfile.gettempdir(), kind)
-    os.makedirs(parent, exist_ok=True)
-    with os.scandir(parent) as it:
-        for e in it:
-            if not e.is_dir(follow_symlinks=False):
-                continue
-            try:
-                pid = int(e.name)
-            except ValueError:
-                # pre-r14 hash-keyed layout: pid unrecoverable, sweep
-                shutil.rmtree(e.path, ignore_errors=True)
-                continue
-            if pid == os.getpid():
-                continue
-            if pid <= 0:
-                # os.kill(0, 0) signals OUR OWN process group and
-                # always "succeeds" — a dir literally named "0" (or a
-                # negative number) is never a live sibling; sweep it
-                # (advisor r14).
-                shutil.rmtree(e.path, ignore_errors=True)
-                continue
-            try:
-                os.kill(pid, 0)
-            except (ProcessLookupError, OverflowError):
-                # gone — or an all-digit pre-r14 hash tag too large to
-                # be a pid; either way the dir is stale
-                shutil.rmtree(e.path, ignore_errors=True)
-                continue
-            except PermissionError:
-                pass  # alive under another uid — not ours to sweep
-            # pid-alive can be a RECYCLED pid belonging to an unrelated
-            # process; age out dirs untouched for a day as a fallback
-            # (advisor r14). Writes land in TAG SUBDIRS, which never
-            # touch the parent pid dir's mtime — so age on the MAX
-            # mtime across the pid dir and its children, or a
-            # legitimately long-running (>1 day) live sibling would be
-            # swept mid-run (advisor r15). Best-effort: correctness
-            # never depends on the sweep, only /tmp hygiene does.
-            try:
-                newest = e.stat(follow_symlinks=False).st_mtime
-                with os.scandir(e.path) as tags:
-                    for t in tags:
-                        newest = max(
-                            newest, t.stat(follow_symlinks=False).st_mtime
-                        )
-                if time.time() - newest > 86400:
-                    shutil.rmtree(e.path, ignore_errors=True)
-            except OSError:
-                pass
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(parent, str(os.getpid()), tag)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    return out
+from .drain import drain, fresh_result_dir
 
 
 def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,7 +42,7 @@ def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("source") != INCR_SOURCE)
     ).localCheckpoint(eager=True)  # the standing index artifact
 
-    out_dir = _fresh_result_dir("pmrs_lsh_matches", sf_dir)
+    out_dir = fresh_result_dir("pmrs_lsh_matches", sf_dir)
     empty = local_frame(spark, [], "new_doc BIGINT, corpus_doc BIGINT")
     empty.write.mode("append").parquet(out_dir)  # schema for the 0-match case
 
@@ -125,20 +54,7 @@ def run_incremental_lsh_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsh_band_signatures(inc), corpus_bands
         ).write.mode("append").parquet(out_dir)
 
-    # Fresh checkpoint per invocation (a reused one would drain zero
-    # batches on repeat runs); removed after the drain completes.
-    ckpt = tempfile.mkdtemp(prefix="pmrs_lsh_ckpt_")
-    try:
-        (
-            read_documents_stream(spark, sf_dir)
-            .writeStream.foreachBatch(_apply)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(read_documents_stream(spark, sf_dir), foreach_batch=_apply)
     # distinct: pair-level idempotence if a batch is ever replayed
     # (foreachBatch is at-least-once without a transactional sink).
     return spark.read.parquet(out_dir).distinct()
@@ -148,12 +64,12 @@ def drain_band_index(
     spark: SparkSession,
     docs_stream: DataFrame,
     store: str,
-    ckpt: str,
+    ckpt: str | None = None,
     fail_after_epochs: int | None = None,
 ) -> None:
     """Drain a documents stream into the band store at ``store`` with
-    offsets checkpointed at ``ckpt`` — the restartable core of the
-    band-index maintenance drain. ``fail_after_epochs`` plants a crash
+    offsets checkpointed at ``ckpt`` (a fresh, removed one if None) —
+    the restartable core of the band-index maintenance drain. ``fail_after_epochs`` plants a crash
     AFTER the sink write but BEFORE the epoch's checkpoint commit (the
     worst at-least-once window: the rows landed, the offset did not),
     for the kill-and-restart witness in tests/test_streaming.py; a
@@ -171,13 +87,7 @@ def drain_band_index(
                 "planted crash: sink write committed, checkpoint not"
             )
 
-    (
-        docs_stream.writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-        .awaitTermination()
-    )
+    drain(docs_stream, foreach_batch=_apply, ckpt=ckpt)
 
 
 def band_index_store(spark: SparkSession, store: str) -> DataFrame:
@@ -208,15 +118,9 @@ def run_band_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final store (doc_id, band, sig)."""
     from .curation_stream import read_documents_stream
 
-    store = _fresh_result_dir("pmrs_band_index", sf_dir)
+    store = fresh_result_dir("pmrs_band_index", sf_dir)
     empty = local_frame(spark, [], "doc_id BIGINT, band INT, sig STRING")
     empty.write.mode("append").parquet(store)  # schema for the 0-doc case
 
-    ckpt = tempfile.mkdtemp(prefix="pmrs_bandidx_ckpt_")
-    try:
-        drain_band_index(
-            spark, read_documents_stream(spark, sf_dir), store, ckpt
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain_band_index(spark, read_documents_stream(spark, sf_dir), store)
     return band_index_store(spark, store)

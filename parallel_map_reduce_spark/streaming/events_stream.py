@@ -4,9 +4,9 @@ The reference is strictly batch (two-barrier bulk-synchronous execution,
 reference ``src/tema1.cpp:320-321``); streaming is a north-star
 extension (SURVEY.md §2.2). Each pipeline here is the streaming twin of
 a registered batch query in ``queries/streaming_batch.py``, and
-``tests/test_streaming.py`` proves batch/stream equivalence by running
-the stream with ``trigger(availableNow=True)`` into a memory sink and
-comparing against the batch plan on the same files.
+``tests/test_streaming.py`` proves batch/stream equivalence by draining
+the stream into a memory sink (``streaming/drain.py``) and comparing
+against the batch plan on the same files.
 
 Scale design: the file source is a placeholder for Kafka/queue sources
 in production; everything downstream — watermark, windowed partial
@@ -148,28 +148,6 @@ def sliding_windows_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_to_memory(stream_df: DataFrame, table_name: str) -> None:
-    """Drain the stream into an in-memory table with availableNow (process
-    everything present, then stop) — the test/CI execution mode.
-
-    ``outputMode("complete")`` is deliberate for this drain: the staging
-    dir holds one file and the source has no per-file trigger cap, so the
-    drain is a SINGLE micro-batch and complete-mode emits the full state
-    exactly once. Append mode would withhold every window still inside
-    the watermark delay (the availableNow drain ends before the watermark
-    passes the tail windows), breaking parity with the batch oracle. At
-    scale the shape is append-with-watermark into a real sink (Kafka /
-    Delta), where the watermark does advance continuously."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def segment_enriched_stream(events: DataFrame, customer: DataFrame) -> DataFrame:
     """Stream-static join: the event stream enriched with the customer
     dimension (user_id → mktsegment), then a watermarked windowed count
@@ -193,21 +171,6 @@ def segment_enriched_stream(events: DataFrame, customer: DataFrame) -> DataFrame
             "n_events",
         )
     )
-
-
-def run_to_memory_append(stream_df: DataFrame, table_name: str) -> None:
-    """Append-mode drain for queries whose results emit as they are
-    produced (stream-stream INNER joins emit on match; nothing is
-    withheld for watermark closure, which only governs state eviction).
-    Complete mode is invalid for joins — hence the second drain mode."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def purchase_click_interval_join(
@@ -267,44 +230,3 @@ def dedup_keys_stream(events: DataFrame) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-
-
-def run_foreach_batch_parquet(stream_df: DataFrame, path: str) -> None:
-    """Production-shaped sink: drain via ``foreachBatch`` into parquet.
-
-    ``foreachBatch`` hands each micro-batch to arbitrary BATCH writer
-    code — the pattern that covers every sink Spark lacks a native
-    streaming writer for (JDBC, upserts, multi-table fan-out). Batch
-    writes are idempotent per epoch only if the writer makes them so;
-    plain parquet append shown here relies on the availableNow drain
-    running each epoch once (exactly-once needs a transactional target
-    or epoch-keyed paths)."""
-
-    def _write(df: DataFrame, epoch_id: int) -> None:
-        df.write.mode("append").parquet(path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_to_memory_update(stream_df: DataFrame, table_name: str) -> None:
-    """Update-mode drain: emits only the groups CHANGED in each
-    micro-batch — the mode a keyed upsert sink (JDBC merge, KV store)
-    consumes. For a single-batch availableNow drain every group changes
-    exactly once, so update == complete there (pinned in
-    tests/test_streaming.py); with multiple batches, update emits
-    deltas where complete re-emits the world — the difference that
-    matters to a real sink."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.tokenize import doc_word_pairs
+from .drain import drain
 
 
 def inverted_index_stream(docs: DataFrame) -> DataFrame:
@@ -73,22 +74,19 @@ def rocksdb_session(spark):
     return s
 
 
-def drain_rocksdb(stream_df: DataFrame, table_name: str, session) -> DataFrame:
-    """availableNow complete-mode drain that REFUSES to pass if the
+def drain_rocksdb(
+    stream_df: DataFrame, table_name: str | None, session=None
+) -> DataFrame:
+    """Complete-mode drain that REFUSES to pass if the
     RocksDB provider did not actually engage: the provider class is a
     conf Spark would silently ignore if unavailable, so the drain
     checks the query's final progress for RocksDB custom metrics
     (only the RocksDB provider emits them) — a silent fallback to the
     heap-backed store must fail the gate, not masquerade as the
-    100 TB configuration."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    100 TB configuration. The memory table is read from the stream's
+    own session (the RocksDB clone), so ``session`` is not needed;
+    ``table_name=None`` picks a unique name."""
+    out, q = drain(stream_df, "complete", table=table_name)
     progress = q.lastProgress
     state_ops = (progress or {}).get("stateOperators") or []
     custom = state_ops[0].get("customMetrics", {}) if state_ops else {}
@@ -98,4 +96,4 @@ def drain_rocksdb(stream_df: DataFrame, table_name: str, session) -> DataFrame:
             f"inverted-index drain (metrics: {sorted(custom)[:5]}) — "
             "refusing to serve heap-backed state as the 100 TB config"
         )
-    return session.table(table_name)
+    return out

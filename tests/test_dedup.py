@@ -588,3 +588,27 @@ def test_one_band_join_and_one_oracle_minhash():
             for m in pat.finditer(src)
         ]
         assert len(hits) == 1, (label, hits)
+
+
+def test_one_streaming_drain():
+    """Streaming queries drain through one helper, streaming/drain.py:
+    only it calls writeStream or sets the availableNow trigger, and no
+    other streaming module makes temporary directories (checkpoints
+    and result stores come from the helper)."""
+    import os
+
+    drain_py = os.path.join("streaming", "drain.py")
+    sources = dict(_package_sources())
+    assert sources[drain_py].count(".writeStream") == 1
+    assert "trigger(availableNow=True)" in sources[drain_py]
+    offenders = [
+        rel
+        for rel, src in sources.items()
+        if rel != drain_py
+        and (
+            "writeStream" in src
+            or "trigger(availableNow=True)" in src
+            or (rel.startswith("streaming" + os.sep) and "tempfile.mkdtemp" in src)
+        )
+    ]
+    assert offenders == []

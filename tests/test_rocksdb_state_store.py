@@ -38,11 +38,11 @@ def _drain(session, sf_dir, table_name):
     from parallel_map_reduce_spark.streaming.events_stream import (
         hourly_tumbling_stream,
         read_events_stream,
-        run_to_memory,
     )
+    from parallel_map_reduce_spark.streaming.drain import drain
 
     stream = hourly_tumbling_stream(read_events_stream(session, sf_dir))
-    run_to_memory(stream, table_name)
+    drain(stream, "complete", table=table_name)
     return {
         (r.window_start_us, r.event_type): (r.n_events, r.sum_value)
         for r in session.sql(f"SELECT * FROM {table_name}").collect()
@@ -71,14 +71,9 @@ def test_rocksdb_provider_engages(rocks_spark):
         .groupBy(F.window("timestamp", "1 second"))
         .count()
     )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("t_rocks_engage")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    from parallel_map_reduce_spark.streaming.drain import drain
+
+    _, q = drain(df, "complete", table="t_rocks_engage")
     progress = q.lastProgress
     state_ops = progress["stateOperators"]
     assert state_ops, "no stateful operator in progress"

@@ -29,7 +29,6 @@ from test_cli import _corpus_texts, _reference_letter_files
 from parallel_map_reduce_spark.operators.inverted_index import inverted_index, rank_within_letter
 from parallel_map_reduce_spark.sinks import text_sink
 from parallel_map_reduce_spark.sinks.text_sink import write_letter_files
-from parallel_map_reduce_spark.sources.catalog import load_table
 
 
 def _df_of(line: str) -> int:
@@ -57,8 +56,12 @@ def _range_partitions_64(spark):
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce)
 
 
-def test_partitioned_layout_part_name_order_is_row_order(spark, sf_dir, tmp_path):
-    idx = inverted_index(load_table(spark, sf_dir, "documents"))
+def test_partitioned_layout_part_name_order_is_row_order(spark, tmp_path):
+    # The refdata slice has words of many document frequencies in every
+    # letter, so a partition that loses df DESC is out of order here.
+    texts = _corpus_texts(60)
+    docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id BIGINT, text STRING")
+    idx = inverted_index(docs)
     out = str(tmp_path / "letters_partitioned")
     with _range_partitions_64(spark):
         write_letter_files(idx, out, single_file=False)

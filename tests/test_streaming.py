@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from parallel_map_reduce_spark.sources.catalog import load_table
 from parallel_map_reduce_spark.streaming import events_stream as ES
 from parallel_map_reduce_spark.streaming import sessionize as SZ
+from parallel_map_reduce_spark.streaming.drain import drain
 
 
 def _rows_set(df):
@@ -28,7 +29,7 @@ def batch_events(spark, sf_dir):
 
 def test_hourly_tumbling_stream_matches_batch(spark, sf_dir, batch_events):
     stream = ES.hourly_tumbling_stream(ES.read_events_stream(spark, sf_dir))
-    ES.run_to_memory(stream, "t_hourly")
+    drain(stream, "complete", table="t_hourly")
     got = _rows_set(spark.table("t_hourly"))
     want = _rows_set(
         batch_events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -48,7 +49,7 @@ def test_hourly_tumbling_stream_matches_batch(spark, sf_dir, batch_events):
 
 def test_sliding_stream_matches_batch_counts(spark, sf_dir, batch_events):
     stream = ES.sliding_windows_stream(ES.read_events_stream(spark, sf_dir))
-    ES.run_to_memory(stream, "t_sliding")
+    drain(stream, "complete", table="t_sliding")
     got = _rows_set(spark.table("t_sliding").select("window_start_us", "n_events"))
     want = _rows_set(
         batch_events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -60,7 +61,7 @@ def test_sliding_stream_matches_batch_counts(spark, sf_dir, batch_events):
 
 def test_session_window_stream_matches_batch(spark, sf_dir, batch_events):
     stream = SZ.session_window_agg(ES.read_events_stream(spark, sf_dir), streaming=True)
-    ES.run_to_memory(stream, "t_sessions")
+    drain(stream, "complete", table="t_sessions")
     got = _rows_set(spark.table("t_sessions"))
     want = _rows_set(SZ.session_window_agg(batch_events, streaming=False))
     assert got == want and len(got) > 0
@@ -71,14 +72,7 @@ def test_stateful_counts_total(spark, sf_dir, batch_events):
     the batch per-user count (update-mode emits one row per microbatch;
     the final/maximum value is the total)."""
     stream = SZ.stateful_session_counts(ES.read_events_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_stateful")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, "update", table="t_stateful")
     got = {
         r.user_id: r.max_n
         for r in spark.table("t_stateful")
@@ -124,14 +118,7 @@ def test_watermark_append_multibatch(spark, tmp_path, batch_events):
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), F.col("w.end").alias("we"), "event_type", "n")
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_append_wm")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, "append", table="t_append_wm")
     emitted = spark.table("t_append_wm").collect()
     assert emitted, "append mode emitted nothing — watermark never advanced"
 
@@ -163,7 +150,11 @@ def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "stream_parquet")
     stream = ES.hourly_tumbling_stream(ES.read_events_stream(spark, sf_dir))
-    ES.run_foreach_batch_parquet(stream, out)
+    drain(
+        stream,
+        "complete",
+        foreach_batch=lambda df, _: df.write.mode("append").parquet(out),
+    )
 
     back = spark.read.parquet(out)
     # compare against the registered live query (memory drain)
@@ -180,7 +171,7 @@ def test_update_mode_single_batch_equals_complete(spark, sf_dir):
     from parallel_map_reduce_spark.streaming import events_stream as ES
 
     upd = ES.hourly_tumbling_stream(ES.read_events_stream(spark, sf_dir))
-    ES.run_to_memory_update(upd, "upd_mode_check")
+    drain(upd, "update", table="upd_mode_check")
     got = spark.table("upd_mode_check")
 
     from parallel_map_reduce_spark.registry import all_queries
@@ -268,15 +259,7 @@ def test_stream_outer_interval_join_semantics(spark, sf_dir, batch_events):
         .withWatermark("c_ts", ES.WATERMARK)
     )
     cond = F.expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts")
-    q = (
-        p.join(c, cond, "left_outer")
-        .writeStream.format("memory")
-        .queryName("t_outer_join")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(p.join(c, cond, "left_outer"), "append", table="t_outer_join")
     out = spark.table("t_outer_join")
 
     ep = batch_events.filter(F.col("event_type") == "purchase")
@@ -320,7 +303,7 @@ def test_streaming_inverted_index_equals_batch_flagship(spark, sf_dir):
     from parallel_map_reduce_spark.streaming import index_stream as IS
 
     stream = IS.inverted_index_stream(CS.read_documents_stream(spark, sf_dir))
-    ES.run_to_memory(stream, "t_live_index")
+    drain(stream, "complete", table="t_live_index")
     live = sorted(map(tuple, spark.table("t_live_index").collect()))
     batch = sorted(map(tuple, q_inverted_index(spark, sf_dir).collect()))
     assert live == batch
@@ -551,7 +534,7 @@ def test_fresh_result_dir_sweep_guards(tmp_path, monkeypatch):
     import os
     import time as _time
 
-    import parallel_map_reduce_spark.streaming.dedup_stream as DS
+    from parallel_map_reduce_spark.streaming.drain import fresh_result_dir
 
     monkeypatch.setattr(
         "tempfile.gettempdir", lambda: str(tmp_path)
@@ -571,9 +554,59 @@ def test_fresh_result_dir_sweep_guards(tmp_path, monkeypatch):
     own = parent / str(os.getpid())
     own.mkdir()
 
-    out = DS._fresh_result_dir("pmrs_sweeptest", str(tmp_path / "sf"))
+    out = fresh_result_dir("pmrs_sweeptest", str(tmp_path / "sf"))
     assert not zero.exists(), "dir named '0' must be swept"
     assert not neg.exists(), "negative-pid dir must be swept"
     assert not old_live.exists(), "day-old live-pid dir must age out"
     assert own.exists(), "our own pid dir is never swept"
     assert os.path.isdir(out)
+
+
+def test_live_stores_sweep_dead_siblings_and_keep_one(spark, sf_dir, tmp_path, monkeypatch):
+    """The cdc and ann-index drains keep their final store under
+    fresh_result_dir: a dead process's store is swept on the next run,
+    and repeat runs in one process reuse one store per kind."""
+    import os
+    import subprocess
+    import sys
+
+    from parallel_map_reduce_spark.queries.streaming_live import (
+        streaming_cdc_apply,
+        streaming_ivfpq_index,
+    )
+
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()
+    kinds = ("pmrs_cdc_store", "pmrs_ann_index_stream")
+    for kind in kinds:
+        (tmp_path / kind / str(child.pid) / "stale").mkdir(parents=True)
+
+    for _ in range(2):
+        assert streaming_cdc_apply(spark, sf_dir).count() > 0
+        assert streaming_ivfpq_index(spark, sf_dir).count() > 0
+
+    for kind in kinds:
+        assert os.listdir(tmp_path / kind) == [str(os.getpid())], kind
+        assert len(os.listdir(tmp_path / kind / str(os.getpid()))) == 1, kind
+
+
+def test_failing_drain_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """A foreachBatch function that raises fails the drain, and the
+    checkpoint the helper made is removed all the same."""
+    from pyspark.errors import StreamingQueryException
+
+    monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
+    src = tmp_path / "src"
+    spark.range(10).write.parquet(str(src))
+    stream = spark.readStream.schema("id BIGINT").parquet(str(src))
+    seen = []
+
+    def _fail(batch_df, epoch_id):
+        seen.extend(p.name for p in tmp_path.glob("pmrs_drain_ckpt_*"))
+        raise RuntimeError("planted sink failure")
+
+    with pytest.raises(StreamingQueryException, match="planted sink failure"):
+        drain(stream, foreach_batch=_fail)
+    assert len(seen) == 1, "the drain ran without a helper-made checkpoint"
+    assert not list(tmp_path.glob("pmrs_drain_ckpt_*"))

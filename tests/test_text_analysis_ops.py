@@ -250,6 +250,55 @@ def test_doc_similarity_nonvacuous_at_every_tested_sf(spark):
         assert lo <= n <= hi, f"{sf_dir}: {n} pairs (vacuous or degenerate)"
 
 
+def _letters(i: int) -> str:
+    """A distinct all-letter word per integer (the tokenizer keeps letters only)."""
+    out = ""
+    while True:
+        out += chr(ord("a") + i % 26)
+        i //= 26
+        if not i:
+            return "filler" + out
+
+
+def _similar_pairs(spark, texts, **kw):
+    from parallel_map_reduce_spark.operators.text_analysis import (
+        doc_similarity_tfidf,
+    )
+
+    docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id BIGINT, text STRING")
+    return {(r.doc_a, r.doc_b) for r in doc_similarity_tfidf(docs, **kw).collect()}
+
+
+def test_doc_similarity_fixed_df_cap_is_inclusive(spark):
+    """Fixed-cap form (df_cap_pct=None): a term at df == cap scores its
+    pairs, a term at df == cap + 1 leaves the vector space."""
+    texts = ["alpha"] * 3 + ["beta"] * 4
+    got = _similar_pairs(spark, texts, df_cap=3, df_cap_pct=None)
+    assert got == {(1, 2), (1, 3), (2, 3)}
+
+
+def test_doc_similarity_percent_df_cap_bound(spark):
+    """Percentage form with the defaults: the effective cap is
+    greatest(DOC_SIM_DF_CAP, ceil(DOC_SIM_DF_CAP_PCT% of n_docs)), so
+    60 at n_docs = 500 and 61 at 501. Terms at df 60, 61 and 62 each
+    live alone in their documents (cosine 1 between any two of them);
+    the rest of the corpus is one distinct filler word per document."""
+    from itertools import combinations
+
+    from parallel_map_reduce_spark.operators.text_analysis import (
+        DOC_SIM_DF_CAP,
+        DOC_SIM_DF_CAP_PCT,
+    )
+
+    assert (DOC_SIM_DF_CAP, DOC_SIM_DF_CAP_PCT) == (60, 12)
+    texts = ["theta"] * 60 + ["zeta"] * 61 + ["eta"] * 62
+    texts += [_letters(i) for i in range(501 - len(texts))]
+    theta = set(combinations(range(1, 61), 2))
+    zeta = set(combinations(range(61, 122), 2))
+    assert _similar_pairs(spark, texts[:500]) == theta
+    assert _similar_pairs(spark, texts) == theta | zeta
+
+
 def test_unicode_tokenize_letters_only_all_scripts(spark):
     """The Unicode tokenization mode (r14 contract extension): every
     token from the committed multi-script fixture is a non-empty
