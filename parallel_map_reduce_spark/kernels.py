@@ -126,3 +126,23 @@ def centroid_scorer(cent_rows):
         return np.argmax(cos, axis=1)
 
     return cids, nearest
+
+
+def pq_codes(x: np.ndarray, books) -> np.ndarray:
+    """(n, m) int32 PQ codes of the rows of ``x``: per subspace s, the
+    index of the ``books[s]`` row nearest to ``x``'s s-th subslice by
+    squared distance. Each distance is folded one dimension at a time
+    from 0.0 and np.argmin takes the FIRST minimum, so a code is the
+    lowest index among equal distances."""
+    n = x.shape[0]
+    codes = np.empty((n, len(books)), dtype=np.int32)
+    for s, book in enumerate(books):
+        cs = np.asarray(book, dtype=np.float64)
+        w = cs.shape[1]
+        xs = x[:, s * w : (s + 1) * w]
+        d = np.zeros((n, cs.shape[0]))
+        for i in range(w):
+            diff = xs[:, i : i + 1] - cs[None, :, i]
+            d = d + diff * diff
+        codes[:, s] = np.argmin(d, axis=1)
+    return codes

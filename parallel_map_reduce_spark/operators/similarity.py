@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_i32
 from ..functions.vector import cosine_similarity, dot, double_array_sql, l2_norm
-from ..kernels import centroid_scorer, embedding_matrix, fold_dot, fold_norms
+from ..kernels import (
+    centroid_scorer,
+    embedding_matrix,
+    fold_dot,
+    fold_norms,
+    pq_codes,
+)
 from ..sources.catalog import local_frame, read_parquet
 
 N_PLANES = 12
@@ -415,44 +421,73 @@ def _assign_fn(cent_rows):
     return assign
 
 
-def _train_partials_fn(cent_rows):
-    """Arrow-batch kernel factory for the Lloyd update: the same
-    nearest-centroid scorer as ``_assign_fn``, then per-cluster
-    partial sums and counts accumulated with ``np.add.at``
-    (unbuffered: applies additions sequentially in row order — the
-    order an avg partial sum visits the partition). Emits one
-    (centroid_id, pos, s, c) row per non-empty cluster x dimension per
-    task — k x dim metadata rows instead of n x dim exploded rows."""
+def _lloyd(vecs: DataFrame, col: str, books: list, assign, iters: int) -> list:
+    """``iters`` Lloyd rounds over the vectors in ``vecs[col]``, updating
+    ``books`` in place and returning it: ``books[g][c]`` is group g's
+    code-c vector, and group g quantizes the g-th slice of
+    ``len(books[g][c])`` dimensions. ``assign(x, books)`` gives each row
+    of the float64 matrix ``x`` its (n, groups) codes. IVF is one group
+    of k centroids over whole vectors; PQ is m groups of k
+    sub-centroids.
+
+    Each round is one Arrow hop and one shuffle: the map step assigns
+    every batch and sums it into per-task partials with ``np.add.at``
+    (unbuffered, so additions apply in row order, the order an avg
+    partial sum visits the partition), emitting one (g, code, pos, s,
+    c) row per non-empty code and dimension; the reduce step divides
+    the merged sums by the counts and rounds to 6 dp, which absorbs the
+    cross-partition merge order (never deterministic) and keeps the
+    assignments rerun-stable. The means come back to the driver, the
+    driver-side update of Spark MLlib's KMeans: they are metadata by
+    definition, and collecting them cuts the lineage, so training costs
+    ``iters`` corpus passes after the seeds. An empty code keeps its
+    previous vector."""
 
     def partials(it):
         import numpy as np
         import pyarrow as pa
 
-        cids, nearest = centroid_scorer(cent_rows)
-        k, dim = len(cids), len(cent_rows[0][1])
-        sums = np.zeros((k, dim))
-        cnts = np.zeros(k, dtype=np.int64)
+        w = len(books[0][0])
+        sums = np.zeros((len(books), len(books[0]), w))
+        cnts = np.zeros((len(books), len(books[0])), dtype=np.int64)
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            embs = embedding_matrix(batch.column("embedding"))
-            best = nearest(embs, batch.column("nrm").to_numpy())
-            np.add.at(sums, best, embs)
-            np.add.at(cnts, best, 1)
-        nz = np.nonzero(cnts)[0]
-        if nz.size == 0:
+            x = embedding_matrix(batch.column(0))
+            codes = assign(x, books)
+            for g in range(len(books)):
+                np.add.at(sums[g], codes[:, g], x[:, g * w : (g + 1) * w])
+                np.add.at(cnts[g], codes[:, g], 1)
+        gs, cs = np.nonzero(cnts)
+        if gs.size == 0:
             return
         yield pa.record_batch(
             [
-                pa.array(np.repeat(cids[nz], dim)),
-                pa.array(np.tile(np.arange(dim, dtype=np.int32), nz.size)),
-                pa.array(sums[nz].ravel()),
-                pa.array(np.repeat(cnts[nz], dim)),
+                pa.array(np.repeat(gs, w), type=pa.int32()),
+                pa.array(np.repeat(cs, w), type=pa.int32()),
+                pa.array(np.tile(np.arange(w, dtype=np.int32), gs.size)),
+                pa.array(sums[gs, cs].ravel()),
+                pa.array(np.repeat(cnts[gs, cs], w)),
             ],
-            names=["centroid_id", "pos", "s", "c"],
+            names=["g", "code", "pos", "s", "c"],
         )
 
-    return partials
+    for _ in range(iters):
+        # mapInArrow pickles the kernel when the plan is built, so each
+        # round ships the books as they stand before its update.
+        means = (
+            vecs.select(col)
+            .mapInArrow(partials, "g int, code int, pos int, s double, c bigint")
+            .groupBy("g", "code", "pos")
+            .agg(F.round(F.sum("s") / F.sum("c"), 6).alias("m"))
+            .collect()
+        )
+        upd: dict[tuple[int, int], dict[int, float]] = {}
+        for r in means:
+            upd.setdefault((r.g, r.code), {})[r.pos] = float(r.m)
+        for (g, c), dims in upd.items():
+            books[g][c] = [dims[p] for p in sorted(dims)]
+    return books
 
 
 def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -466,10 +501,10 @@ def _assign_to_centroids(e: DataFrame, cents: DataFrame) -> DataFrame:
     lowest centroid_id — see ``_assign_fn``.
 
     The centroid values are the driver-side copy a ``_centroid_df``
-    frame carries (the Lloyd loop, the pretrained-sidecar memo,
-    SemDeDup); any other centroid frame, such as one read back from an
-    index, is collected once: k rows of dim doubles, driver metadata
-    by definition.
+    frame carries (``train_ivf_centroids``, the pretrained-sidecar
+    memo, SemDeDup); any other centroid frame, such as one read back
+    from an index, is collected once: k rows of dim doubles, driver
+    metadata by definition.
     """
     local = getattr(cents, "_pmrs_local_cents", None)
     if local is None:
@@ -493,54 +528,25 @@ def train_ivf_centroids(
     emb: DataFrame, k: int = IVF_K, iters: int = IVF_TRAIN_ITERS
 ) -> DataFrame:
     """(centroid_id, c_emb, c_nrm): k-means coarse centroids for the IVF
-    index, trained with Lloyd iterations expressed as DataFrame ops.
+    index, trained by ``_lloyd`` as one group of k centroids.
 
-    Seeds are the first k vectors by vec_id (deterministic). Each
-    iteration: assign every vector to its nearest centroid by cosine
-    (broadcast over k rows), then recompute per-cluster means via
-    ``posexplode(embedding) → avg per (centroid, dim) → array re-assembly``.
-    The k × dim centroid values are materialized on the driver between
-    iterations — the same driver-side update loop Spark MLlib's KMeans
-    uses: centroids are small BY DEFINITION, and collecting them
-    truncates lineage so training costs exactly ``iters + 1`` corpus
-    passes instead of re-running the whole chain once per downstream
-    consumer. Means are rounded to 6 dp so float-reduction order can't
-    jitter assignments between runs; an empty cluster keeps its previous
-    centroid (standard Lloyd fallback).
+    Seeds are the first k vectors by vec_id (deterministic). Each round
+    assigns every vector to its nearest centroid by cosine with
+    ``kernels.centroid_scorer`` (row norms from ``fold_norms``, the
+    ``l2_norm`` fold; ties to the lowest centroid_id) and replaces each
+    centroid by the 6-dp-rounded mean of its vectors; an empty cluster
+    keeps its previous centroid.
     """
-    spark = emb.sparkSession
-    e = emb.select("vec_id", "embedding").withColumn("nrm", l2_norm("embedding"))
-    seed = e.orderBy("vec_id").limit(k).collect()
-    cents = {i: [float(x) for x in r.embedding] for i, r in enumerate(seed)}
-    for _ in range(iters):
-        # Assign + per-cluster partial sums FUSED in one Arrow hop
-        # (r18 opt, guide §2.3/§4.2): the unfused form shipped the full
-        # embedding arrays back across the Python boundary and exploded
-        # them into n x dim (centroid_id, pos, val) rows per iteration
-        # just to aggregate them again; the kernel emits k x dim partial
-        # (sum, count) rows per task instead. Per-partition accumulation
-        # is np.add.at — sequential in row order, the same order avg's
-        # per-partition partial sum visits; the division and HALF_UP
-        # 6-dp round stay in Spark expressions, so the means class is
-        # unchanged (cross-partition merge order was never deterministic
-        # — the 6-dp round is the documented absorber on both forms).
-        local = _centroid_df(spark, cents)._pmrs_local_cents
-        means = (
-            e.select("embedding", "nrm")
-            .mapInArrow(
-                _train_partials_fn(local),
-                "centroid_id int, pos int, s double, c bigint",
-            )
-            .groupBy("centroid_id", "pos")
-            .agg(F.round(F.sum("s") / F.sum("c"), 6).alias("m"))
-            .collect()
-        )
-        by_c: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_c.setdefault(r.centroid_id, {})[r.pos] = float(r.m)
-        for cid, dims in by_c.items():
-            cents[cid] = [dims[p] for p in sorted(dims)]
-    return _centroid_df(spark, cents)
+    seed = emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+    books = [[[float(x) for x in r.embedding] for r in seed]]
+
+    def nearest(x, books):
+        cents = np.array(books[0], dtype=np.float64)
+        _, score = centroid_scorer(list(zip(range(len(cents)), cents, fold_norms(cents))))
+        return score(x, fold_norms(x))[:, None]
+
+    (cents,) = _lloyd(emb, "embedding", books, nearest, iters)
+    return _centroid_df(emb.sparkSession, dict(enumerate(cents)))
 
 
 def ivf_assignments(
@@ -1260,36 +1266,8 @@ def _book_lit(book: list[list[float]]) -> F.Column:
     return F.expr("array(" + ", ".join(double_array_sql(c) for c in book) + ")")
 
 
-def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _sub_slice(col: str, s: int, subdim: int) -> F.Column:
     return F.slice(col, s * subdim + 1, subdim)
-
-
-def _code_expr(book: list[list[float]], sub: F.Column) -> F.Column:
-    """argmin_j ||sub - book[j]||²; first (lowest) code wins ties —
-    deterministic, and array_position's exact double compare is safe
-    because the needle comes from the same computed array.
-
-    Both the subvector and the distance array are lambda-BOUND (r17
-    opt): ``sub`` was re-sliced per codebook entry and ``dists`` —
-    the whole k×subdim distance computation — was evaluated TWICE
-    (array_position + array_min; HOF projections are CodegenFallback,
-    so no codegen CSE). Same expressions, same order, identical
-    codes."""
-    return F.transform(
-        F.array(sub),
-        lambda s: F.transform(
-            F.array(F.transform(_book_lit(book), lambda c: _sq_dist(c, s))),
-            lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
-        )[0],
-    )[0]
 
 
 def train_pq_codebooks(
@@ -1298,67 +1276,36 @@ def train_pq_codebooks(
     k: int = PQ_K,
     iters: int = PQ_TRAIN_ITERS,
 ) -> list[list[list[float]]]:
-    """codebooks[sub][code] = subdim-float centroid.
-
-    Each Lloyd round is ONE corpus pass for ALL subspaces: every vector
-    emits (sub, code, pos, val) rows via a struct-array explode, and the
-    per-(sub, code, pos) means — m*k*subdim rows, metadata by
-    definition — come back to the driver (the train_ivf_centroids
-    discipline: small model state lives driver-side, truncating lineage
-    so training costs iters+1 passes). Seeds are the first k vectors'
-    subslices (deterministic); 6-dp-rounded means keep assignments
-    rerun-stable; an empty code keeps its previous centroid."""
+    """codebooks[sub][code] = subdim-float centroid, trained by ``_lloyd``
+    as m groups of k sub-centroids over the ``_normalized`` vectors, so
+    each round is ONE corpus pass for ALL subspaces. Seeds are the
+    first k vectors' subslices (deterministic); rows are coded by
+    ``kernels.pq_codes``, the coder ``pq_encode`` uses; 6-dp-rounded
+    means keep assignments rerun-stable; an empty code keeps its
+    previous centroid."""
     e = _normalized(emb)
-    dim = len(e.select("nemb").first()["nemb"])
-    subdim = dim // m
     seeds = e.orderBy("vec_id").limit(k).collect()
+    subdim = len(seeds[0]["nemb"]) // m
     books = [
         [[float(v) for v in r["nemb"][s * subdim : (s + 1) * subdim]] for r in seeds]
         for s in range(m)
     ]
-    for _ in range(iters):
-        per_sub = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    _code_expr(books[s], _sub_slice("nemb", s, subdim)).alias("code"),
-                    _sub_slice("nemb", s, subdim).alias("sv"),
-                )
-                for s in range(m)
-            ]
-        )
-        means = (
-            e.select(F.explode(per_sub).alias("x"))
-            .select("x.sub", "x.code", F.posexplode("x.sv").alias("pos", "val"))
-            .groupBy("sub", "code", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("mv"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            upd.setdefault((r.sub, r.code), {})[r.pos] = float(r.mv)
-        for (s, c), dims in upd.items():
-            books[s][c] = [dims[p] for p in sorted(dims)]
-    return books
+    return _lloyd(e, "nemb", books, pq_codes, iters)
 
 
 def _pq_encode_kernel(books: list[list[list[float]]]):
-    """Arrow-batch PQ encoder factory: normalize + per-subspace argmin
-    with numpy elementwise ops whose ACCUMULATION ORDER replicates the
-    expression folds exactly — the norm and each ||sub - c||² accumulate
-    one dimension at a time, left to right, so every double is
-    bit-identical to the l2_norm/_sq_dist expression path, and
-    np.argmin's first-minimum matches array_position(array_min).
-    Codebooks are plain Python lists captured in the closure (no
-    collect; the builder stays plan-only)."""
+    """Arrow-batch PQ encoder factory: normalize, then code with
+    ``kernels.pq_codes``, the coder the training loop uses. The norm
+    accumulates one dimension at a time, left to right (``fold_norms``),
+    so every normalized double equals ``_normalized``'s. Codebooks are
+    plain Python lists captured in the closure (no collect; the builder
+    stays plan-only)."""
     m = len(books)
-    subdim = len(books[0][0])
 
     def encode(it):
         import numpy as np
         import pyarrow as pa
 
-        cbooks = [np.array(books[s], dtype=np.float64) for s in range(m)]
         for batch in it:
             n = batch.num_rows
             if n == 0:
@@ -1367,16 +1314,7 @@ def _pq_encode_kernel(books: list[list[list[float]]]):
             x = embedding_matrix(batch.column("embedding"))
             nrm = fold_norms(x)
             safe = np.where(nrm > 0, nrm, 1.0)
-            xn = x / safe[:, None]
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                xs = xn[:, s * subdim : (s + 1) * subdim]
-                cs = cbooks[s]
-                d = np.zeros((n, cs.shape[0]))
-                for i in range(subdim):  # sequential: matches _sq_dist
-                    diff = xs[:, i : i + 1] - cs[None, :, i]
-                    d = d + diff * diff
-                codes[:, s] = np.argmin(d, axis=1)
+            codes = pq_codes(x / safe[:, None], books)
             offsets = pa.array(
                 np.arange(0, (n + 1) * m, m, dtype=np.int32)
             )
@@ -1397,12 +1335,11 @@ def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     vector, encoded by the Arrow numpy kernel (``_pq_encode_kernel``).
 
     r17 opt (guide §4.2): the expression form ran m×k interpreted
-    ``_sq_dist`` folds per vector (HOFs are CodegenFallback) —
+    squared-distance folds per vector (HOFs are CodegenFallback) —
     2.7 s for 2,000 vectors at sf0.1; the vectorized kernel encodes
     the same batch in milliseconds with bit-identical codes (order-
     matched accumulation; Python-replica and twin tests pin it). Only
-    (vec_id, embedding) cross the Arrow boundary. The expression form
-    remains in ``_code_expr`` for the training loop's in-plan use."""
+    (vec_id, embedding) cross the Arrow boundary."""
     return emb.select("vec_id", "embedding").mapInArrow(
         _pq_encode_kernel(books), "vec_id bigint, codes array<int>"
     )

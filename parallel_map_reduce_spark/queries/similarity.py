@@ -485,12 +485,13 @@ def _pretrained_pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[flo
     as _pretrained_cents): memoized in-process AND persisted as a
     sidecar artifact. The in-process memo alone left every FRESH
     session — most importantly the driver's gate, a new process each
-    round — re-paying ~20 s of subspace-kmeans training before the
-    first ADC query, even though the code store itself was already on
-    disk. Training is deterministic (vec_id-ordered seeds,
-    6-dp-rounded means) and JSON float round-trips are repr-based and
-    bit-exact, so trained, memoized and disk-loaded books agree
-    (pinned in tests/test_similarity.py)."""
+    round — re-paying the subspace k-means training (seeds plus one
+    corpus pass per Lloyd round) before the first ADC query, even
+    though the code store itself was already on disk. Training is
+    deterministic (vec_id-ordered seeds, 6-dp-rounded means) and JSON
+    float round-trips are repr-based and bit-exact, so trained,
+    memoized and disk-loaded books agree (pinned in
+    tests/test_similarity.py)."""
     key = os.path.abspath(sf_dir)
     if key not in _PQ_MEMO:
         import json

@@ -37,8 +37,11 @@ def drain(
     """Run ``stream_df`` to the end of its available input.
 
     Without ``foreach_batch`` the rows land in a memory table named
-    ``table`` (a fresh unique name if None), returned as a DataFrame of
-    the stream's session; with it, the returned table is None. Returns
+    ``table``, returned as a DataFrame of the stream's session; with
+    it, the returned table is None. If ``table`` is None the memory
+    table gets a fresh unique name, and that view is dropped once the
+    DataFrame has resolved it (the frame keeps the sink's rows), so
+    repeat drains leave no views behind. Returns
     ``(table, query)``, the query terminated, so a caller can read its
     ``lastProgress``.
 
@@ -55,8 +58,8 @@ def drain(
     they are produced."""
     writer = stream_df.writeStream.outputMode(mode).trigger(availableNow=True)
     if foreach_batch is None:
-        table = table or f"pmrs_drain_{next(_seq)}"
-        writer = writer.format("memory").queryName(table)
+        name = table or f"pmrs_drain_{next(_seq)}"
+        writer = writer.format("memory").queryName(name)
     else:
         writer = writer.foreachBatch(foreach_batch)
     own_ckpt = ckpt is None
@@ -68,7 +71,12 @@ def drain(
     finally:
         if own_ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-    out = None if foreach_batch is not None else stream_df.sparkSession.table(table)
+    if foreach_batch is not None:
+        return None, query
+    spark = stream_df.sparkSession
+    out = spark.table(name)
+    if table is None:
+        spark.catalog.dropTempView(name)
     return out, query
 
 

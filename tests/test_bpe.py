@@ -166,3 +166,35 @@ def test_bpe_shared_vocab_segment_equals_selfbuilt(spark, docs_df):
     a = {tuple(r) for r in bpe_segment(docs_df, merges, vocab=vocab).collect()}
     b = {tuple(r) for r in bpe_segment(docs_df, merges).collect()}
     assert a == b and len(a) > 0
+
+
+def test_bpe_local_cap_is_inclusive(spark, docs_df, monkeypatch):
+    """A vocabulary of exactly ``local_cap`` rows trains on the driver
+    (``_bpe_train_local``); one row more than the cap takes the
+    distributed loop. Both give the reference's merges."""
+    from parallel_map_reduce_spark.operators import text_analysis as TA
+
+    calls = []
+    local = TA._bpe_train_local
+
+    def spy(vocab, n_merges):
+        calls.append(len(vocab))
+        return local(vocab, n_merges)
+
+    monkeypatch.setattr(TA, "_bpe_train_local", spy)
+    n_vocab = len(_ref_word_freqs(DOCS))
+
+    def merges(cap):
+        return [
+            tuple(r)
+            for r in bpe_train(docs_df, n_merges=12, local_cap=cap)
+            .orderBy("rank")
+            .collect()
+        ]
+
+    at_cap = merges(n_vocab)
+    assert calls == [n_vocab]
+    below = merges(n_vocab - 1)
+    assert calls == [n_vocab]
+    exp, _ = _ref_bpe(_ref_word_freqs(DOCS), 12)
+    assert at_cap == below == exp

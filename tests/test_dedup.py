@@ -590,6 +590,28 @@ def test_one_band_join_and_one_oracle_minhash():
         assert len(hits) == 1, (label, hits)
 
 
+def test_one_lloyd_loop_and_one_pq_coder():
+    """Both quantizers train through one Lloyd loop and PQ codes through
+    one coder: in operators/similarity.py, np.add.at appears only in
+    _lloyd, no array_position/array_min argmin is left, both trainers
+    call _lloyd, and the encoder calls kernels.pq_codes."""
+    import ast
+    import os
+
+    src = dict(_package_sources())[os.path.join("operators", "similarity.py")]
+    funcs = {
+        node.name: ast.get_source_segment(src, node)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    assert [name for name, body in funcs.items() if "np.add.at" in body] == ["_lloyd"]
+    assert src.count("np.add.at") == funcs["_lloyd"].count("np.add.at")
+    assert "array_position" not in src and "array_min" not in src
+    for name in ("train_ivf_centroids", "train_pq_codebooks"):
+        assert "_lloyd(" in funcs[name], name
+    assert "pq_codes(" in funcs["_pq_encode_kernel"]
+
+
 def test_one_streaming_drain():
     """Streaming queries drain through one helper, streaming/drain.py:
     only it calls writeStream or sets the availableNow trigger, and no

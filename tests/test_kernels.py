@@ -1,6 +1,6 @@
 """Unit tests of the worker-side kernel helpers (``kernels.py``): the
-bounded md5 memo, the fold-order dot, and the module's import
-footprint on a Python worker."""
+bounded md5 memo, the fold-order dot, the PQ coder, and the module's
+import footprint on a Python worker."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import sys
 import numpy as np
 
 from parallel_map_reduce_spark import kernels
-from parallel_map_reduce_spark.kernels import fold_dot, md5_memo
+from parallel_map_reduce_spark.kernels import fold_dot, md5_memo, pq_codes
 
 _KEYS = ["a b c", "x", "a b c", "y", "z", "x", "café", "z", "a b c"]
 
@@ -48,6 +48,32 @@ def test_fold_dot_keeps_the_sequential_fold_order():
             for x, y in zip(a[i], b[j]):
                 acc = acc + x * y
             assert got[i, j] == acc
+
+
+def test_pq_codes_keep_the_fold_order_and_first_minimum():
+    """Each code equals a Python loop over the codebook that folds the
+    squared distance left to right from 0.0 and keeps the first
+    strict minimum; duplicated codebook rows plant exact ties, which
+    go to the lower index."""
+    rng = np.random.default_rng(11)
+    m, k, w = 3, 6, 4
+    books = rng.normal(size=(m, k, w))
+    books[:, 4] = books[:, 1]
+    x = rng.normal(size=(40, m * w))
+    x[:5, :] = books[:, 1].reshape(-1)
+    got = pq_codes(x, books.tolist())
+    assert got.shape == (40, m) and got.dtype == np.int32
+    for i in range(40):
+        for s in range(m):
+            best, best_d = 0, None
+            for j in range(k):
+                d = 0.0
+                for a, c in zip(x[i, s * w : (s + 1) * w], books[s, j]):
+                    d = d + (a - c) * (a - c)
+                if best_d is None or d < best_d:
+                    best, best_d = j, d
+            assert got[i, s] == best
+    assert (got[:5] == 1).all()
 
 
 def test_kernel_closure_runs_without_the_package_on_path(tmp_path):

@@ -554,6 +554,61 @@ def test_pq_training_deterministic(emb):
     assert b1 == b2
 
 
+# json md5 of the trained values per scale factor, recorded from the
+# expression-form trainers (PQ's explode/posexplode avg round and the
+# fused IVF partials kernel): the Lloyd loop must reproduce them bit
+# for bit, not only rerun-stably.
+TRAINED_DIGESTS = {
+    "sf0.001": {
+        "ivf": "72b5f9239c9bd542b7cc00e5112498d7",
+        "ivf0": "8317481a733a5bb2f34e53f6c46df6c3",
+        "ivf8": "4157c310b3db586d8a84e70374c7f236",
+        "pq": "8b1582922ffd23f32a3e35e5f7567411",
+    },
+    "sf0.01": {
+        "ivf": "4614d7b32a90723874a95938906c149e",
+        "ivf0": "48fa8bb2b91e16e79282fa17478a191a",
+        "ivf8": "b219058976f92311d2759404a19014ce",
+        "pq": "2ce429704016346f20df39bd5b391b86",
+    },
+    "sf0.1": {
+        "ivf": "d1c4e1a676bf05f88c838587192ec346",
+        "ivf0": "a55fb2d1daa7ed5d13d6278acdf81c87",
+        "ivf8": "bcd6f18db61c28f93aba40e2c70a6548",
+        "pq": "cd88e7695cc44a8f7e683b1e8c29f8e8",
+    },
+}
+
+
+def test_trained_values_pinned(sf_dir, emb):
+    import hashlib
+    import json
+    import os
+
+    want = TRAINED_DIGESTS.get(os.path.basename(os.path.normpath(sf_dir)))
+    if want is None:
+        pytest.skip(f"no recorded digests for {sf_dir}")
+
+    def md5(obj) -> str:
+        return hashlib.md5(json.dumps(obj).encode()).hexdigest()
+
+    def cents(df) -> str:
+        return md5(
+            [
+                [r.centroid_id, list(r.c_emb), r.c_nrm]
+                for r in df.orderBy("centroid_id").collect()
+            ]
+        )
+
+    got = {
+        "ivf": cents(S.train_ivf_centroids(emb, S.IVF_K)),
+        "ivf0": cents(S.train_ivf_centroids(emb, S.IVF_K, iters=0)),
+        "ivf8": cents(S.train_ivf_centroids(emb, k=8, iters=1)),
+        "pq": md5(S.train_pq_codebooks(emb)),
+    }
+    assert got == want
+
+
 def test_pq_indexed_equals_inline(spark, emb, pq_books, tmp_path):
     """The persisted-code-store serving path (driver-computed LUTs)
     returns EXACTLY the inline expression path's rows — same codes,
@@ -728,6 +783,21 @@ def test_query_batch_cap_refuses_corpus_scale_batch(spark, emb, monkeypatch):
         S.two_stage_topk(emb, F.lit(True), k=3)
 
 
+def test_query_batch_cap_is_inclusive(spark, emb, monkeypatch):
+    """A query batch of exactly QUERY_BATCH_CAP rows is collected and
+    served, with the rows of the uncapped call; one row past the cap
+    refuses."""
+    qf = F.col("vec_id") % QUERY_FILTER_MOD == 0
+    n_q = emb.filter(qf).count()
+    want = {tuple(r) for r in S.two_stage_topk(emb, qf, k=3).collect()}
+    monkeypatch.setattr(S, "QUERY_BATCH_CAP", n_q)
+    got = {tuple(r) for r in S.two_stage_topk(emb, qf, k=3).collect()}
+    assert got == want and len(got) == 3 * n_q
+    monkeypatch.setattr(S, "QUERY_BATCH_CAP", n_q - 1)
+    with pytest.raises(ValueError, match="QUERY_BATCH_CAP"):
+        S.two_stage_topk(emb, qf, k=3)
+
+
 @pytest.fixture(scope="module")
 def ivf_index(emb, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("ivf") / "index")
@@ -859,6 +929,18 @@ def test_pair_kernel_block_cap_trips_on_hot_label(spark, monkeypatch):
     monkeypatch.setattr(S, "PAIR_BLOCK_ROW_CAP", 8)
     rows = [(i, "hot", [float(i % 3), 1.0]) for i in range(20)]
     hot = spark.createDataFrame(rows, ["vec_id", "label", "embedding"])
+    with pytest.raises(Exception, match="PAIR_BLOCK_ROW_CAP"):
+        S.label_blocked_neardup(hot, threshold=0.0).collect()
+
+
+def test_pair_kernel_block_cap_is_inclusive(spark, monkeypatch):
+    """A label block of exactly PAIR_BLOCK_ROW_CAP rows pairs; one row
+    fewer in the cap refuses it."""
+    rows = [(i, "hot", [float(i % 3), 1.0]) for i in range(20)]
+    hot = spark.createDataFrame(rows, ["vec_id", "label", "embedding"])
+    monkeypatch.setattr(S, "PAIR_BLOCK_ROW_CAP", 20)
+    assert len(S.label_blocked_neardup(hot, threshold=0.0).collect()) == 20 * 19 // 2
+    monkeypatch.setattr(S, "PAIR_BLOCK_ROW_CAP", 19)
     with pytest.raises(Exception, match="PAIR_BLOCK_ROW_CAP"):
         S.label_blocked_neardup(hot, threshold=0.0).collect()
 

@@ -610,3 +610,30 @@ def test_failing_drain_removes_its_checkpoint(spark, tmp_path, monkeypatch):
         drain(stream, foreach_batch=_fail)
     assert len(seen) == 1, "the drain ran without a helper-made checkpoint"
     assert not list(tmp_path.glob("pmrs_drain_ckpt_*"))
+
+
+def test_drain_drops_the_views_it_names(spark, tmp_path):
+    """A memory-sink drain without a ``table`` leaves no temp view
+    behind, and each returned frame still collects its rows; a drain
+    given a ``table`` keeps that table listed under its name."""
+    src = tmp_path / "src"
+    spark.range(3).write.parquet(str(src))
+
+    def stream():
+        return spark.readStream.schema("id BIGINT").parquet(str(src))
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = views()
+    outs = [drain(stream())[0] for _ in range(3)]
+    assert views() == before
+    for out in outs:
+        assert sorted(r.id for r in out.collect()) == [0, 1, 2]
+
+    named, _ = drain(stream(), table="pmrs_named_drain")
+    try:
+        assert views() == before | {"pmrs_named_drain"}
+        assert named.count() == 3
+    finally:
+        spark.catalog.dropTempView("pmrs_named_drain")
